@@ -224,6 +224,15 @@ def minhash_lsh_candidates(
     Buckets larger than ``max_bucket`` are dropped (degenerate/boilerplate
     content): at 100 TB a single hot bucket would otherwise produce a
     quadratic pair explosion on one executor.
+
+    Precondition: ``df[id_col]`` must be UNIQUE. Since the r15 split the
+    candidate pairs are deduped BEFORE the signatures re-attach by
+    joining back on id, so a duplicated id would re-multiply pairs there
+    (the same holds for the shard-pair path of
+    :func:`incremental_dedup_against_store`). Every caller passes a
+    primary key; a defensive final ``dropDuplicates`` would add an
+    exchange to pay for a contract violation, so the precondition is
+    documented instead, as for ``similarity.cosine_near_dup_pairs``.
     """
     # Spread first: fixture/lake files can be few huge unsplittable row
     # groups, and the signature kernel is the CPU-heavy step — spread it

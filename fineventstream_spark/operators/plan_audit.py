@@ -47,6 +47,7 @@ the detector actually fires.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -67,11 +68,13 @@ _PYTHON_NODES = (
 # against the Project node's expression string.
 # Unambiguous per-row-expensive kernel names: these token spellings only
 # appear in a ProjectExec expression string when the kernel itself runs.
+# Case-insensitive: plans print some kernels upper-case (`RLIKE(`).
 _EXPENSIVE_EXPRS = re.compile(
     r"\b(regexp_extract|regexp_replace|regexp_extract_all|regexp_count"
     r"|rlike|levenshtein|from_json|to_json|get_json_object|json_tuple"
     r"|schema_of_json|xxhash64|md5|sha1|sha2|crc32|conv|aes_encrypt"
-    r"|aes_decrypt|base64|unbase64)\("
+    r"|aes_decrypt|base64|unbase64)\(",
+    re.IGNORECASE,
 )
 # Higher-order functions share token spellings with unrelated plan text
 # (a rewritten EXISTS predicate prints `exists(`, dataset filters print
@@ -160,11 +163,19 @@ def expensive_expr_reason(s: str) -> str | None:
     synthesizing JVM plan nodes."""
     m = _EXPENSIVE_EXPRS.search(s)
     if m:
-        return m.group(1)
+        return m.group(1).lower()
     for m in _EXPENSIVE_HOF.finditer(s):
         if "lambdafunction" in s[m.end() : _close_paren(s, m.end() - 1)]:
             return m.group(1)
     return None
+
+
+def kernel_counts(plan: str) -> Counter:
+    """Calls of each per-row-expensive kernel in a plan string, keyed by
+    the lower-case kernel name. A kernel that Catalyst copied into several
+    operators counts once per copy, so a count above one means the rows
+    pay for it more than once."""
+    return Counter(m.group(1).lower() for m in _EXPENSIVE_EXPRS.finditer(plan))
 
 
 def _close_paren(s: str, open_idx: int) -> int:

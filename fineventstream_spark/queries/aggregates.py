@@ -254,6 +254,12 @@ def q_agg_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers genuinely tiny. Values are identical: exact_percentiles
     reproduces built-in ``percentile`` bit-for-bit (pinned by
     test_exact_percentiles_match_builtin) and median == percentile(0.5).
+
+    One output-contract difference from the plain ``groupBy``:
+    ``exact_percentiles`` drops a group whose ``l_extendedprice`` values
+    are ALL NULL (the plain aggregate returned it with a NULL
+    ``med_price``). TPC-H ``l_extendedprice`` is non-null, so the lake
+    never has such a group; a null-bearing input would lose it.
     """
     from fineventstream_spark.operators.percentiles import exact_percentiles
 

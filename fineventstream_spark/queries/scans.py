@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from fineventstream_spark.catalog import Tables, load_table, source_fingerprint
 from fineventstream_spark.registry import register
+from fineventstream_spark.streaming.pipelines import decode_envelope
 
 _CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".cache")
 
@@ -209,10 +210,8 @@ def q_source_decode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_json(F.struct("event_id", "user_id", "event_type", "value")).cast("binary")
         ).alias("data"),
     )
-    decoded = enveloped.select(
-        F.from_json(F.unbase64(F.col("data")).cast("string"), payload_schema).alias("rec")
-    )
-    return decoded.select("rec.event_id", "rec.user_id", "rec.event_type", "rec.value").filter(
+    decoded = decode_envelope(enveloped, payload_schema)
+    return decoded.select("event_id", "user_id", "event_type", "value").filter(
         F.col("event_id").isNotNull()
     )
 

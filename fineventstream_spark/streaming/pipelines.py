@@ -24,21 +24,33 @@ from fineventstream_spark.schemas import RAW_QUOTE_SCHEMA
 def decode_envelope(df: DataFrame, payload_schema=RAW_QUOTE_SCHEMA) -> DataFrame:
     """Kinesis-envelope decode: base64 → utf8 → JSON → typed struct.
 
-    Malformed payloads (bad base64 / broken JSON) yield a null struct and
-    are dropped — the reference's skip-and-log semantics
-    (processor_stock_quotes.py:41-44,56-60). Invalid base64 is guarded by a
+    Payloads that are not valid base64 yield a null struct and are dropped
+    here — the reference's skip-and-log semantics
+    (processor_stock_quotes.py:41-44,56-60). A payload that decodes but is
+    broken JSON parses PERMISSIVE into a struct of nulls and is dropped by
+    the validity filter downstream. Invalid base64 is guarded by a
     validity regexp because ``unbase64`` raises under ANSI mode rather than
-    returning null.
+    returning null. ``try_to_binary(data, 'base64')`` is not a substitute:
+    it accepts unpadded and space-separated text (``YWJ``, ``YWJjZA``,
+    ``Y W J j``) that the guard rejects.
+
+    The decode sits behind a generator (``inline`` over a one-element
+    array) so it runs once per record. Written as a plain projection,
+    Catalyst's predicate pushdown would inline the decode expression into
+    every filter on its output — a null-record check and the validity
+    filter's field checks — and evaluate the regexp guard, ``unbase64``
+    and ``from_json`` once per pushed predicate. A filter over a
+    generator's output cannot move below it; ``array_compact`` drops the
+    null struct inside the generator. ``tests/test_streaming.py`` pins
+    one call of each kernel per plan.
     """
-    is_b64 = F.col("data").rlike("^[A-Za-z0-9+/\\r\\n]*={0,2}$") & (
-        F.length(F.regexp_replace("data", "[\\r\\n]", "")) % 4 == 0
+    data = F.col("data")
+    is_b64 = data.rlike("^[A-Za-z0-9+/\\r\\n]*={0,2}$") & (
+        F.length(F.regexp_replace(data, "[\\r\\n]", "")) % 4 == 0
     )
-    payload = F.when(is_b64, F.unbase64(F.col("data")).cast("string"))
-    parsed = df.select(
-        "partition_key",
-        F.from_json(payload, payload_schema).alias("rec"),
-    )
-    return parsed.filter(F.col("rec").isNotNull()).select("partition_key", "rec.*")
+    payload = F.when(is_b64, F.unbase64(data).cast("string"))
+    rec = F.from_json(payload, payload_schema)
+    return df.select("partition_key", F.inline(F.array_compact(F.array(rec))))
 
 
 def filter_valid_quotes(df: DataFrame) -> DataFrame:

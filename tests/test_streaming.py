@@ -10,11 +10,13 @@ import json
 import os
 import shutil
 import tempfile
+import time
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from fineventstream_spark.operators.plan_audit import kernel_counts
 from fineventstream_spark.schemas import COMPANY_NEWS_SCHEMA, ENVELOPE_SCHEMA
 from fineventstream_spark.streaming.pipelines import quote_pipeline_batch
 from fineventstream_spark.streaming.sink import write_partitioned_stream
@@ -42,16 +44,27 @@ def _envelope(symbol: str, payload: dict) -> dict:
     return {"partition_key": symbol, "data": data}
 
 
-def test_quote_pipeline_streaming(spark, tmpdir):
-    """Envelope decode → validate → project, running as a streaming query;
-    malformed payloads are skipped exactly like the batch form."""
-    src = os.path.join(tmpdir, "src")
+def _mixed_envelopes() -> list[dict]:
+    """One good quote, one without a price, one truncated JSON payload and
+    one payload that is not base64."""
     good = _envelope("AAPL", {"c": 190.5, "d": 1.2, "dp": 0.6, "h": 191.0, "l": 188.0,
                               "o": 189.0, "pc": 189.3, "t": 1704067200, "symbol": "AAPL"})
     no_price = _envelope("MSFT", {"t": 1704067200, "symbol": "MSFT"})  # fails validity filter
     bad_json = {"partition_key": "NVDA", "data": base64.b64encode(b'{"c": 5').decode()}
     bad_b64 = {"partition_key": "META", "data": "!!!not-base64!!!"}
-    _write_jsonl(src, "batch1.jsonl", [good, no_price, bad_json, bad_b64])
+    return [good, no_price, bad_json, bad_b64]
+
+
+def _decode_kernels(plan: str) -> dict:
+    counts = kernel_counts(plan)
+    return {k: counts[k] for k in ("from_json", "rlike", "unbase64")}
+
+
+def test_quote_pipeline_streaming(spark, tmpdir):
+    """Envelope decode → validate → project, running as a streaming query;
+    malformed payloads are skipped exactly like the batch form."""
+    src = os.path.join(tmpdir, "src")
+    _write_jsonl(src, "batch1.jsonl", _mixed_envelopes())
 
     stream = spark.readStream.schema(ENVELOPE_SCHEMA).json(src)
     out = quote_pipeline_batch(stream)
@@ -70,6 +83,58 @@ def test_quote_pipeline_streaming(spark, tmpdir):
     assert r["current_price"] == 190.5
     assert r["quote_timestamp_unix"] == 1704067200
     assert str(r["quote_timestamp_utc"]).startswith("2024-01-01")
+
+
+def test_decode_envelope_runs_once_per_record(spark, tmpdir):
+    """The batch quote path evaluates the base64 guard, unbase64 and
+    from_json once per record: no filter above the decode may carry a copy
+    of it. Only the non-base64 payload is dropped inside the decode; the
+    truncated-JSON and price-less records reach the validity filter."""
+    from fineventstream_spark.streaming.pipelines import decode_envelope, filter_valid_quotes
+
+    src = os.path.join(tmpdir, "src")
+    _write_jsonl(src, "batch1.jsonl", _mixed_envelopes())
+    envelopes = spark.read.schema(ENVELOPE_SCHEMA).json(src)
+    decoded = decode_envelope(envelopes)
+    assert sorted(r.partition_key for r in decoded.collect()) == ["AAPL", "MSFT", "NVDA"]
+    assert [r.partition_key for r in filter_valid_quotes(decoded).collect()] == ["AAPL"]
+
+    out = quote_pipeline_batch(envelopes)
+    assert [r.symbol for r in out.collect()] == ["AAPL"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert _decode_kernels(plan) == {"from_json": 1, "rlike": 1, "unbase64": 1}, plan
+
+
+def test_streaming_dedup_decodes_once_per_record(spark, tmpdir):
+    """The same holds in the ingest query's micro-batches, with the
+    watermark filter and dedup above the decode. The plan comes from the
+    batch that carried data: the long trigger interval keeps the follow-up
+    no-data batch (whose source is empty) from replacing it."""
+    src = os.path.join(tmpdir, "src")
+    _write_jsonl(src, "batch1.jsonl", _mixed_envelopes())
+    deduped = (
+        quote_pipeline_batch(spark.readStream.schema(ENVELOPE_SCHEMA).json(src))
+        .withWatermark("quote_timestamp_utc", "10 seconds")
+        .dropDuplicatesWithinWatermark(["symbol", "quote_timestamp_unix"])
+    )
+    q = (
+        deduped.writeStream.format("memory")
+        .queryName("quotes_dedup_once")
+        .outputMode("append")
+        .trigger(processingTime="1 hour")
+        .start()
+    )
+    try:
+        deadline = time.time() + 60
+        while not any(p["numInputRows"] for p in q.recentProgress):
+            assert time.time() < deadline, "no micro-batch carried data"
+            time.sleep(0.2)
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert "StreamingDeduplicateWithinWatermark" in plan, plan
+    assert _decode_kernels(plan) == {"from_json": 1, "rlike": 1, "unbase64": 1}, plan
+    assert [r.symbol for r in spark.sql("SELECT * FROM quotes_dedup_once").collect()] == ["AAPL"]
 
 
 def _news_row(symbol: str, news_id: int, unix: int) -> dict:
