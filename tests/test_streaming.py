@@ -252,6 +252,19 @@ def test_partitioned_stream_sink_exactly_once(spark, tmpdir):
     assert years, f"no partition dirs in {os.listdir(out)}"
 
 
+def test_checkpoints_use_filesystem_checkpoint_manager(spark, tmpdir):
+    """The engine session writes checkpoints through FileSystem.rename, not
+    FileContext (which forks a readlink process per rename without the
+    native Hadoop library). Resolved the way a streaming query resolves its
+    manager, so a PySpark upgrade that moves the class fails here by name."""
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(f"file:{tmpdir}")
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    resolved = manager.create(path, hadoop_conf).getClass().getName()
+    assert resolved.endswith(".FileSystemBasedCheckpointFileManager"), resolved
+
+
 def test_upsert_stream_latest_wins_and_replay_is_idempotent(spark):
     """Streaming MERGE sink: two micro-batch rounds with overlapping keys
     collapse to newest-version-per-key; re-running the stream over the

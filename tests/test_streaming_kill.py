@@ -25,6 +25,10 @@ row count: a killed batch may leave orphan part-files on disk, and the
 commit manifest is exactly what makes readers immune to them — asserting
 `glob >= committed` documents that semantic instead of pretending the
 orphans don't exist.
+
+Every worker builds its session with the engine's ``get_spark``, so the
+kills land on the checkpoint file manager the engine pins, not on Spark's
+default one.
 """
 
 from __future__ import annotations
@@ -49,18 +53,13 @@ STREAM_WORKER = textwrap.dedent(
     """
     import sys
     sys.path.insert(0, %(repo)r)
-    from pyspark.sql import SparkSession
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from fineventstream_spark.session import get_spark
+
     mode, inp, out, ckpt = sys.argv[1:5]
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName(f"kill-test-{mode}")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name=f"kill-test-{mode}", cpus=4,
+                      shuffle_partitions=4, driver_memory="1g")
     spark.sparkContext.setLogLevel("ERROR")
     schema = StructType([
         StructField("seq", LongType()), StructField("sym", StringType()),
@@ -185,22 +184,18 @@ STATEFUL_WORKER = textwrap.dedent(
     """
     import sys
     sys.path.insert(0, %(repo)r)
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from fineventstream_spark.session import get_spark
+
     mode, inp, out, ckpt = sys.argv[1:5]
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName(f"rocksdb-kill-{mode}")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
+    spark = get_spark(
+        app_name=f"rocksdb-kill-{mode}", cpus=4, shuffle_partitions=4,
+        driver_memory="1g", extra_conf={
+            "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     src = (
@@ -310,23 +305,19 @@ DEDUP_KILL_WORKER = textwrap.dedent(
     """
     import os, sys, time
     sys.path.insert(0, %(repo)r)
-    from pyspark.sql import SparkSession
+
+    from fineventstream_spark.session import get_spark
 
     mode, inp, store, out, ckpt, marker, provider = sys.argv[1:8]
-    b = SparkSession.builder.master("local[4]")
-    b = (
-        b.appName(f"dedup-kill-{mode}")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
+    conf = {}
     if provider == "rocksdb":
-        b = b.config(
-            "spark.sql.streaming.stateStore.providerClass",
+        conf["spark.sql.streaming.stateStore.providerClass"] = (
             "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+            "RocksDBStateStoreProvider"
         )
-    spark = b.getOrCreate()
+    spark = get_spark(app_name=f"dedup-kill-{mode}", cpus=4,
+                      shuffle_partitions=4, driver_memory="1g",
+                      extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
 
     from fineventstream_spark.operators import dedup
