@@ -92,12 +92,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_table(raw, name)
 
 
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _normalize_table(
-        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
-    )
-
-
 def _normalize_table(df: DataFrame, name: str) -> DataFrame:
     dtypes = dict(df.dtypes)
     if name == "events" and dtypes.get("ts") == "bigint":

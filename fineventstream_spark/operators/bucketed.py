@@ -208,21 +208,17 @@ def _assert_one_file_per_bucket(path: str, table: str) -> None:
 
 
 # A hot join key concentrates in ONE bucket, and a bucketed SMJ cannot be
-# split by AQE (no shuffle to re-plan) — the zipf skew evidence measured
-# the zero-exchange layout 1.3× SLOWER than shuffle+AQE-split on a key
-# holding 18% of the fact. The layout itself knows: bucket files are on
-# disk at write time. max/median ROW COUNT above this ratio marks the
-# layout skew-degenerate, and bucketed_table() then auto-routes to the
-# plain shuffle path where OptimizeSkewedJoin can split the hot partition
-# (r10; previously this was only a warning). Override per session via the
-# conf key; <= 0 disables routing entirely (always read the layout).
+# split by AQE (no shuffle to re-plan) — the zipf skew evidence (BASELINE.md
+# "Skew evidence" and "Skew-routing A/B") measured the zero-exchange layout
+# 1.3× SLOWER than shuffle+AQE-split on a key holding 18% of the fact. The
+# layout itself knows: bucket files are on disk at write time. max/median
+# ROW COUNT above this ratio marks the layout skew-degenerate, and
+# bucketed_table(route_skew=True) then routes to the plain shuffle path
+# where OptimizeSkewedJoin can split the hot partition (r10). Override the
+# ratio per session via the conf key; <= 0 disables routing entirely
+# (always read the layout).
 SKEW_RATIO_THRESHOLD = 4.0
 SKEW_ROUTE_CONF_KEY = "spark.fineventstream.bucketSkewRatioThreshold"
-# session-wide override for call sites that left route_skew=None: "true"
-# routes every such site's skew-degenerate group to the shuffle path —
-# the A/B lever behind E7 (scripts/skew_evidence.py); default off because
-# the measured default-consumer shape favors the layout 3× (BASELINE r10)
-SKEW_ROUTE_ALL_CONF_KEY = "spark.fineventstream.bucketSkewRouteAll"
 
 _SKEW_SIDECAR = "_skew.json"
 _SKEW_REGISTRY = "_skew_registry.json"
@@ -589,7 +585,7 @@ def bucketed_table(
     columns: tuple[str, ...] | None = None,
     derived: dict[str, str] | None = None,
     prejoin: tuple[str, str, str, tuple[str, ...]] | None = None,
-    route_skew: bool | None = None,
+    route_skew: bool = False,
     partition_by: str | None = None,
 ) -> DataFrame:
     """The bucketed derivative of ``table`` as a DataFrame (schema identical
@@ -611,9 +607,9 @@ def bucketed_table(
     (BASELINE r10) split by CONSUMER SHAPE:
 
     - WIDE ENRICHMENT (every fact column consumed per row post-join,
-      skew_evidence.py E2): the hot bucket's serial per-row work dominates
-      — bucketed SMJ 7.6 s vs shuffle+AQE 5.9 s. Routing WINS 1.3×. These
-      call sites should pass ``route_skew=True``.
+      BASELINE.md skew evidence E2): the hot bucket's serial per-row work
+      dominates — bucketed SMJ 7.6 s vs shuffle+AQE 5.9 s. Routing WINS
+      1.3×. These call sites should pass ``route_skew=True``.
     - AGGREGATE-COLLAPSING consumers (the registry's report/join queries:
       the join feeds a groupBy that reuses the bucket distribution): the
       hot-bucket merge+partial-agg task is cheap and the layout avoids the
@@ -622,20 +618,12 @@ def bucketed_table(
 
     No layout-side statistic separates the two (same layout, same skew
     ratio — the difference is the consumer's per-row post-join work), so
-    the default keeps the layout and the warning names the knob.
-    ``route_skew=None`` (the default) defers to the session conf
-    ``SKEW_ROUTE_ALL_CONF_KEY`` (default false) so A/B harnesses and
-    evidence scripts can flip every un-opinionated call site at once;
-    an explicit True/False always wins."""
+    the default keeps the layout and the warning names the knob."""
     key = key or BUCKET_KEYS[table]
     name = ensure_bucketed(
         spark, sf_dir, table, key=key, columns=columns, derived=derived,
         prejoin=prejoin, partition_by=partition_by,
     )
-    if route_skew is None:
-        route_skew = (
-            str(spark.conf.get(SKEW_ROUTE_ALL_CONF_KEY, "false")).lower() == "true"
-        )
     threshold = _skew_route_threshold(spark)
     if (
         route_skew

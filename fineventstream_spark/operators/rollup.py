@@ -34,11 +34,6 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Partial-state columns every rollup carries. Each must be mergeable by
-#: an aggregate of its own kind: counts and sums re-SUM, mins re-MIN,
-#: maxes re-MAX.
-_PARTIAL_COLS = ("p_count", "p_sum", "p_min", "p_max")
-
 
 def partial_rollup(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Aggregate ``df`` down to mergeable partials per key."""

@@ -185,39 +185,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
     return rng.standard_normal(dim).tolist()
 
 
-def _bucket_bits_udf(planes: np.ndarray):
-    @F.pandas_udf("string")
-    def _bits(vecs: pd.Series) -> pd.Series:
-        m = _stack(vecs)
-        signs = (m @ planes.T) > 0
-        return pd.Series(["".join("1" if b else "0" for b in row) for row in signs])
-
-    return _bits
-
-
-def _band_buckets_udf(planes: np.ndarray, n_bands: int):
-    """Array of per-band bucket keys ("<band>:<sign bits of that band's
-    plane slice>") — one Arrow batch pass computes every band."""
-    per_band = planes.shape[0] // n_bands
-
-    @F.pandas_udf("array<string>")
-    def _keys(vecs: pd.Series) -> pd.Series:
-        m = _stack(vecs)
-        signs = (m @ planes.T) > 0
-        out = []
-        for row in signs:
-            bits = "".join("1" if b else "0" for b in row)
-            out.append(
-                [
-                    f"{band}:{bits[band * per_band:(band + 1) * per_band]}"
-                    for band in range(n_bands)
-                ]
-            )
-        return pd.Series(out)
-
-    return _keys
-
-
 def _band_bucket_chain_udf(
     planes: np.ndarray,
     n_bands: int,

@@ -1,8 +1,8 @@
 """Text analysis operators for training-data pipelines.
 
 All pure built-in expressions (codegen, no Python): language-ID via n-gram/
-marker heuristics, quality scoring, token counting (whitespace + BPE-ish
-regex), and rolling-hash document fingerprinting.
+marker heuristics, quality scoring, whitespace segment counting, and
+rolling-hash document fingerprinting.
 """
 
 from __future__ import annotations
@@ -29,15 +29,6 @@ def words_col(text_col) -> Column:
     return F.split(F.lower(text_col), r"\s+")
 
 
-def token_count_whitespace(text_col) -> Column:
-    """``size(split(text, '\\s+'))`` without materializing the array:
-    split keeps leading/trailing empty segments, so the segment count is
-    exactly (number of whitespace runs) + 1. ``regexp_count`` scans the
-    string once and allocates nothing — on a wide documents scan the array
-    materialization is the dominant cost of counting."""
-    return F.regexp_count(text_col, F.lit(r"\s+")) + F.lit(1)
-
-
 def ws_segment_count(text_col) -> Column:
     """Count of ``split(text, ' ')`` segments (single literal space — the
     form the SQL oracles use) without building the array: segments ==
@@ -46,14 +37,6 @@ def ws_segment_count(text_col) -> Column:
     return (
         F.length(text_col) - F.length(F.replace(text_col, F.lit(" "), F.lit("")))
     ) + F.lit(1)
-
-
-def token_count_bpe_ish(text_col) -> Column:
-    """BPE-ish token count: alpha runs, digit runs, and single punctuation
-    each count as one token (a regex approximation of byte-pair behavior).
-    ``regexp_count`` yields the same non-overlapping match count as
-    ``size(regexp_extract_all(...))`` with no token-array materialization."""
-    return F.regexp_count(text_col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
 def lang_id(text_col) -> Column:

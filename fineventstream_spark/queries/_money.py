@@ -30,7 +30,6 @@ REV_UNITS_SQL = (
     "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
     " * CAST(ROUND((1 - l_discount) * 100) AS BIGINT)"
 )
-CHARGE_UNITS_SQL = REV_UNITS_SQL + " * CAST(ROUND((1 + l_tax) * 100) AS BIGINT)"
 DISC_REV_UNITS_SQL = (
     "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
     " * CAST(ROUND(l_discount * 100) AS BIGINT)"

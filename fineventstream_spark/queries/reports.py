@@ -1178,8 +1178,8 @@ def q_report_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     then map-side partial aggregation collapses the hot order per split
     (groupBy l_orderkey, n_name), the small aggregate shuffles, and
     bucketed orders joins it exchange-free on its own side. Interleaved
-    4-arm A/B (sf10, scripts/report_skew_ab.py): zipf current 3.33 /
-    layout-preagg 3.15 / routed-SMJ 3.48 / plain-preagg 1.98 s — tax
+    4-arm A/B (sf10, BASELINE.md "Report-family skew tax"): zipf current
+    3.33 / layout-preagg 3.15 / routed-SMJ 3.48 / plain-preagg 1.98 s — tax
     2.8× → 1.4×. Uniform keeps the current plan (1.43 vs 1.76 s), so
     the branch is gated on the recorded layout skew ratio."""
     t = Tables(spark, sf_dir)
@@ -1354,10 +1354,11 @@ def q_report_ship_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution: hash(orderkey) satisfies the grouping's clustering, so
     the plan keeps ZERO fact exchanges and only adds the SMJ's
     per-partition sort of the collapsed stream). Interleaved A/B (sf10,
-    min-of-3, scripts/report_skew_ab.py): zipf 2.38 → 1.30 s (tax 3.0×
-    → 1.7× vs the 0.77 s uniform run); uniform would LOSE 1.34× (1.04 s
-    — orders have ~4 lines with near-distinct shipdates, so nothing
-    collapses), hence the ratio-gated branch, not a blanket rewrite."""
+    min-of-3, BASELINE.md "Report-family skew tax"): zipf 2.38 → 1.30 s
+    (tax 3.0× → 1.7× vs the 0.77 s uniform run); uniform would LOSE
+    1.34× (1.04 s — orders have ~4 lines with near-distinct shipdates, so
+    nothing collapses), hence the ratio-gated branch, not a blanket
+    rewrite."""
     li = bucketed_table(spark, sf_dir, "lineitem")
     lines = li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))

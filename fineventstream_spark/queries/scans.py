@@ -575,21 +575,7 @@ def prewarm_derivatives(spark: SparkSession, sf_dir: str) -> None:
     partitioned-events rebuild to ``q_scan_partition_prune``: 0.74 s
     recorded vs 0.40 s solo). The inline-materializing query fns write
     eagerly at construction time, so invoking them (without executing
-    the returned plan) is sufficient.
-
-    ``SPARK_GRAFT_PREWARM_SKIP`` (comma-separated names from the keys
-    below) skips individual derivatives: at giant fixture scales (sf60+)
-    the full derivative set no longer fits the sandbox disk, so a
-    curve-point run prewarm only what its query list reads — the skipped
-    queries are then excluded from that run and the exclusion recorded
-    in BASELINE.md."""
-    import os as _os
-
-    skip = {
-        s.strip()
-        for s in _os.environ.get("SPARK_GRAFT_PREWARM_SKIP", "").split(",")
-        if s.strip()
-    }
+    the returned plan) is sufficient."""
     from fineventstream_spark.operators.bucketed import BUCKET_KEYS, ensure_bucketed
     from fineventstream_spark.registry import REGISTRY
 
@@ -616,6 +602,5 @@ def prewarm_derivatives(spark: SparkSession, sf_dir: str) -> None:
         "orders_csv": lambda: REGISTRY["q_scan_csv"].fn(spark, sf_dir),
         "lineitem_orc": lambda: REGISTRY["q_scan_orc"].fn(spark, sf_dir),
     }
-    for name, step in steps.items():
-        if name not in skip:
-            step()
+    for step in steps.values():
+        step()

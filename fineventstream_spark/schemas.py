@@ -18,22 +18,6 @@ from pyspark.sql import types as T
 
 SYMBOLS = ["AAPL", "MSFT", "GOOGL", "AMZN", "NVDA", "META"]  # src/config.py:4
 
-STOCK_QUOTE_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType()),
-        T.StructField("fetch_timestamp_utc", T.TimestampType()),
-        T.StructField("quote_timestamp_unix", T.LongType()),
-        T.StructField("quote_timestamp_utc", T.TimestampType()),
-        T.StructField("current_price", T.DoubleType()),
-        T.StructField("change", T.DoubleType()),
-        T.StructField("percent_change", T.DoubleType()),
-        T.StructField("high_price_day", T.DoubleType()),
-        T.StructField("low_price_day", T.DoubleType()),
-        T.StructField("open_price_day", T.DoubleType()),
-        T.StructField("previous_close_price", T.DoubleType()),
-    ]
-)
-
 COMPANY_NEWS_SCHEMA = T.StructType(
     [
         T.StructField("symbol", T.StringType()),

@@ -82,12 +82,9 @@ def get_spark(
         # the driver lists in microseconds (r14 measurement: the band-table
         # reader alone cost +2 jobs/1.2-2.4 s per probe). 256 keeps every
         # engine layout driver-listed; deployments against high-latency
-        # object stores with many more leaf dirs should lower it back (env
-        # SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD).
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "256"),
-        )
+        # object stores with many more leaf dirs should lower it back
+        # (get_spark(extra_conf=...)).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
         # NOTE (r7): spark.sql.requireAllClusterKeysForCoPartition stays at
         # its DEFAULT (true). Round 6 set it false so a bucketed-on-orderkey
         # SMJ whose equi-keys widened to (orderkey, nationkey) could reuse

@@ -51,9 +51,9 @@ def should_compact(
     min_mean_bytes: int = 8 * 1024 * 1024,
 ) -> bool:
     """Compaction trigger policy for one CLOSED partition (r11, calibrated
-    by scripts/compaction_evidence.py): compact when the partition holds
-    more than ``max_files`` data files OR their mean size is under
-    ``min_mean_bytes``.
+    in BASELINE.md "Small-files / compaction evidence"): compact when the
+    partition holds more than ``max_files`` data files OR their mean size
+    is under ``min_mean_bytes``.
 
     Rationale, measured at sf10 (BASELINE r11): a micro-batch lake at the
     reference's object size (~64 writers × hourly partitions ≈ 200-row

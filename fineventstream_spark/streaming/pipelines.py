@@ -9,8 +9,9 @@ they run identically under readStream/foreachBatch".
 Pipeline shapes (SURVEY §3.1/§3.2):
   quotes: decode envelope → validity filter → project/rename → derive
           timestamps → partitioned sink
-  news:   explode array → sort → stateful dedup (state.py) → project →
-          partitioned sink
+  news:   explode array → high-water dedup (state.py::highwater_dedup,
+          which sorts each symbol's rows by id) → project → partitioned
+          sink
 """
 
 from __future__ import annotations
@@ -89,24 +90,6 @@ def with_arrival_partitions(df: DataFrame, ts_col: Column | None = None) -> Data
         .withColumn("day", F.dayofmonth(ts))
         .withColumn("hour", F.hour(ts))
     )
-
-
-def sort_news_batch(df: DataFrame) -> DataFrame:
-    """News batch sort by (published, id) asc with null→0 defaulting
-    (producer_company_news.py:107-120)."""
-    return df.orderBy(
-        F.coalesce(F.col("article_published_unix"), F.lit(0)).asc(),
-        F.coalesce(F.col("news_id"), F.lit(0)).asc(),
-    )
-
-
-def dedup_news_batch(df: DataFrame) -> DataFrame:
-    """Batch form of the high-water dedup: keep the first row per
-    (symbol, news_id); null ids are kept (the reference skips the state
-    check for malformed ids but still forwards valid-shaped articles)."""
-    with_id = df.filter(F.col("news_id").isNotNull()).dropDuplicates(["symbol", "news_id"])
-    without_id = df.filter(F.col("news_id").isNull())
-    return with_id.unionByName(without_id)
 
 
 def quote_pipeline_batch(envelopes: DataFrame) -> DataFrame:

@@ -39,17 +39,6 @@ def _normalize_checkpoint_tag(checkpoint_dir: str) -> str:
     return os.path.abspath(checkpoint_dir).rstrip("/")
 
 
-def write_partitioned_batch(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Batch append under arrival-time hive partitions."""
-    (
-        with_arrival_partitions(df)
-        .write.mode("append")
-        .partitionBy(*PARTITION_COLS)
-        .format(fmt)
-        .save(path)
-    )
-
-
 def write_partitioned_stream(
     df: DataFrame,
     path: str,

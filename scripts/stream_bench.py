@@ -15,8 +15,8 @@ for a fixed wall-clock window per offered rate and records, from
 
 - sustained rows/s (processedRowsPerSecond, trimmed mean) vs offered;
 - per-batch trigger latency distribution (p50/p90/max);
-- state-store rows over time — MUST plateau: the dedup keeps
-  (symbol, ts) keys only until the 30 s watermark expires them, so a
+- state-store rows over time — MUST plateau: the dedup keeps each
+  (symbol, ts) key only until the 10 s watermark passes ts + 10 s, so a
   monotonically growing state is a leak (the bound is asserted here and
   regression-tested in tests/test_streaming_extra.py);
 - backlog signal: offered > processed with rising batch durations means
@@ -93,9 +93,12 @@ def quote_stream(spark, rate: int, partitions: int = 8):
         .load()
     )
     decoded = project_quote(filter_valid_quotes(decode_envelope(synth_envelopes(raw))))
-    return decoded.withWatermark("quote_timestamp_utc", "30 seconds").dropDuplicates(
-        ["symbol", "quote_timestamp_unix"]
-    )
+    # the ingest stage of perfbench/ingest.py: a key expires once the
+    # watermark passes its event time + 10 s, i.e. ~20 s after it was
+    # seen, so state plateaus well inside a 45 s window
+    return decoded.withWatermark(
+        "quote_timestamp_utc", "10 seconds"
+    ).dropDuplicatesWithinWatermark(["symbol", "quote_timestamp_unix"])
 
 
 def run_rate(spark, rate: int, seconds: int, trigger: int, workdir: str,

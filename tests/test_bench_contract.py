@@ -16,13 +16,21 @@ No Spark session is needed — this is a pure-dict contract test.
 
 from __future__ import annotations
 
+import glob
+import importlib.util
 import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, _COMPACT_KEYS, compact_result
+
+SCRIPTS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+)
 
 # The driver's tail capture demonstrably held ~4 KB lines and lost the
 # 5,022-byte r13 line; bound with margin below the observed cliff.
@@ -108,3 +116,19 @@ def test_compact_keys_do_not_drop_contract_fields():
                 "persist_bearing", "order_seed", "sf", "n_queries",
                 "n_failed", "total_is_partial"):
         assert key in _COMPACT_KEYS
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(glob.glob(os.path.join(SCRIPTS_DIR, "*.py"))),
+    ids=lambda p: os.path.splitext(os.path.basename(p))[0],
+)
+def test_script_imports(path):
+    # every kept script must still import against the engine: a deleted
+    # engine name surfaces here, not on the next manual run. Only the
+    # module body runs (main() and the __main__ block do not), so no
+    # session starts.
+    spec = importlib.util.spec_from_file_location(
+        "script_" + os.path.splitext(os.path.basename(path))[0], path
+    )
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
