@@ -28,46 +28,32 @@ def _registry():
     return all_queries()
 
 
+def _pin_confs(spark: SparkSession) -> None:
+    """Defensive: the driver may hand us a session without our configs."""
+    from fineventstream_spark.session import SESSION_SQL_CONFS
+
+    for key, value in SESSION_SQL_CONFS:
+        spark.conf.set(key, value)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the as-of join (latest click value at-or-before each
     purchase, per user) — the quotes↔news query the reference's lake is
     shaped for, via the union+window single-shuffle formulation."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    _pin_confs(spark)
     return _registry()["q_join_asof"].fn(spark, SF_SMOKE)
+
+
+def _wrap(fn):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _pin_confs(spark)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-
-    def _wrap(fn):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # defensive: the driver may hand us a session without our configs
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            # AQE coalescing: a default 200-partition session otherwise runs
-            # 200-400 near-empty tasks per shuffle at oracle scale
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            # bucketed-derivative plans (see session.py): subset
-            # co-partitioning + trusted per-bucket sort order — results are
-            # identical without these, but the zero-exchange plan shape the
-            # bucketed queries exist for is not
-            spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-            spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-            # driver-side listing for the engine's own layouts (≤ ~100
-            # local dirs: minhash-store bp= partitions, day-partitioned
-            # events) instead of a 64-task distributed listing job per
-            # reader build (r14; see session.py)
-            spark.conf.set(
-                "spark.sql.sources.parallelPartitionDiscovery.threshold", "256"
-            )
-            return fn(spark, sf_dir)
-
-        return run
-
     return {name: _wrap(q.fn) for name, q in _registry().items()}
 
 

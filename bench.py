@@ -5,8 +5,8 @@ Prints ONE JSON line (bounded — see compact_result):
   {"metric": "total_headline_sec", "value": N, "unit": "sec",
    "queries": {...}, "queries_cold": {...}, "persist_bearing": [...],
    "order_seed": N, "sf": "...", "n_queries": N, "n_failed": N}
-The full result (order map, cold disagreements, failure detail) is
-written to BENCH_LOCAL_r<N>.json.
+The full result (order map, cold disagreements, failure detail and the
+per-query "layers") is written to BENCH_LOCAL_r<N>.json.
 
 "queries" holds min-of-reps; "queries_cold" the first rep. For queries
 whose plan persist()s an intermediate (detected mechanically, listed in
@@ -23,6 +23,13 @@ computes full results (``df.write.format("noop")`` — materializes every row,
 no sink cost, no driver collect). Warm-up run excluded per query? No — the
 driver wants honest cold numbers; we warm only the JVM/session with one
 trivial action, which a long-running cluster would have amortized anyway.
+
+Every rep runs through perfbench's traced query (``Tracer``), so this
+harness and ``perfbench`` read the same probes. "layers" maps each query
+to the layer split of its counted rep (the min rep, or the counted cold
+rep of a persist-bearing query): ``construct_s``, ``catalyst.*``,
+``execute.*``, ``python.*``, ``py4j_calls`` and ``eager_jobs``. The rep
+wall the headline counts is ``construct_s + execute.wall_s``.
 """
 
 from __future__ import annotations
@@ -30,7 +37,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 import pandas as pd
 
@@ -38,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from fineventstream_spark.registry import all_queries
 from fineventstream_spark.session import get_spark
+from perfbench import lake, probes
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -112,9 +119,31 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> None:
-    """Execute the full query without collecting to the driver."""
-    df.write.format("noop").mode("overwrite").save()
+class Tracer:
+    """Times reps through perfbench's traced query, one probe set per sweep.
+
+    ``rep`` returns the rep's wall (building the DataFrame, then executing
+    it in full through the noop sink; the Catalyst probe and the
+    status-store reads run outside it) and its layers.
+    """
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.spans = probes.Spans()
+        self.counter = probes.Py4jCounter(spark.sparkContext._gateway._gateway_client)
+        self.sql = probes.SqlExecutions(spark)
+        self.reps = 0
+
+    def rep(self, query, sf_dir: str) -> tuple[float, dict]:
+        self.reps += 1
+        got = lake._traced_query(self.spark, self.spans, query, sf_dir, self.reps,
+                                 self.counter, self.sql)
+        wall = got.pop("wall_s")
+        got["execute.wall_s"] = got.pop("exec_s")
+        return wall, {k: round(v, 4) for k, v in sorted(got.items())}
+
+    def close(self) -> None:
+        self.counter.close()
 
 
 # Keys the ONE-LINE stdout JSON keeps (r15, r14 verdict #2): the r13 driver
@@ -207,9 +236,7 @@ def main() -> None:
         def _warm(s: pd.Series) -> pd.Series:
             return s
 
-        spark.range(10_000).repartition(64).select(_warm("id")).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        lake.materialize(spark.range(10_000).repartition(64).select(_warm("id")))
         # Warm the OS page cache + parquet footers for every input table: the
         # first scan of a ~100 MB table otherwise pays cold disk reads that a
         # long-running cluster never sees, charged to whichever query runs
@@ -219,7 +246,7 @@ def main() -> None:
                     "events", "documents", "embeddings"):
             p = os.path.join(SF_DIR, f"{tbl}.parquet")
             if os.path.exists(p):
-                spark.read.parquet(p).write.format("noop").mode("overwrite").save()
+                lake.materialize(spark.read.parquet(p))
         # Materialize .cache/ derivatives (JSONL/CSV/ORC/partitioned copies)
         # so no timed query pays a one-off derivative build: the round-3
         # driver bench charged the partitioned-events rebuild to
@@ -232,7 +259,9 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — warm-up is best-effort
         print(f"# warm-up failed (continuing cold): {exc}", file=sys.stderr)
 
+    tracer = Tracer(spark)
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     cold_timings: dict[str, float] = {}
     persist_bearing: list[str] = []
     cold_disagreement: dict[str, list[float]] = {}
@@ -255,7 +284,7 @@ def main() -> None:
         # same query minutes apart). Keep sampling until the two fastest
         # reps agree within 30% — a recorded time then has two concordant
         # witnesses — capped at 4 reps.
-        runs = []
+        runs: list[tuple[float, dict]] = []
         # snapshot BEFORE the query: unpersist from the previous query's
         # clearCache is async, so a leftover entry must not flag THIS
         # query as persist-bearing (observed: order-dependent false
@@ -263,11 +292,9 @@ def main() -> None:
         rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
         try:
             while True:
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, SF_DIR))
-                runs.append(time.perf_counter() - t0)
+                runs.append(tracer.rep(q, SF_DIR))
                 if len(runs) >= min_reps:
-                    lo, lo2 = sorted(runs)[:2]
+                    lo, lo2 = sorted(w for w, _ in runs)[:2]
                     if lo2 <= 1.3 * lo or len(runs) >= 4:
                         break
         except Exception as exc:  # noqa: BLE001 — isolate per query
@@ -275,10 +302,11 @@ def main() -> None:
             failures[name] = msg[:500]
             print(f"# {name}: FAILED {msg.splitlines()[0][:200]}", file=sys.stderr)
             continue
-        best = min(runs)
-        dt = round(best, 3)
+        best = min(runs, key=lambda r: r[0])
+        dt = round(best[0], 3)
         timings[name] = dt
-        cold_timings[name] = round(runs[0], 3)
+        cold_timings[name] = round(runs[0][0], 3)
+        counted = best
         # Persist-bearing plans (r8 verdict #5): when a query persist()s an
         # intermediate, later reps read the cache and min-of-reps reports
         # WARM steady-state while every other query pays per-rep cost. The
@@ -296,20 +324,21 @@ def main() -> None:
             # Re-run once from a cleared cache and take the min; flag >30%
             # disagreement so a noisy cold pair is visible in the JSON.
             spark.catalog.clearCache()
+            counted = runs[0]
             try:
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, SF_DIR))
-                cold2 = time.perf_counter() - t0
+                cold2 = tracer.rep(q, SF_DIR)
             except Exception:  # noqa: BLE001 — keep the rep-1 witness
                 cold2 = None
             if cold2 is not None:
-                pair = [round(runs[0], 3), round(cold2, 3)]
+                pair = [round(runs[0][0], 3), round(cold2[0], 3)]
                 if max(pair) > 1.3 * min(pair):
                     cold_disagreement[name] = pair
                 cold_timings[name] = min(pair)
+                counted = min(runs[0], cold2, key=lambda r: r[0])
             total += cold_timings[name]
         else:
             total += dt
+        layers[name] = counted[1]
         tag = " (cold counted)" if is_persist_bearing else ""
         print(f"# {name}: {dt}s cold={cold_timings[name]}s{tag}", file=sys.stderr)
         # Per-query cache hygiene: every rep of a persist()-ing query
@@ -321,6 +350,7 @@ def main() -> None:
         # sf1). Clearing between queries makes each recorded number the
         # query's own cost, the same isolation the solo method has.
         spark.catalog.clearCache()
+    tracer.close()
 
     result = {
         "metric": "total_headline_sec",
@@ -330,6 +360,7 @@ def main() -> None:
         "queries_cold": cold_timings,
         "persist_bearing": persist_bearing,
         "cold_disagreement": cold_disagreement,
+        "layers": layers,
         "order_seed": order_seed,
         "order": {n: i for i, n in enumerate(headline)},
         "sf": os.path.basename(os.path.normpath(SF_DIR)),

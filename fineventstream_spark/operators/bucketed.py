@@ -42,8 +42,8 @@ _CACHE_ROOT = os.path.join(
 )
 
 # the bucket keys the engine's headline queries co-locate on
-# r15 adds the events/user_id layout (verdict #4 A/B at sf10, artifact
-# plans/r15/sweeps/events_layout_ab_sf10.json): the six user_id-clustered
+# r15 adds the events/user_id layout (verdict #4 A/B at sf10, table in
+# BASELINE.md "Events layout A/B at sf10"): the six user_id-clustered
 # consumers (rolling_active / retention / sessionize / funnel /
 # session_window / udaf_grouped) shuffled 53-280 MB of fact each at sf10;
 # on the layout all six run with ~zero exchange, identical rows, walls

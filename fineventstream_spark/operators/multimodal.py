@@ -3,10 +3,12 @@ with typed metadata.
 
 Real pure-python codecs cover all three modalities with no external
 libraries: 24-bit BMP images, 16-bit PCM WAV audio, and YUV4MPEG2 (.y4m)
-raw video — encode, decode, and byte-exact frame seeks (see the round-4
-section below). ``_decode_stub`` remains only as the generic-plumbing
-fake for schema/Arrow-batch tests; compressed formats (JPEG/MP3/H.264)
-would plug into the same dispatch points via PIL/librosa/pyav.
+raw video — encode, decode, and byte-exact frame seeks. Y4M is the
+raw-video interchange format of the ffmpeg/x264 toolchain: a textual
+header plus fixed-size raw 4:2:0 frames, so a sampler seeks the j-th
+frame without decoding the rest (unsampled frames are never touched).
+Compressed formats (JPEG/MP3/H.264) would plug into the same dispatch
+points via PIL/librosa/pyav.
 
 Scale design: binary payloads ride in their own column so column pruning
 drops them for metadata-only queries (verify: ReadSchema excludes the blob
@@ -17,185 +19,13 @@ fits executor memory (e.g. 256 images × 4 MB ≈ 1 GB → set 64-128).
 
 from __future__ import annotations
 
+import math as _math
+import struct as _struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, checksum long, feat array<double>"
-
-
-def _decode_stub(payload: bytes, kind: str) -> list[float]:
-    """Deterministic fake decode: real impls would call PIL/librosa/pyav here.
-
-    Raises NotImplementedError for kinds the stub does not model, exactly
-    where a real decoder would plug in.
-    """
-    if kind not in ("image", "audio", "video"):
-        raise NotImplementedError(f"no decoder for kind={kind!r}")
-    # 8-dim "feature": byte histogram moments — deterministic, shape-stable
-    if not payload:
-        return [0.0] * 8
-    n = len(payload)
-    return [
-        float(n),
-        payload[0] / 255.0,
-        payload[-1] / 255.0,
-        sum(payload[:16]) / (16 * 255.0),
-        sum(payload) % 997 / 997.0,
-        float(max(payload)) / 255.0,
-        float(min(payload)) / 255.0,
-        (sum(payload) / n) / 255.0,
-    ]
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads (Arrow-batched)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b) if b is not None else 0),
-                    "checksum": pdf["payload"].map(
-                        lambda b: int(sum(b) % 2_147_483_647) if b is not None else 0
-                    ),
-                    # zip over the two column arrays, not apply(axis=1):
-                    # per-row Series construction is ~5x the kernel cost
-                    "feat": [
-                        _decode_stub(bytes(p), k) if p is not None else None
-                        for p, k in zip(pdf["payload"], pdf["kind"])
-                    ],
-                }
-            )
-            yield out
-
-    return df.mapInPandas(fn, FEATURE_SCHEMA)
-
-
-def synthesize_media(documents: DataFrame, kind: str = "image") -> DataFrame:
-    """Build a deterministic media table from the documents fixture: the text
-    bytes stand in for an encoded payload (schema/partitioning are what is
-    under test, not the codec)."""
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.length("text").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
-
-
-def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Batch resize: binary→binary ``mapInPandas`` with the target geometry
-    stamped into ``meta``. The kernel is the stub (a real impl calls
-    PIL.Image.resize / ffmpeg scale here); the plumbing under test is what
-    matters at scale — payloads never leave Arrow batches, output schema
-    equals MEDIA_SCHEMA so resize stages compose/chain, and the transform
-    is narrow (no shuffle: each batch maps 1:1)."""
-    target = width * height
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def _resize(b):
-                if b is None:
-                    return None
-                b = bytes(b)
-                # deterministic stand-in for pixel resampling: repeat or
-                # truncate the payload to exactly width*height bytes
-                if len(b) >= target:
-                    return b[:target]
-                reps = (target + len(b) - 1) // max(len(b), 1)
-                return (b * reps)[:target]
-
-            out = pdf.copy()
-            out["payload"] = out["payload"].map(_resize)
-            out["meta"] = [
-                {
-                    "width": width,
-                    "height": height,
-                    "n_bytes": len(p) if p is not None else 0,
-                }
-                for p in out["payload"]
-            ]
-            yield out
-
-    return df.mapInPandas(fn, MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, payload binary, n_bytes long"
-
-
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling: video binary → one row per sampled frame (the
-    row-expanding multimodal op — a real impl seeks keyframes via pyav).
-    The stub slices the payload into ``n_frames`` even chunks;
-    deterministic, so tests pin exact expansion. Expansion happens inside
-    ``mapInPandas`` (narrow, no shuffle) and emits only the sampled
-    frames — at 100 TB the unsampled frames never materialize."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                if b is None:
-                    continue
-                b = bytes(b)
-                step = max(len(b) // n_frames, 1)
-                for i in range(n_frames):
-                    frame = b[i * step : (i + 1) * step]
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "payload": frame,
-                            "n_bytes": len(frame),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "payload", "n_bytes"]
-            )
-
-    return df.mapInPandas(fn, FRAME_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Real decode kernels (round 4): BMP, WAV and Y4M video, pure-python — no
-# external codec libraries needed, so the decode step is no longer a stub
-# for any modality. Y4M (YUV4MPEG2) is the raw-video interchange format of
-# the ffmpeg/x264 toolchain: a textual header plus fixed-size raw 4:2:0
-# frames, which also makes REAL frame sampling possible (byte-exact seeks
-# to the j-th frame without decoding the rest — the 100 TB property:
-# unsampled frames are never touched).
-# ---------------------------------------------------------------------------
-
-import math as _math
-import struct as _struct
 
 
 def encode_bmp(width: int, height: int, seed: int) -> bytes:

@@ -343,109 +343,6 @@ def _scan_bytes(df: DataFrame) -> int | None:
     return scan_input_bytes(df)
 
 
-def sum_frames_by_order_buckets(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    frame_rows: int,
-    value_col: str,
-    out_cols: tuple[str, str, str] = ("__slide_sum", "__slide_cnt", "__run_sum"),
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Trailing ``frame_rows`` sum+count AND running sum of one NON-NULL
-    INTEGRAL column in a SINGLE payload window pass at keys × buckets
-    parallelism — the cheap straggler splitter behind the hot/cold window
-    router (r10).
-
-    Where :func:`chunked_rolling` + :func:`with_distributed_prefix` stack
-    three payload sorts, an explode, and two bookkeeping rounds (measured
-    13.8 s on sf10 events where the plain window is 1.35 s — fine when the
-    caller has no alternative, fatal as a skew mitigation), this operator
-    exploits the integer-sum semantics: carry-in rows never need to be
-    REPLICATED into the next chunk, because a trailing sum decomposes into
-    (local window sum) + (sum over the ≤ frame_rows-1 carried VALUES),
-    which travel as a bookkeeping ARRAY:
-
-    1. rows bucket by order-column value ranges (monotone — every earlier
-       row is in an earlier-or-equal bucket; ties share a bucket so no
-       frame ever spans a boundary between equal order values);
-    2. per-(key, bucket) bookkeeping: total of ``value_col`` + the last
-       ``frame_rows-1`` (order, value) structs — group sizes are
-       rows/buckets, so the collect stays bounded exactly because the
-       buckets split the hot key;
-    3. per-key exclusive prefix over the bookkeeping (tiny) gives each
-       bucket its running-sum offset and its carry array (last values of
-       ALL previous buckets = tail of the concatenated per-bucket tails);
-    4. ONE payload window over (key, bucket): local trailing sum/count +
-       local running sum, then rows with local row_number < frame_rows
-       top up from the broadcast carry array.
-
-    Exactness: integer sums are order-independent, so results are
-    bit-identical to the serial window (the caller owns putting the data
-    on an integer grid — see queries/_money.py). ``value_col`` must be
-    non-null; a NULL would be skipped by the window sums but poison the
-    carry-array aggregate."""
-    if frame_rows < 2:
-        raise ValueError("frame_rows must be >= 2 (a 1-row frame needs no carry)")
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    tail_n = frame_rows - 1
-    bucketed = _with_order_bucket(df, order_cols[0], n_buckets)
-    order_struct = F.struct(
-        *[F.col(c) for c in order_cols], F.col(value_col).alias("__v")
-    )
-    sorted_vals = F.array_sort(F.collect_list(order_struct))
-    book = bucketed.groupBy(*key_cols, "__bkt").agg(
-        F.sum(value_col).alias("__s"),
-        F.when(
-            F.size(sorted_vals) > tail_n, F.slice(sorted_vals, -tail_n, tail_n)
-        )
-        .otherwise(sorted_vals)
-        .alias("__tail"),
-    )
-    wb = (
-        Window.partitionBy(*key_cols)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_tails = F.flatten(F.collect_list("__tail").over(wb))
-    carry = F.when(
-        F.size(prev_tails) > tail_n, F.slice(prev_tails, -tail_n, tail_n)
-    ).otherwise(prev_tails)
-    offsets = book.select(
-        *key_cols,
-        "__bkt",
-        F.coalesce(F.sum("__s").over(wb), F.lit(0).cast("long")).alias("__off"),
-        carry.alias("__carry"),
-    )
-    lw = Window.partitionBy(*key_cols, "__bkt").orderBy(*order_cols)
-    rn = F.row_number().over(lw)
-    local_slide = F.sum(value_col).over(lw.rowsBetween(-tail_n, 0))
-    local_cnt = F.count(F.lit(1)).over(lw.rowsBetween(-tail_n, 0))
-    local_run = F.sum(value_col).over(lw.rowsBetween(Window.unboundedPreceding, 0))
-    needed = F.greatest(F.lit(0), F.lit(frame_rows) - rn)
-    avail = F.least(needed, F.coalesce(F.size("__carry"), F.lit(0)))
-    carried = F.when(
-        avail > 0,
-        F.aggregate(
-            F.slice("__carry", -avail, avail),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x["__v"],
-        ),
-    ).otherwise(F.lit(0).cast("long"))
-    slide_sum, slide_cnt, run_sum = out_cols
-    return (
-        bucketed.join(F.broadcast(offsets), [*key_cols, "__bkt"])
-        .select(
-            *df.columns,
-            (local_slide + carried).alias(slide_sum),
-            (local_cnt + avail).cast("long").alias(slide_cnt),
-            (local_run + F.col("__off")).alias(run_sum),
-        )
-    )
-
-
 # memo: (files, plan, order col) → (lo, hi) of the finite order values as
 # Python floats — turning the bucket bounds into plan LITERALS so repeated
 # executions never re-scan for min/max (the in-plan 1-row-broadcast form of

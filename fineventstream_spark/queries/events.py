@@ -322,7 +322,7 @@ def q_event_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (user_id) satisfies ClusteredDistribution(d, user_id), so the
     # (day, user) distinct collapses with NO fact exchange (A/B at sf10:
     # 233 MB shuffle → 0.08 MB, wall 4.39 → 3.05 s, rows identical;
-    # plans/r15/sweeps/events_layout_ab_sf10.json). Aggregate-collapsing
+    # BASELINE.md "Events layout A/B at sf10"). Aggregate-collapsing
     # consumer → plain layout, not route_skew (the r10 consumer-shape
     # lesson, operators/bucketed.py).
     ev = bucketed_table(spark, sf_dir, "events")

@@ -129,7 +129,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     required ClusteredDistribution(user_id) is satisfied by the bucket
     distribution, so the fact never exchanges (A/B at sf10: 280 MB
     shuffle → 0, wall 1.85 → 0.91 s, rows identical;
-    plans/r15/sweeps/events_layout_ab_sf10.json)."""
+    BASELINE.md "Events layout A/B at sf10")."""
     from fineventstream_spark.operators.bucketed import bucketed_table
 
     ev = bucketed_table(spark, sf_dir, "events")

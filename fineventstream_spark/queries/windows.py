@@ -38,7 +38,7 @@ def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking family over a keyed, totally-ordered window.
 
     r15: events rides the user_id-bucketed layout (verdict #4 A/B,
-    plans/r15/sweeps/events_layout_ab_sf10.json) — the window's required
+    BASELINE.md "Events layout A/B at sf10") — the window's required
     ClusteredDistribution(user_id) is satisfied by the bucket
     distribution, so the per-row fact exchange disappears at every
     scale; the in-partition (ts, event_id) sort remains."""

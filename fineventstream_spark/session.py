@@ -36,6 +36,57 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The SQL confs every engine session runs with. ``get_spark`` builds with
+# them, and the driver contract (``__spark_entry__.py``) re-applies them to
+# any session it is handed, so a vanilla session plans the same way.
+SESSION_SQL_CONFS: tuple[tuple[str, str], ...] = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # AQE coalescing: a vanilla 200-partition session otherwise runs
+    # 200-400 near-empty tasks per shuffle at oracle scale
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.parquet.mergeSchema", "false"),
+    ("spark.sql.parquet.filterPushdown", "true"),
+    # Partition discovery of the engine's own layouts (the minhash
+    # store's 64 bp= dirs, the 31-day partitioned events) crosses the
+    # default 32-path threshold and launches a DISTRIBUTED listing job
+    # per reader build — a 64-task job to stat ~100 local directories
+    # the driver lists in microseconds (r14 measurement: the band-table
+    # reader alone cost +2 jobs/1.2-2.4 s per probe). 256 keeps every
+    # engine layout driver-listed; deployments against high-latency
+    # object stores with many more leaf dirs should lower it back
+    # (get_spark(extra_conf=...)).
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", "256"),
+    # NOTE (r7): spark.sql.requireAllClusterKeysForCoPartition stays at
+    # its DEFAULT (true). Round 6 set it false so a bucketed-on-orderkey
+    # SMJ whose equi-keys widened to (orderkey, nationkey) could reuse
+    # the bucket distribution — but globally, the relaxation let joins
+    # whose small side is partitioned on a key SUBSET drag the big side
+    # down to that subset's distribution: chunked_rolling's bookkeeping
+    # join (key, __bkt) was satisfied by hash(key) alone, collapsing the
+    # heavy window to key-cardinality parallelism (sf10 measured: 38.7 s
+    # vs 7.7 s — a 5× regression on q_event_rolling_zscore). The one
+    # query that needed the widened-key reuse (Q5) now joins on the
+    # bucket key ONLY and applies the second equality as a post-join
+    # filter — identical semantics, single-key SMJ, default configs.
+    # Bucketed scans report per-bucket sort order when each bucket is
+    # one file (our derivatives write exactly one — repartition(n, key)
+    # ahead of bucketBy), letting SMJ skip its Sort (sf10: −17%).
+    ("spark.sql.legacy.bucketedTableScan.outputOrdering", "true"),
+    # FileSystem.rename, not FileContext.rename: without the native
+    # Hadoop library the latter forks a readlink process per checkpoint
+    # file, ~110 per micro-batch (module docstring).
+    (
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+    ),
+)
+
+
 def _default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
@@ -65,51 +116,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # Partition discovery of the engine's own layouts (the minhash
-        # store's 64 bp= dirs, the 31-day partitioned events) crosses the
-        # default 32-path threshold and launches a DISTRIBUTED listing job
-        # per reader build — a 64-task job to stat ~100 local directories
-        # the driver lists in microseconds (r14 measurement: the band-table
-        # reader alone cost +2 jobs/1.2-2.4 s per probe). 256 keeps every
-        # engine layout driver-listed; deployments against high-latency
-        # object stores with many more leaf dirs should lower it back
-        # (get_spark(extra_conf=...)).
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-        # NOTE (r7): spark.sql.requireAllClusterKeysForCoPartition stays at
-        # its DEFAULT (true). Round 6 set it false so a bucketed-on-orderkey
-        # SMJ whose equi-keys widened to (orderkey, nationkey) could reuse
-        # the bucket distribution — but globally, the relaxation let joins
-        # whose small side is partitioned on a key SUBSET drag the big side
-        # down to that subset's distribution: chunked_rolling's bookkeeping
-        # join (key, __bkt) was satisfied by hash(key) alone, collapsing the
-        # heavy window to key-cardinality parallelism (sf10 measured: 38.7 s
-        # vs 7.7 s — a 5× regression on q_event_rolling_zscore). The one
-        # query that needed the widened-key reuse (Q5) now joins on the
-        # bucket key ONLY and applies the second equality as a post-join
-        # filter — identical semantics, single-key SMJ, default configs.
-        # Bucketed scans report per-bucket sort order when each bucket is
-        # one file (our derivatives write exactly one — repartition(n, key)
-        # ahead of bucketBy), letting SMJ skip its Sort (sf10: −17%).
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        # FileSystem.rename, not FileContext.rename: without the native
-        # Hadoop library the latter forks a readlink process per checkpoint
-        # file, ~110 per micro-batch (module docstring).
-        .config(
-            "spark.sql.streaming.checkpointFileManagerClass",
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager",
-        )
     )
+    for k, v in SESSION_SQL_CONFS:
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -11,7 +11,8 @@ which must (a) stay under 4 KB for the CURRENT headline set even with
 worst-plausible timing widths, (b) keep every driver-contract key
 verbatim, and (c) keep the failure markers (`n_failed`,
 `total_is_partial`) so a failing round can never read as a speedup.
-No Spark session is needed — this is a pure-dict contract test.
+No Spark session is needed for those — they are pure-dict contract
+tests. The layer-schema test traces one real rep.
 """
 
 from __future__ import annotations
@@ -26,11 +27,25 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, _COMPACT_KEYS, compact_result
+from bench import HEADLINE, _COMPACT_KEYS, Tracer, compact_result
 
 SCRIPTS_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
 )
+
+# Per-query keys of BENCH_LOCAL_r<N>.json's "layers": perfbench's layer
+# split of one rep (perfbench/lake.py::_traced_query).
+LAYER_KEYS = frozenset({
+    "construct_s", "py4j_calls", "eager_jobs",
+    "catalyst.plan_s", "catalyst.analysis_s", "catalyst.optimization_s",
+    "catalyst.planning_s",
+    "execute.wall_s", "execute.jobs", "execute.stages", "execute.tasks",
+    "execute.shuffle_write_bytes", "execute.shuffle_write_records",
+    "execute.input_bytes", "execute.spill_bytes", "execute.executor_run_s",
+    "execute.executor_cpu_s", "execute.jvm_gc_s", "execute.task_max_s",
+    "execute.task_med_s",
+    "python.udf_s", "python.bytes_sent", "python.bytes_received",
+})
 
 # The driver's tail capture demonstrably held ~4 KB lines and lost the
 # 5,022-byte r13 line; bound with margin below the observed cliff.
@@ -57,6 +72,7 @@ def _worst_case_result() -> dict:
         "cold_disagreement": {n: [9999.999, 9999.999] for n in HEADLINE},
         "order_seed": 4294967295,
         "order": {n: i for i, n in enumerate(HEADLINE)},
+        "layers": {n: dict.fromkeys(LAYER_KEYS, 9999.999) for n in HEADLINE},
         "sf": "sf0.001",
         "n_queries": len(HEADLINE),
         "n_failed": len(HEADLINE),
@@ -89,7 +105,7 @@ def test_compact_line_keeps_driver_contract_keys():
     assert compact["total_is_partial"] is True
     # the fat diagnostics are what gets dropped (they live in
     # BENCH_LOCAL_r<N>.json)
-    for key in ("order", "cold_disagreement", "failures"):
+    for key in ("order", "cold_disagreement", "failures", "layers"):
         assert key not in compact
 
 
@@ -116,6 +132,21 @@ def test_compact_keys_do_not_drop_contract_fields():
                 "persist_bearing", "order_seed", "sf", "n_queries",
                 "n_failed", "total_is_partial"):
         assert key in _COMPACT_KEYS
+
+
+def test_traced_rep_writes_every_layer(spark, sf_dir):
+    from fineventstream_spark.registry import all_queries
+
+    tracer = Tracer(spark)
+    try:
+        wall, layers = tracer.rep(all_queries()["q_agg_groupby_basic"], sf_dir)
+    finally:
+        tracer.close()
+    assert set(layers) == LAYER_KEYS
+    # the headline wall is construct + execute; Catalyst sits outside it
+    assert wall == pytest.approx(layers["construct_s"] + layers["execute.wall_s"], abs=1e-3)
+    assert layers["execute.jobs"] >= 1 and layers["execute.tasks"] >= 1
+    assert layers["py4j_calls"] > 0
 
 
 @pytest.mark.parametrize(

@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 
 from fineventstream_spark.operators.asof import asof_join
 from fineventstream_spark.operators.dedup import exact_dedup, minhash_lsh_candidates
-from fineventstream_spark.operators.multimodal import extract_features, synthesize_media
+from fineventstream_spark.operators.multimodal import (
+    decode_media_features,
+    synthesize_real_media,
+)
 from fineventstream_spark.operators.similarity import cosine_topk, ivf_topk
 from fineventstream_spark.operators.text import doc_fingerprint
 
@@ -409,29 +412,11 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     assert overlap >= 3, f"IVF recall too low: {overlap}/10 (exact={exact}, ivf={approx})"
 
 
-def test_multimodal_feature_plumbing(spark, sf_dir):
-    """Binary payload column → mapInPandas features: schema and determinism."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    media = synthesize_media(docs)
-    assert dict(media.dtypes)["payload"] == "binary"
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 50
-    r0 = rows[0]
-    assert len(r0.feat) == 8
-    assert r0.n_bytes > 0
-    # determinism: second run identical
-    rows2 = extract_features(media).collect()
-    assert sorted((r.media_id, r.checksum) for r in rows) == sorted(
-        (r.media_id, r.checksum) for r in rows2
-    )
-
-
 def test_multimodal_unknown_kind_raises(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1)
-    media = synthesize_media(docs, kind="hologram")
+    media = synthesize_real_media(docs).withColumn("kind", F.lit("hologram"))
     with pytest.raises(Exception, match="NotImplementedError|no decoder"):
-        extract_features(media).collect()
+        decode_media_features(media).collect()
 
 
 def test_union_rowcount_conservation(spark, sf_dir):
@@ -1529,39 +1514,6 @@ def test_win_frame_rows_paths_identical(spark, sf_dir):
     finally:
         spark.conf.unset(SERIAL_WINDOW_PARTITION_CONF_KEY)
     assert plain == split
-
-
-def test_sum_frames_by_order_buckets_matches_serial(spark):
-    """The single-pass bucketed frame operator must reproduce the serial
-    window exactly on a hot-keyed input — including rows whose trailing
-    frame spans bucket boundaries (the carry-array path) and keys whose
-    first rows have fewer than frame_rows-1 predecessors."""
-    from pyspark.sql import Window
-
-    from fineventstream_spark.operators.rolling import sum_frames_by_order_buckets
-
-    df = spark.range(50_000).select(
-        F.when(F.col("id") % 10 < 8, F.lit(1)).otherwise(F.col("id") % 37).alias("k"),
-        (F.col("id") * 7919 % 49999).alias("t"),  # shuffled, near-unique order
-        F.col("id").alias("tie"),
-        (F.col("id") % 1000).cast("long").alias("v"),
-    )
-    got = sum_frames_by_order_buckets(
-        df, ["k"], ["t", "tie"], 4, "v", out_cols=("ss", "sc", "rs"), n_buckets=16
-    )
-    ob = Window.partitionBy("k").orderBy("t", "tie")
-    want = df.select(
-        "k",
-        "t",
-        "tie",
-        "v",
-        F.sum("v").over(ob.rowsBetween(-3, 0)).alias("ss"),
-        F.count(F.lit(1)).over(ob.rowsBetween(-3, 0)).cast("long").alias("sc"),
-        F.sum("v").over(ob.rowsBetween(Window.unboundedPreceding, 0)).alias("rs"),
-    )
-    g = {(r.k, r.t, r.tie): (r.ss, r.sc, r.rs) for r in got.collect()}
-    e = {(r.k, r.t, r.tie): (r.ss, r.sc, r.rs) for r in want.collect()}
-    assert g == e
 
 
 def test_distributed_row_number_matches_serial_on_skew(spark):

@@ -1309,7 +1309,7 @@ def test_events_user_layout_zero_exchange_windows(spark, sf_dir):
     the aggregate's ClusteredDistribution. These plans must be bucketed
     scans with ZERO shuffle exchanges (the A/B at sf10 measured 53-280 MB
     of fact shuffle per query on the plain scans:
-    plans/r15/sweeps/events_layout_ab_sf10.json). q_win_frame_rows is
+    BASELINE.md "Events layout A/B at sf10"). q_win_frame_rows is
     covered at the uniform fixture only — on a skew-degenerate input the
     hot/cold split machinery deliberately reintroduces exchanges for the
     hot keys."""

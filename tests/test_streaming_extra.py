@@ -237,67 +237,18 @@ def test_streaming_session_window(spark, tmpdir):
 def test_multimodal_payload_column_pruned(spark, tmpdir):
     """U8 scale contract: a metadata-only query over a media parquet table
     must NOT read the binary payload column (ReadSchema excludes it)."""
-    from fineventstream_spark.operators.multimodal import synthesize_media
+    from fineventstream_spark.operators.multimodal import synthesize_real_media
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(100)
     path = os.path.join(tmpdir, "media")
-    synthesize_media(docs).write.mode("overwrite").parquet(path)
+    synthesize_real_media(docs).write.mode("overwrite").parquet(path)
 
     media = spark.read.parquet(path)
-    meta_only = media.select("media_id", "kind", F.col("meta.n_bytes").alias("n_bytes"))
+    meta_only = media.select("media_id", "kind")
     plan = spark._jvm.PythonSQLUtils.explainString(meta_only._jdf.queryExecution(), "formatted")
     read_schema = plan.split("ReadSchema:")[1]
     assert "payload" not in read_schema, f"binary column not pruned:\n{read_schema[:300]}"
     assert meta_only.count() == 100
-
-
-def test_multimodal_resize_schema_and_determinism(spark):
-    """Resize keeps MEDIA_SCHEMA (stages compose), stamps the target
-    geometry, and produces byte-identical output across runs."""
-    from fineventstream_spark.operators.multimodal import (
-        resize_media,
-        synthesize_media,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(20)
-    media = synthesize_media(docs)
-    resized = resize_media(media, width=8, height=4)
-    # composable: resize(resize(x)) typechecks (names/types match;
-    # mapInPandas output is nullable, so nullability is not compared)
-    assert [(f.name, f.dataType) for f in resized.schema] == [
-        (f.name, f.dataType) for f in media.schema
-    ]
-    rows = {r.media_id: r for r in resized.collect()}
-    assert len(rows) == 20
-    for r in rows.values():
-        assert len(r.payload) == 32
-        assert (r.meta.width, r.meta.height, r.meta.n_bytes) == (8, 4, 32)
-    again = {r.media_id: bytes(r.payload) for r in resize_media(media, 8, 4).collect()}
-    assert {k: bytes(v.payload) for k, v in rows.items()} == again
-
-
-def test_multimodal_frame_sampling_expansion(spark):
-    """Frame sampling expands each video into exactly n_frames rows with
-    deterministic per-frame slices; frames re-concatenate to a prefix of
-    the source payload (nothing fabricated, nothing reordered)."""
-    from fineventstream_spark.operators.multimodal import (
-        sample_frames,
-        synthesize_media,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(10)
-    media = synthesize_media(docs, kind="video")
-    frames = sample_frames(media, n_frames=4)
-    per_media = {r.media_id: [] for r in frames.collect()}
-    for r in frames.orderBy("media_id", "frame_idx").collect():
-        per_media[r.media_id].append((r.frame_idx, bytes(r.payload), r.n_bytes))
-    src = {r.media_id: bytes(r.payload) for r in media.collect()}
-    assert set(per_media) == set(src)
-    for mid, fs in per_media.items():
-        assert [i for i, _, _ in fs] == [0, 1, 2, 3]
-        concat = b"".join(b for _, b, _ in fs)
-        assert src[mid].startswith(concat)
-        assert all(n == len(b) for _, b, n in fs)
 
 
 def test_drop_duplicates_within_watermark(spark, tmpdir):
