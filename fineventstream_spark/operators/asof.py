@@ -110,16 +110,16 @@ def asof_join(
     # parallelism, bit-identical whenever (ts, tiebreak) is unique per
     # key and within the window's own tie-ambiguity class otherwise.
     from fineventstream_spark.operators.rolling import (
-        _scan_bytes,
-        _serial_threshold,
+        SERIAL_WINDOW_MAX_INPUT_BYTES,
         with_distributed_prefix,
     )
+    from fineventstream_spark.operators.sizing import scan_input_bytes
 
     if low_cardinality_keys:
         # unknown scan size (in-memory relations) defaults to DISTRIBUTED —
         # the scale-safe choice, same convention as the rolling family
-        threshold = _serial_threshold(left.sparkSession, None)
-        lb, rb = _scan_bytes(left), _scan_bytes(right)
+        threshold = SERIAL_WINDOW_MAX_INPUT_BYTES
+        lb, rb = scan_input_bytes(left), scan_input_bytes(right)
         serial = (
             threshold > 0
             and lb is not None

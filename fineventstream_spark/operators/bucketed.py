@@ -214,11 +214,9 @@ def _assert_one_file_per_bucket(path: str, table: str) -> None:
 # layout itself knows: bucket files are on disk at write time. max/median
 # ROW COUNT above this ratio marks the layout skew-degenerate, and
 # bucketed_table(route_skew=True) then routes to the plain shuffle path
-# where OptimizeSkewedJoin can split the hot partition (r10). Override the
-# ratio per session via the conf key; <= 0 disables routing entirely
-# (always read the layout).
+# where OptimizeSkewedJoin can split the hot partition (r10). <= 0
+# disables routing entirely (always read the layout).
 SKEW_RATIO_THRESHOLD = 4.0
-SKEW_ROUTE_CONF_KEY = "spark.fineventstream.bucketSkewRatioThreshold"
 
 _SKEW_SIDECAR = "_skew.json"
 _SKEW_REGISTRY = "_skew_registry.json"
@@ -334,10 +332,6 @@ def layout_group_skew_ratio(sf_dir: str, table: str, key: str) -> float:
         r for t, k in members if (r := _registry_ratio(sf_dir, t, k)) is not None
     ]
     return max(ratios, default=1.0)
-
-
-def _skew_route_threshold(spark: SparkSession) -> float:
-    return float(spark.conf.get(SKEW_ROUTE_CONF_KEY, str(SKEW_RATIO_THRESHOLD)))
 
 
 def _measure_and_record_skew(path: str, sf_dir: str, table: str, key: str) -> None:
@@ -595,13 +589,12 @@ def bucketed_table(
 
     SKEW ROUTING (r10) — ``route_skew=True`` opts a call site in: when the
     layout — or any co-location partner it exists to join (``_COLOCATED``)
-    — recorded a bucket skew ratio at/above the session threshold
-    (``SKEW_ROUTE_CONF_KEY``, default ``SKEW_RATIO_THRESHOLD``; <= 0
-    disables), the PLAIN source scan is returned instead, schema-identical
-    (projection/derived/prejoin applied at query time), so the join plans
-    as shuffle+AQE and OptimizeSkewedJoin can split the hot partition. The
-    whole co-location group routes together because the skew split needs
-    BOTH join children to be shuffle stages.
+    — recorded a bucket skew ratio at/above ``SKEW_RATIO_THRESHOLD``
+    (<= 0 disables), the PLAIN source scan is returned instead,
+    schema-identical (projection/derived/prejoin applied at query time),
+    so the join plans as shuffle+AQE and OptimizeSkewedJoin can split the
+    hot partition. The whole co-location group routes together because
+    the skew split needs BOTH join children to be shuffle stages.
 
     WHY OPT-IN, NOT DEFAULT — the r10 A/B on the 18%-hot zipf fixture
     (BASELINE r10) split by CONSUMER SHAPE:
@@ -624,21 +617,14 @@ def bucketed_table(
         spark, sf_dir, table, key=key, columns=columns, derived=derived,
         prejoin=prejoin, partition_by=partition_by,
     )
-    threshold = _skew_route_threshold(spark)
-    if (
-        route_skew
-        and threshold > 0
-        and layout_group_skew_ratio(sf_dir, table, key) >= threshold
-    ):
+    if route_skew and layout_skew_degenerate(sf_dir, table, key):
         return _projected(spark, sf_dir, table, key, columns, derived, prejoin)
     return spark.table(name)
 
 
-def layout_skew_degenerate(
-    spark: SparkSession, sf_dir: str, table: str, key: str | None = None
-) -> bool:
+def layout_skew_degenerate(sf_dir: str, table: str, key: str | None = None) -> bool:
     """True when the (table, key) layout group's recorded bucket-skew ratio
-    is at/above the session routing threshold — the signal consumers use to
+    is at/above ``SKEW_RATIO_THRESHOLD`` — the signal consumers use to
     switch to a skew-tolerant PLAN SHAPE (r11: the report family's
     pre-aggregate-before-join variants), as opposed to ``route_skew`` which
     only swaps the scan. Reads the registry the layouts themselves maintain
@@ -648,8 +634,10 @@ def layout_skew_degenerate(
     the conservative default for the plan-shape decision because the
     baseline plan is the measured winner on uniform data."""
     key = key or BUCKET_KEYS[table]
-    threshold = _skew_route_threshold(spark)
-    return threshold > 0 and layout_group_skew_ratio(sf_dir, table, key) >= threshold
+    return (
+        SKEW_RATIO_THRESHOLD > 0
+        and layout_group_skew_ratio(sf_dir, table, key) >= SKEW_RATIO_THRESHOLD
+    )
 
 
 def bucketed_join_lineitem_orders(spark: SparkSession, sf_dir: str) -> DataFrame:

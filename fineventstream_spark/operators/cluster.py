@@ -55,10 +55,8 @@ from pyspark.sql import functions as F
 # review costed the first dict-based cut at 30-60× that). The collect
 # is BOUNDED BY THE GATE, keeping the anti-pattern rule ("no driver-
 # side collects on fact-sized data"); graphs past the gate take the
-# unchanged distributed loop. Conf-keyed like every other size-selected
-# operator; <= 0 disables the fast path.
+# unchanged distributed loop. <= 0 disables the fast path.
 CC_LOCAL_MAX_EDGES = 1_000_000
-CC_LOCAL_CONF_KEY = "spark.fineventstream.ccLocalMaxEdges"
 
 
 def _local_components(edges_pdf, id_type: str, spark) -> DataFrame:
@@ -102,7 +100,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 10) -> DataFram
     Returns (id, component) for every id that appears in at least one
     pair; ``component`` is the smallest id reachable from it.
 
-    SIZE-SELECTED (r13): edge sets at/under ``ccLocalMaxEdges`` resolve
+    SIZE-SELECTED (r13): edge sets at/under ``CC_LOCAL_MAX_EDGES`` resolve
     via driver union-find (see the gate note above); larger graphs run
     the distributed pointer-doubling loop below. Both routes return the
     identical (id, min-reachable-id) mapping — pinned by the route-
@@ -119,7 +117,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 10) -> DataFram
     # scheduler overhead on a tiny edge set
     n = spark.sparkContext.defaultParallelism
     raw = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    local_max = int(spark.conf.get(CC_LOCAL_CONF_KEY, str(CC_LOCAL_MAX_EDGES)))
+    local_max = CC_LOCAL_MAX_EDGES
     if local_max > 0:
         # ONE limit-bounded job: pull up to gate+1 RAW pairs straight to
         # the driver — union-find needs neither direction-doubling nor

@@ -97,9 +97,8 @@ def mg_frequent_candidates(
 # pass 1.0 s on a 2k-value domain). Above it, the MG pass's bounded
 # exchange (≤ partitions × capacity rows regardless of domain) is the
 # 100 TB-safe route. Same size-selection discipline as the rolling
-# window family (operators/rolling.py) — conf-keyed, <= 0 forces MG.
+# window family (operators/rolling.py); <= 0 forces MG.
 PHI_EXACT_MAX_INPUT_BYTES = 1 << 30
-PHI_EXACT_CONF_KEY = "spark.fineventstream.phiExactMaxInputBytes"
 
 
 def phi_heavy_hitters(
@@ -107,7 +106,6 @@ def phi_heavy_hitters(
     key: str,
     phi: float,
     capacity: int = 200,
-    exact_below_bytes: int | None = None,
 ) -> DataFrame:
     """Exact φ-heavy-hitters of ``key``: every value whose count is
     ≥ φ·N, as (key, n_events, n_total) — SIZE-SELECTED (r12 verdict #1):
@@ -128,12 +126,7 @@ def phi_heavy_hitters(
             f"capacity {capacity} below ceil(2/phi)={int(2.0 / phi + 0.999999)}: "
             "the Misra-Gries route would lose its no-false-negative guarantee"
         )
-    spark = df.sparkSession
-    threshold = (
-        exact_below_bytes
-        if exact_below_bytes is not None
-        else int(spark.conf.get(PHI_EXACT_CONF_KEY, str(PHI_EXACT_MAX_INPUT_BYTES)))
-    )
+    threshold = PHI_EXACT_MAX_INPUT_BYTES
     keyed = df.select(F.col(key)).where(F.col(key).isNotNull())
     nbytes = None
     if threshold > 0:

@@ -61,6 +61,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fineventstream_spark.operators.sizing import (
+    files_signature,
+    hot_key_values,
+    max_key_share,
+    plan_hash,
+    scan_input_bytes,
+)
+
 
 def _order_value_expr(df: DataFrame, order_col: str) -> Column | None:
     """``order_col`` as a double for range bucketing, or None for types
@@ -208,11 +216,11 @@ def chunked_rolling(
     those of the plain per-key window.
 
     Physical strategy is SIZE-SELECTED like the prefix/lag operators:
-    below the serial threshold (``serial_below_bytes`` if given, else the
-    ``spark.fineventstream.serialWindowMaxInputBytes`` conf, default
-    64 MiB) the plain per-key window evaluates directly — at small inputs
-    the numbering + carry-in machinery costs more than it saves (zscore
-    at sf0.1: 2.3 s chunked vs sub-second serial); 0 forces chunked."""
+    below the serial threshold (``serial_below_bytes`` if given, else
+    ``SERIAL_WINDOW_MAX_INPUT_BYTES``, 64 MiB) the plain per-key window
+    evaluates directly — at small inputs the numbering + carry-in
+    machinery costs more than it saves (zscore at sf0.1: 2.3 s chunked
+    vs sub-second serial); 0 forces chunked."""
     if chunk_rows < frame_rows - 1:
         raise ValueError(
             f"chunk_rows ({chunk_rows}) must be >= frame_rows-1 "
@@ -268,9 +276,8 @@ def chunked_rolling(
 # distributed wins at sf10 (174 MB: drawdown 3.4→2.5 s, gap 5.0→3.3 s) and
 # loses at sf0.1 (2 MB: +0.7-0.9 s/query). Unknown input size (non-file
 # sources, remote URIs) defaults to DISTRIBUTED — the scale-safe choice.
-# Override per session via the conf key (0 disables the serial fallback).
+# Read at call time, so tests can patch it (0 disables the serial fallback).
 SERIAL_WINDOW_MAX_INPUT_BYTES = 64 << 20
-SERIAL_WINDOW_CONF_KEY = "spark.fineventstream.serialWindowMaxInputBytes"
 
 # The total-bytes probe cannot see a hot KEY (r9 verdict: 2.43× straggler
 # tax on a PARTITION BY user_id frame under the 18%-hot-user zipf fixture —
@@ -278,8 +285,8 @@ SERIAL_WINDOW_CONF_KEY = "spark.fineventstream.serialWindowMaxInputBytes"
 # is modest). Inputs under the serial threshold additionally probe the
 # hottest key's row share (operators/sizing.py::max_key_share — narrow,
 # memoized); when the estimated hot-PARTITION bytes (total × share) reach
-# this budget, the distributed form is selected anyway. Conf-overridable;
-# <= 0 disables the skew probe (pure total-bytes selection, the r9 rule).
+# this budget, the distributed form is selected anyway. <= 0 disables
+# the skew probe (pure total-bytes selection, the r9 rule).
 # 64 MiB is the measured crossover (BASELINE r10): an exact split cannot
 # avoid a bookkeeping barrier (one extra pass + broadcast ≈ 1-1.5 s at
 # sf10), while the straggler itself costs ~25 ms/MB of hot partition —
@@ -287,15 +294,6 @@ SERIAL_WINDOW_CONF_KEY = "spark.fineventstream.serialWindowMaxInputBytes"
 # mitigation (measured: 27 MB hot → plain 2.23 s vs split 3.29 s; 95 MB
 # hot → split wins).
 SERIAL_WINDOW_MAX_PARTITION_BYTES = 64 << 20
-SERIAL_WINDOW_PARTITION_CONF_KEY = "spark.fineventstream.serialWindowMaxPartitionBytes"
-
-
-def _serial_threshold(spark, override: int | None) -> int:
-    if override is not None:
-        return override
-    return int(
-        spark.conf.get(SERIAL_WINDOW_CONF_KEY, str(SERIAL_WINDOW_MAX_INPUT_BYTES))
-    )
 
 
 def serial_window_ok(
@@ -310,37 +308,24 @@ def serial_window_ok(
     on its file-backed source and force both stages the same way —
     intermediate DataFrames are not file-backed, so letting each stage
     re-probe would mis-route the later ones to distributed at toy scale."""
-    spark = df.sparkSession
-    threshold = _serial_threshold(spark, serial_below_bytes)
+    threshold = (
+        SERIAL_WINDOW_MAX_INPUT_BYTES
+        if serial_below_bytes is None
+        else serial_below_bytes
+    )
     if threshold <= 0:
         return False
-    nbytes = _scan_bytes(df)
+    nbytes = scan_input_bytes(df)
     if nbytes is None or nbytes >= threshold:
         return False
-    hot_budget = int(
-        spark.conf.get(
-            SERIAL_WINDOW_PARTITION_CONF_KEY, str(SERIAL_WINDOW_MAX_PARTITION_BYTES)
-        )
-    )
+    hot_budget = SERIAL_WINDOW_MAX_PARTITION_BYTES
     if hot_budget <= 0 or nbytes < hot_budget:
         # even a 100%-hot key cannot exceed the per-partition budget
         return True
-    from fineventstream_spark.operators.sizing import max_key_share
-
     share = max_key_share(df, key_cols)
     if share is None:
         return False  # unknowable → assume skewed, the scale-safe default
     return nbytes * share < hot_budget
-
-
-def _scan_bytes(df: DataFrame) -> int | None:
-    """Total size of the scan's backing files, or None when unknowable.
-    Shared with the broadcast guard — see operators/sizing.py (which also
-    percent-decodes inputFiles() URIs so exotic paths keep the fast path).
-    """
-    from fineventstream_spark.operators.sizing import scan_input_bytes
-
-    return scan_input_bytes(df)
 
 
 # memo: (files, plan, order col) → (lo, hi) of the finite order values as
@@ -365,8 +350,6 @@ def _literal_order_bounds(df: DataFrame, order_col: str) -> tuple[float, float] 
     v = _order_value_expr(df, order_col)
     if v is None:
         return None
-    from fineventstream_spark.operators.sizing import files_signature, plan_hash
-
     files = files_signature(df)
     if files is None:
         return None
@@ -424,7 +407,7 @@ def skew_split_sum_frames(
     Routing: estimate each key's partition bytes as scan bytes × row
     share (operators/sizing.py::hot_key_values — eager, narrow,
     memoized). No key past the per-partition budget
-    (``SERIAL_WINDOW_PARTITION_CONF_KEY``, default 16 MiB; <= 0 disables
+    (``SERIAL_WINDOW_MAX_PARTITION_BYTES``, 64 MiB; <= 0 disables
     splitting) → the untouched plain window, zero overhead — the usual
     case, since key cardinality normally exceeds cores.
 
@@ -447,11 +430,7 @@ def skew_split_sum_frames(
     rows; the payload pays exactly one exchange + one sort, same as the
     plain window."""
     spark = df.sparkSession
-    budget = int(
-        spark.conf.get(
-            SERIAL_WINDOW_PARTITION_CONF_KEY, str(SERIAL_WINDOW_MAX_PARTITION_BYTES)
-        )
-    )
+    budget = SERIAL_WINDOW_MAX_PARTITION_BYTES
     slide_sum, slide_cnt, run_sum = out_cols
     tail_n = frame_rows - 1
 
@@ -472,10 +451,8 @@ def skew_split_sum_frames(
     hot: list[tuple] | None = None
     bounds: tuple[float, float] | None = None
     if budget > 0:
-        nbytes = _scan_bytes(df)
+        nbytes = scan_input_bytes(df)
         if nbytes is not None and nbytes >= budget:
-            from fineventstream_spark.operators.sizing import hot_key_values
-
             hot = hot_key_values(df, key_cols, budget / nbytes)
             if hot:
                 # bound the split (hot_key_values returns hottest-first):
@@ -623,9 +600,8 @@ def with_distributed_prefix(
     Physical strategy is SIZE-SELECTED like a join strategy: inputs under
     the serial threshold (when the scan size is knowable) emit the plain
     serial window — same semantics, no bookkeeping pass. The threshold is
-    ``serial_below_bytes`` if given, else the session conf
-    ``spark.fineventstream.serialWindowMaxInputBytes`` (default 64 MiB);
-    0 forces the distributed form."""
+    ``serial_below_bytes`` if given, else ``SERIAL_WINDOW_MAX_INPUT_BYTES``
+    (64 MiB); 0 forces the distributed form."""
     ops = {"max": F.max, "min": F.min, "sum": F.sum}
     for name, (kind, _) in prefix_aggs.items():
         if kind not in ops:

@@ -22,11 +22,11 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Default ceiling for the broadcast guard. Deliberately far under Spark's
-# 8 GB hard limit and driver-memory comfort: a compressed-parquet scan of
-# this size decompresses several-fold in the in-memory hash relation.
+# Ceiling for the broadcast guard (maybe_broadcast). Deliberately far
+# under Spark's 8 GB hard limit and driver-memory comfort: a
+# compressed-parquet scan of this size decompresses several-fold in the
+# in-memory hash relation.
 BROADCAST_MAX_INPUT_BYTES = 256 << 20
-BROADCAST_CONF_KEY = "spark.fineventstream.broadcastMaxInputBytes"
 
 
 def scan_input_bytes(df: DataFrame) -> int | None:
@@ -160,7 +160,6 @@ def hot_key_values(
 # 300 MB) with headroom, and is far under any scale where the scan's own
 # split count already fills the cores.
 KERNEL_SPREAD_MAX_INPUT_BYTES = 4 << 30
-KERNEL_SPREAD_CONF_KEY = "spark.fineventstream.kernelSpreadMaxInputBytes"
 
 
 def spread_for_kernel(df: DataFrame, *cols: str) -> DataFrame:
@@ -177,20 +176,14 @@ def spread_for_kernel(df: DataFrame, *cols: str) -> DataFrame:
     A partition-count probe cannot make this call (``.rdd`` sees the
     STATIC shuffle partition number, not AQE's coalesced runtime count),
     so the decision rides the same metadata-only size probe as the
-    broadcast guard: spread while the scan is knowably under the conf
-    ceiling (``spark.fineventstream.kernelSpreadMaxInputBytes``, default
-    4 GiB); unknown or large means the input is lake-scale — skip, the
-    scale-safe default. ``cols`` (optional) keys the repartition,
-    matching the call sites' previous hash-spread behavior at small
-    scale.
+    broadcast guard: spread while the scan is knowably under
+    ``KERNEL_SPREAD_MAX_INPUT_BYTES`` (4 GiB); unknown or large means the
+    input is lake-scale — skip, the scale-safe default. ``cols``
+    (optional) keys the repartition, matching the call sites' previous
+    hash-spread behavior at small scale.
     """
-    max_bytes = int(
-        df.sparkSession.conf.get(
-            KERNEL_SPREAD_CONF_KEY, str(KERNEL_SPREAD_MAX_INPUT_BYTES)
-        )
-    )
     nbytes = scan_input_bytes(df)
-    if nbytes is None or nbytes >= max_bytes:
+    if nbytes is None or nbytes >= KERNEL_SPREAD_MAX_INPUT_BYTES:
         return df
     n_cores = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n_cores, *[F.col(c) for c in cols]) if cols else df.repartition(n_cores)
@@ -216,24 +209,14 @@ def broadcast_else_shuffle_hash(df: DataFrame, max_bytes: int) -> DataFrame:
     return df.hint("SHUFFLE_HASH")
 
 
-def maybe_broadcast(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
+def maybe_broadcast(df: DataFrame) -> DataFrame:
     """``F.broadcast(df)`` only when the scan is knowably small.
 
     Returns ``df`` unhinted when the backing size is unknown or at/over
-    the threshold (``max_bytes`` if given, else the session conf
-    ``spark.fineventstream.broadcastMaxInputBytes``, default 256 MiB) —
-    AQE then chooses the join strategy from runtime stats. 0 disables
-    hinting entirely.
+    ``BROADCAST_MAX_INPUT_BYTES`` (256 MiB) — AQE then chooses the join
+    strategy from runtime stats. 0 disables hinting entirely.
     """
-    if max_bytes is None:
-        max_bytes = int(
-            df.sparkSession.conf.get(
-                BROADCAST_CONF_KEY, str(BROADCAST_MAX_INPUT_BYTES)
-            )
-        )
-    if max_bytes <= 0:
-        return df
     nbytes = scan_input_bytes(df)
-    if nbytes is not None and nbytes < max_bytes:
+    if nbytes is not None and nbytes < BROADCAST_MAX_INPUT_BYTES:
         return F.broadcast(df)
     return df

@@ -915,7 +915,7 @@ def q_report_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     li = bucketed_table(spark, sf_dir, "lineitem")
     od = bucketed_table(spark, sf_dir, "orders")
-    if layout_skew_degenerate(spark, sf_dir, "lineitem"):
+    if layout_skew_degenerate(sf_dir, "lineitem"):
         li, od = t.lineitem, t.orders
     lo = li.select("l_orderkey", "l_suppkey", "l_shipdate").join(
         od.filter(F.col("o_orderstatus") == "F").select(
@@ -1206,7 +1206,7 @@ def q_report_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * 60
         * F.round(F.col("l_quantity")).cast("long")
     )
-    if layout_skew_degenerate(spark, sf_dir, "lineitem"):
+    if layout_skew_degenerate(sf_dir, "lineitem"):
         per_order = (
             bucketed_table(spark, sf_dir, "lineitem", route_skew=True)
             .select(
@@ -1366,7 +1366,7 @@ def q_report_ship_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_shipdate")
     lag = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    if layout_skew_degenerate(spark, sf_dir, "lineitem"):
+    if layout_skew_degenerate(sf_dir, "lineitem"):
         lines = lines.groupBy("l_orderkey", "l_shipdate").agg(
             F.count(F.lit(1)).alias("__cnt")
         )

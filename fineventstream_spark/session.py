@@ -94,6 +94,13 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 4
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """Half of physical memory, capped at 32g, as a ``spark.driver.memory``
+    value in MiB. A fixed 32g heap let one sf0.1 ``bench.py`` sweep grow
+    the driver JVM to 15.5 GB on a 16 GB host, where the kernel killed it."""
+    return f"{min(phys_bytes // 2, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "fineventstream-spark",
     cpus: int | None = None,
@@ -110,7 +117,11 @@ def get_spark(
     """
     cpus = cpus or _default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_memory = (
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    )
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

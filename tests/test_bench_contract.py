@@ -163,3 +163,14 @@ def test_script_imports(path):
         "script_" + os.path.splitext(os.path.basename(path))[0], path
     )
     spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+
+def test_default_driver_memory_is_half_of_ram_capped_at_32g():
+    # a fixed 32g default let a bench.py sweep's driver JVM outgrow a 16 GB
+    # host; half of physical memory leaves the rest to the Python workers
+    from fineventstream_spark.session import default_driver_memory
+
+    assert default_driver_memory(16 << 30) == "8192m"
+    assert default_driver_memory(15_600_000_000) == "7438m"
+    assert default_driver_memory(64 << 30) == "32768m"
+    assert default_driver_memory(1 << 40) == "32768m"

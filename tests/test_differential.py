@@ -4,6 +4,10 @@ names + order-insensitive value multiset).
 
 Rows-only queries (no oracle) are executed and must return a stable,
 non-empty-schema DataFrame without error.
+
+Both checks run twice: on the default profile, where the fixtures take the
+small-data side of every size gate, and on the ``at_scale`` profile
+(conftest.py), where they take the side a lake-sized input would.
 """
 
 from __future__ import annotations
@@ -218,3 +222,13 @@ def test_rows_only_runs(name, spark, sf_dir):
     assert len(df.schema.fields) > 0
     n = df.count()
     assert n >= 0
+
+
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
+def test_oracle_match_at_scale(name, at_scale, spark, duck, sf_dir):
+    test_oracle_match(name, spark, duck, sf_dir)
+
+
+@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
+def test_rows_only_runs_at_scale(name, at_scale, spark, sf_dir):
+    test_rows_only_runs(name, spark, sf_dir)

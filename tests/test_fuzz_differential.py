@@ -825,7 +825,7 @@ def test_fuzz_rolling_equivalence_case(case_id, spark_events, sf_dir):
 
 
 @pytest.mark.parametrize("case_id", range(4))
-def test_fuzz_skew_split_sum_frames_case(case_id, spark_events, sf_dir):
+def test_fuzz_skew_split_sum_frames_case(case_id, spark_events, sf_dir, monkeypatch):
     """Fresh-seed equivalence fuzz of the r10 hot/cold split window
     (skew_split_sum_frames): random frame widths, the SPLIT form (1-byte
     per-partition budget → every key routes through the salted bucketed
@@ -836,10 +836,7 @@ def test_fuzz_skew_split_sum_frames_case(case_id, spark_events, sf_dir):
     from pyspark.sql import functions as F
 
     from fineventstream_spark.catalog import load_table
-    from fineventstream_spark.operators.rolling import (
-        SERIAL_WINDOW_PARTITION_CONF_KEY,
-        skew_split_sum_frames,
-    )
+    from fineventstream_spark.operators import rolling
 
     rng = random.Random(_SEED_OFFSET + 62_000 + case_id)
     spark = spark_events
@@ -850,14 +847,11 @@ def test_fuzz_skew_split_sum_frames_case(case_id, spark_events, sf_dir):
     frame = rng.choice([2, 3, 4, 7])
 
     def run(budget):
-        spark.conf.set(SERIAL_WINDOW_PARTITION_CONF_KEY, str(budget))
-        try:
-            return skew_split_sum_frames(
-                ev, ["user_id"], ["ts", "event_id"], frame, "cents",
-                out_cols=("ss", "sc", "rs"),
-            )
-        finally:
-            spark.conf.unset(SERIAL_WINDOW_PARTITION_CONF_KEY)
+        monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_PARTITION_BYTES", budget)
+        return rolling.skew_split_sum_frames(
+            ev, ["user_id"], ["ts", "event_id"], frame, "cents",
+            out_cols=("ss", "sc", "rs"),
+        )
 
     plain = run(0)
     split = run(1)

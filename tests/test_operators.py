@@ -580,33 +580,24 @@ def test_exact_percentiles_global_spec_joined_path(spark):
     assert pg.count() == 200
 
 
-def test_spread_for_kernel_size_guard(spark, sf_dir):
+def test_spread_for_kernel_size_guard(spark, sf_dir, monkeypatch):
     """r15 (guide §2.1 — scale-adaptive partitioning): the pre-kernel
     spread repartition fires only while the backing scan is knowably
-    under the conf ceiling. Small local scan → repartition present;
+    under the ceiling. Small local scan → repartition present;
     ceiling forced to 1 byte (simulating a lake-scale scan) → the input
     comes back untouched, no shuffle; non-file-backed input (size
     unknowable) → untouched, the scale-safe default."""
     import os
 
-    from fineventstream_spark.operators.sizing import (
-        KERNEL_SPREAD_CONF_KEY,
-        spread_for_kernel,
-    )
+    from fineventstream_spark.operators import sizing
+    from fineventstream_spark.operators.sizing import spread_for_kernel
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     spread = spread_for_kernel(docs, "doc_id")
     assert "repartitionbyexpression" in spread._jdf.queryExecution().logical().toString().lower()
 
-    old = spark.conf.get(KERNEL_SPREAD_CONF_KEY, None)
-    spark.conf.set(KERNEL_SPREAD_CONF_KEY, "1")
-    try:
-        assert spread_for_kernel(docs, "doc_id") is docs
-    finally:
-        if old is None:
-            spark.conf.unset(KERNEL_SPREAD_CONF_KEY)
-        else:
-            spark.conf.set(KERNEL_SPREAD_CONF_KEY, old)
+    monkeypatch.setattr(sizing, "KERNEL_SPREAD_MAX_INPUT_BYTES", 1)
+    assert spread_for_kernel(docs, "doc_id") is docs
 
     mem = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     assert spread_for_kernel(mem, "doc_id") is mem
@@ -715,60 +706,51 @@ def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     size gate.)"""
     import pytest
 
-    from fineventstream_spark.operators.cluster import CC_LOCAL_CONF_KEY, connected_components
+    from fineventstream_spark.operators import cluster
 
-    spark.conf.set(CC_LOCAL_CONF_KEY, "0")
-    try:
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(60)], "id_a long, id_b long"
-        )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(chain, max_iterations=2).collect()
-    finally:
-        spark.conf.unset(CC_LOCAL_CONF_KEY)
+    monkeypatch.setattr(cluster, "CC_LOCAL_MAX_EDGES", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cluster.connected_components(chain, max_iterations=2).collect()
 
 
-def test_connected_components_long_chain_converges_by_doubling(spark):
+def test_connected_components_long_chain_converges_by_doubling(spark, monkeypatch):
     """Pointer doubling: a 200-node path (diameter 199) must collapse to
     ONE component within the default iteration cap — the verdict-flagged
     failure mode for transitive LSH chains. (Forces the distributed
     route; the local fast path is covered by the route-equivalence test.)"""
     import warnings
 
-    from fineventstream_spark.operators.cluster import CC_LOCAL_CONF_KEY, connected_components
+    from fineventstream_spark.operators import cluster
 
-    spark.conf.set(CC_LOCAL_CONF_KEY, "0")
-    try:
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(199)], "id_a long, id_b long"
-        )
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            comps = connected_components(chain).collect()
-        assert not any("did not converge" in str(x.message) for x in w)
-        assert {r.component for r in comps} == {0}
-        assert len(comps) == 200
-    finally:
-        spark.conf.unset(CC_LOCAL_CONF_KEY)
+    monkeypatch.setattr(cluster, "CC_LOCAL_MAX_EDGES", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)], "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        comps = cluster.connected_components(chain).collect()
+    assert not any("did not converge" in str(x.message) for x in w)
+    assert {r.component for r in comps} == {0}
+    assert len(comps) == 200
 
 
-def test_connected_components_route_equivalence(spark):
+def test_connected_components_route_equivalence(spark, monkeypatch):
     """r13 size-selection: the driver union-find fast path and the
     distributed pointer-doubling loop must return the IDENTICAL
     (id, min-reachable-id) mapping on chains, cliques, self-loops and
     isolated pairs — the gate is a physical-strategy choice only."""
-    from fineventstream_spark.operators.cluster import CC_LOCAL_CONF_KEY, connected_components
+    from fineventstream_spark.operators import cluster
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (7, 7), (20, 21), (21, 20), (5, 4)],
         "id_a long, id_b long",
     )
-    local = {(r.id, r.component) for r in connected_components(pairs).collect()}
-    spark.conf.set(CC_LOCAL_CONF_KEY, "0")
-    try:
-        dist = {(r.id, r.component) for r in connected_components(pairs).collect()}
-    finally:
-        spark.conf.unset(CC_LOCAL_CONF_KEY)
+    local = {(r.id, r.component) for r in cluster.connected_components(pairs).collect()}
+    monkeypatch.setattr(cluster, "CC_LOCAL_MAX_EDGES", 0)
+    dist = {(r.id, r.component) for r in cluster.connected_components(pairs).collect()}
     assert local == dist
     assert dict(local) == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10,
                            7: 7, 20: 20, 21: 20}
@@ -1382,17 +1364,15 @@ def test_theta_overlap_exact_below_k(spark, sf_dir, monkeypatch):
             ), (day, p, a)
 
 
-def test_serial_window_ok_routes_on_hot_key(spark, tmp_path):
+def test_serial_window_ok_routes_on_hot_key(spark, tmp_path, monkeypatch):
     """r10 (r9 verdict ask #2): the serial-vs-distributed window selection
     must key on MAX-PARTITION size, not just total size — a
     skewed-but-small input (under the serial threshold, one hot key) used
     to take the serial path and funnel the hot key through one task. The
     hottest-key share probe routes it distributed; the same-sized even
-    input stays serial; conf <= 0 disables the probe (r9 behavior)."""
-    from fineventstream_spark.operators.rolling import (
-        SERIAL_WINDOW_PARTITION_CONF_KEY,
-        serial_window_ok,
-    )
+    input stays serial; a budget <= 0 disables the probe (r9 behavior)."""
+    from fineventstream_spark.operators import rolling
+    from fineventstream_spark.operators.rolling import serial_window_ok
 
     def write(df, sub):
         p = str(tmp_path / sub)
@@ -1412,15 +1392,12 @@ def test_serial_window_ok_routes_on_hot_key(spark, tmp_path):
         "hot",
     )
     # tighten the per-partition budget so the ~MB fixture can trip it
-    spark.conf.set(SERIAL_WINDOW_PARTITION_CONF_KEY, str(256 << 10))
-    try:
-        assert serial_window_ok(even, ["k"]), "even small input must stay serial"
-        assert not serial_window_ok(hot, ["k"]), "hot-keyed input must go distributed"
-        # probe disabled → r9 total-bytes-only behavior
-        spark.conf.set(SERIAL_WINDOW_PARTITION_CONF_KEY, "0")
-        assert serial_window_ok(hot, ["k"])
-    finally:
-        spark.conf.unset(SERIAL_WINDOW_PARTITION_CONF_KEY)
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_PARTITION_BYTES", 256 << 10)
+    assert serial_window_ok(even, ["k"]), "even small input must stay serial"
+    assert not serial_window_ok(hot, ["k"]), "hot-keyed input must go distributed"
+    # probe disabled → r9 total-bytes-only behavior
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_PARTITION_BYTES", 0)
+    assert serial_window_ok(hot, ["k"])
 
 
 def test_gap_detection_finds_planted_gaps(spark, tmp_path):
@@ -1494,25 +1471,20 @@ def test_gap_detection_finds_planted_gaps(spark, tmp_path):
     assert {r[0] for r in got} == {"A", "C"}, f"wrong symbols fired: {got}"
 
 
-def test_win_frame_rows_paths_identical(spark, sf_dir):
+def test_win_frame_rows_paths_identical(spark, sf_dir, monkeypatch):
     """q_win_frame_rows' two physical forms (plain window vs hot/cold
     split with the bucketed single-pass hot branch) must return identical
     values — the integer-cents formulation makes both sums
     order-independent, so the skew router can switch freely without
     touching the oracle hash. A 1-byte per-partition budget makes EVERY
     key hot, forcing the whole input through the bucketed branch."""
-    from fineventstream_spark.operators.rolling import (
-        SERIAL_WINDOW_PARTITION_CONF_KEY,
-    )
+    from fineventstream_spark.operators import rolling
     from fineventstream_spark.registry import all_queries
 
     q = all_queries()["q_win_frame_rows"].fn
     plain = sorted(map(tuple, q(spark, sf_dir).collect()))
-    spark.conf.set(SERIAL_WINDOW_PARTITION_CONF_KEY, "1")
-    try:
-        split = sorted(map(tuple, q(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset(SERIAL_WINDOW_PARTITION_CONF_KEY)
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_PARTITION_BYTES", 1)
+    split = sorted(map(tuple, q(spark, sf_dir).collect()))
     assert plain == split
 
 
@@ -1844,32 +1816,31 @@ def test_heavy_hitters_exact_verify_kills_false_positives(spark, sf_dir):
     assert got == exact
 
 
-def test_heavy_hitters_route_equivalence(spark, sf_dir):
+def test_heavy_hitters_route_equivalence(spark, sf_dir, monkeypatch):
     """r13 size-selection: the exact-groupBy route (small scans) and the
     Misra-Gries candidate route (large/unknowable scans) must return the
     IDENTICAL heavy-hitter set — the dispatch is a physical-strategy
-    choice, never a semantics choice. Forced both ways via the explicit
-    threshold override."""
+    choice, never a semantics choice. Forced both ways by patching the
+    threshold."""
     from pyspark.sql import functions as F
 
     from fineventstream_spark.catalog import Tables
+    from fineventstream_spark.operators import frequent
     from fineventstream_spark.operators.frequent import phi_heavy_hitters
 
     t = Tables(spark, sf_dir)
     b = t.events.where(F.col("value").isNotNull()).select(
         F.floor("value").cast("bigint").alias("bucket")
     )
+    monkeypatch.setattr(frequent, "PHI_EXACT_MAX_INPUT_BYTES", 1 << 60)
     exact_route = {
         (r.bucket, r.n_events, r.n_total)
-        for r in phi_heavy_hitters(
-            b, "bucket", phi=0.01, exact_below_bytes=1 << 60
-        ).collect()
+        for r in phi_heavy_hitters(b, "bucket", phi=0.01).collect()
     }
+    monkeypatch.setattr(frequent, "PHI_EXACT_MAX_INPUT_BYTES", 0)
     mg_route = {
         (r.bucket, r.n_events, r.n_total)
-        for r in phi_heavy_hitters(
-            b, "bucket", phi=0.01, exact_below_bytes=0
-        ).collect()
+        for r in phi_heavy_hitters(b, "bucket", phi=0.01).collect()
     }
     assert exact_route == mg_route and exact_route
 
@@ -1979,8 +1950,8 @@ def test_distributed_lag_matches_serial_window(spark):
     assert g == e
 
 
-def test_asof_distributed_fill_matches_serial(spark, tmp_path):
-    """The size-selected struct-max fill (forced via conf threshold 0)
+def test_asof_distributed_fill_matches_serial(spark, tmp_path, monkeypatch):
+    """The size-selected struct-max fill (forced via serial threshold 0)
     must reproduce the serial window fill exactly: backward-inclusive
     ties, present-but-NULL right values shadowing older rows, tolerance
     masking, and null before the first right row. The inputs are written
@@ -1988,8 +1959,8 @@ def test_asof_distributed_fill_matches_serial(spark, tmp_path):
     in-memory relations have unknown size and default to distributed."""
     import random
 
+    from fineventstream_spark.operators import rolling
     from fineventstream_spark.operators.asof import asof_join
-    from fineventstream_spark.operators.rolling import SERIAL_WINDOW_CONF_KEY
 
     rng = random.Random(11)
     spark.createDataFrame(
@@ -2020,11 +1991,9 @@ def test_asof_distributed_fill_matches_serial(spark, tmp_path):
 
     for tol in (None, "1 minute"):
         serial = run(tol)  # tiny file-backed input → serial window
-        spark.conf.set(SERIAL_WINDOW_CONF_KEY, "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", 0)
             dist = run(tol)  # forced distributed struct-max
-        finally:
-            spark.conf.unset(SERIAL_WINDOW_CONF_KEY)
         assert serial == dist, f"tolerance={tol}"
 
 

@@ -10,6 +10,7 @@ broadcast joins for dims, per-partition heaps for top-k, and partial
 from __future__ import annotations
 
 import pytest
+from conftest import AT_SCALE
 
 from fineventstream_spark.registry import all_queries
 
@@ -91,13 +92,14 @@ def test_bm25_explode_filters_early_and_topk_no_sort(spark, sf_dir):
         )
 
 
-def test_maybe_broadcast_guards_on_scan_size(spark, sf_dir):
+def test_maybe_broadcast_guards_on_scan_size(spark, sf_dir, monkeypatch):
     """The general dim-join rule (sizing.py): hint only what is knowably
     small. Small file scan → hinted; threshold 0 → never; in-memory
     relation (size unknowable) → never (AQE decides)."""
     from pyspark.sql import functions as F
 
     from fineventstream_spark.catalog import Tables
+    from fineventstream_spark.operators import sizing
     from fineventstream_spark.operators.sizing import maybe_broadcast, scan_input_bytes
 
     t = Tables(spark, sf_dir)
@@ -110,14 +112,16 @@ def test_maybe_broadcast_guards_on_scan_size(spark, sf_dir):
         hinted._jdf.queryExecution(), "formatted"
     )
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # threshold 0 disables hinting entirely
-    assert maybe_broadcast(t.nation, max_bytes=0) is t.nation
-    # over-threshold scan stays unhinted
-    assert maybe_broadcast(t.orders, max_bytes=1) is t.orders
     # in-memory relation: size unknowable → unhinted
     mem = spark.range(5)
     assert scan_input_bytes(mem) is None
     assert maybe_broadcast(mem) is mem
+    # over-threshold scan stays unhinted
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_INPUT_BYTES", 1)
+    assert maybe_broadcast(t.orders) is t.orders
+    # threshold 0 disables hinting entirely
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_INPUT_BYTES", 0)
+    assert maybe_broadcast(t.nation) is t.nation
 
 
 def test_range_join_broadcasts_small_side(spark, sf_dir):
@@ -266,23 +270,20 @@ def test_order_priority_single_tiny_shuffle(spark, sf_dir):
     assert "LeftSemi" in plan
 
 
-def test_heavy_hitters_candidate_broadcast_shape(spark, sf_dir):
+def test_heavy_hitters_candidate_broadcast_shape(spark, sf_dir, monkeypatch):
     """q_event_heavy_hitters is SIZE-SELECTED since r13: at lint scale
     the scan routes to the plain exact groupBy (no Python pass). Forcing
-    the large-scan route (conf threshold 0) must produce the MG shape:
+    the large-scan route (threshold 0) must produce the MG shape:
     a shuffle-free MapInPandas candidate pass whose candidate set
     BROADCASTS into the exact verify — every shuffle exchange
     candidate- or scalar-sized, never domain-sized."""
-    from fineventstream_spark.operators.frequent import PHI_EXACT_CONF_KEY
+    from fineventstream_spark.operators import frequent
 
     plan = _plan(spark, sf_dir, "q_event_heavy_hitters")
     assert "MapInPandas" not in plan, "small scan must take the exact route"
 
-    spark.conf.set(PHI_EXACT_CONF_KEY, "0")
-    try:
-        plan = _plan(spark, sf_dir, "q_event_heavy_hitters")
-    finally:
-        spark.conf.unset(PHI_EXACT_CONF_KEY)
+    monkeypatch.setattr(frequent, "PHI_EXACT_MAX_INPUT_BYTES", 0)
+    plan = _plan(spark, sf_dir, "q_event_heavy_hitters")
     assert "MapInPandas" in plan, "candidate pass missing on the MG route"
     assert "BroadcastHashJoin" in plan, "candidates must broadcast into the verify"
     # candidate distinct + candidate-bounded count + scalar total only
@@ -674,26 +675,23 @@ def test_numbering_join_partitions_on_key_and_bucket(spark):
     )
 
 
-def test_rolling_zscore_chunked_parallelism(spark, sf_dir):
+def test_rolling_zscore_chunked_parallelism(spark, sf_dir, monkeypatch):
     """Size-selected since r7: at test-fixture scale the rolling frame
     evaluates as the plain per-key window (no numbering machinery for
-    data that sorts in one task). Forced chunked (conf threshold 0 — the
+    data that sorts in one task). Forced chunked (threshold 0 — the
     ≥64 MiB shape), the heavy frame pass must partition by
     (symbol, chunk) — not by symbol alone — with mean/stddev/count
     sharing a single Window node; the numbering pass is value-bucketed
     and the only per-key window runs over the tiny (key, bucket) counts
     table. Exactly three Window nodes: counts prefix-sum, local
     numbering, chunked frame."""
-    from fineventstream_spark.operators.rolling import SERIAL_WINDOW_CONF_KEY
+    from fineventstream_spark.operators import rolling
 
     plan = _plan(spark, sf_dir, "q_event_rolling_zscore")
     assert "__chunk" not in plan, "tiny input should take the serial window"
 
-    spark.conf.set(SERIAL_WINDOW_CONF_KEY, "0")
-    try:
-        plan = _plan(spark, sf_dir, "q_event_rolling_zscore")
-    finally:
-        spark.conf.unset(SERIAL_WINDOW_CONF_KEY)
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", 0)
+    plan = _plan(spark, sf_dir, "q_event_rolling_zscore")
     assert "hashpartitioning(event_type#" in plan, "counts prefix-sum window missing"
     assert "__bkt" in plan, "numbering pass is not value-bucketed"
     assert "__chunk" in plan, "frame pass is not chunk-partitioned"
@@ -851,12 +849,12 @@ def test_nested_scan_prunes_struct_fields(spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", ["q_event_drawdown", "q_event_volatility"])
-def test_risk_stats_distributed_scan_shape(spark, sf_dir, name):
+def test_risk_stats_distributed_scan_shape(spark, sf_dir, name, monkeypatch):
     """Drawdown and realized volatility (r7 rewrite): the running
     max / return lag evaluates through the SIZE-SELECTED prefix/lag.
     Below the serial threshold (all test fixtures) the plan is the plain
     per-symbol window — no bookkeeping machinery for data that sorts in
-    one task anyway. Forced distributed (conf threshold 0, the ≥64 MiB
+    one task anyway. Forced distributed (threshold 0, the ≥64 MiB
     shape), the fact's window partitions on the FULL (event_type, __bkt)
     cluster keys, the bookkeeping offsets BROADCAST back (no
     co-partitioned join to collapse), and no sort goes global. The r5
@@ -864,7 +862,7 @@ def test_risk_stats_distributed_scan_shape(spark, sf_dir, name):
     serialized each symbol's full timeline into one task at every sf."""
     import re
 
-    from fineventstream_spark.operators.rolling import SERIAL_WINDOW_CONF_KEY
+    from fineventstream_spark.operators import rolling
 
     # small input → serial window, zero extra machinery
     plan = _plan(spark, sf_dir, name)
@@ -874,11 +872,8 @@ def test_risk_stats_distributed_scan_shape(spark, sf_dir, name):
     assert "__bkt" not in plan
 
     # forced distributed → keys × buckets parallelism
-    spark.conf.set(SERIAL_WINDOW_CONF_KEY, "0")
-    try:
-        plan = _plan(spark, sf_dir, name)
-    finally:
-        spark.conf.unset(SERIAL_WINDOW_CONF_KEY)
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", 0)
+    plan = _plan(spark, sf_dir, name)
     assert "BroadcastHashJoin" in plan, f"{name}: offsets must broadcast\n{plan}"
     assert "rangepartitioning" not in plan
     parts = set(re.findall(r"hashpartitioning\([^)]*\)", plan))
@@ -1123,12 +1118,12 @@ def test_enrich_priority_join_is_colocated(spark, sf_dir):
     assert n == 1, f"expected exactly the post-agg exchange, found {n}:\n{plan[:1500]}"
 
 
-def test_report_skew_variants_equivalent_and_shaped(spark, tmp_path):
+def test_report_skew_variants_equivalent_and_shaped(spark, tmp_path, monkeypatch):
     """r11 (verdict #2): Q12-split and Q9 switch to pre-aggregate-before-
     join plan shapes when the orderkey layout group is recorded skew-
     degenerate. Pin on a 35%-hot mini-fixture:
 
-    - both branches (forced via the routing-threshold conf) return
+    - both branches (forced via the routing threshold) return
       IDENTICAL rows — bit-exact since the r11 integer-unit rewrite of
       Q9's profit sum (summation-order-proof on both branches);
     - the Q12 skew plan pre-aggregates on (l_orderkey, l_shipdate)
@@ -1143,10 +1138,8 @@ def test_report_skew_variants_equivalent_and_shaped(spark, tmp_path):
 
     from tests.test_operators import _skewed_sf_fixture
 
-    from fineventstream_spark.operators.bucketed import (
-        SKEW_ROUTE_CONF_KEY,
-        layout_skew_degenerate,
-    )
+    from fineventstream_spark.operators import bucketed
+    from fineventstream_spark.operators.bucketed import layout_skew_degenerate
     from fineventstream_spark.queries.reports import (
         q_report_product_profit,
         q_report_ship_priority_split,
@@ -1154,32 +1147,29 @@ def test_report_skew_variants_equivalent_and_shaped(spark, tmp_path):
 
     sf = _skewed_sf_fixture(tmp_path)
 
-    def run(q, threshold: str):
-        prev = _scoped_confs(spark, {SKEW_ROUTE_CONF_KEY: threshold})
-        try:
-            with _w.catch_warnings():
-                _w.simplefilter("ignore")  # layout self-report, expected
-                df = q(spark, sf)
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                rows = sorted(map(tuple, df.collect()))
-            return rows, plan
-        finally:
-            _restore_confs(spark, prev)
+    def run(q, threshold: float):
+        with monkeypatch.context() as m, _w.catch_warnings():
+            m.setattr(bucketed, "SKEW_RATIO_THRESHOLD", threshold)
+            _w.simplefilter("ignore")  # layout self-report, expected
+            df = q(spark, sf)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            rows = sorted(map(tuple, df.collect()))
+        return rows, plan
 
-    # "0" disables routing/skew-branching entirely -> baseline plan
-    base12, plan12_base = run(q_report_ship_priority_split, "0")
-    skew12, plan12_skew = run(q_report_ship_priority_split, "4.0")
+    # 0 disables routing/skew-branching entirely -> baseline plan
+    base12, plan12_base = run(q_report_ship_priority_split, 0.0)
+    skew12, plan12_skew = run(q_report_ship_priority_split, 4.0)
     with _w.catch_warnings():
         _w.simplefilter("ignore")
-        assert layout_skew_degenerate(spark, sf, "lineitem")
+        assert layout_skew_degenerate(sf, "lineitem")
     assert base12 == skew12
     assert "l_shipdate" in plan12_skew and "HashAggregate" in plan12_skew
     assert plan12_skew.count("Exchange") == plan12_base.count("Exchange"), (
         "Q12 pre-agg must ride the bucket distribution, not add an exchange"
     )
 
-    base9, _ = run(q_report_product_profit, "0")
-    skew9, plan9_skew = run(q_report_product_profit, "4.0")
+    base9, _ = run(q_report_product_profit, 0.0)
+    skew9, plan9_skew = run(q_report_product_profit, 4.0)
     assert base9 == skew9, "integer-unit profit must be branch-bit-identical"
     assert "l_orderkey" in plan9_skew and "n_name" in plan9_skew
     # the skew branch reads the plain parquet, not the bucketed derivative
@@ -1344,3 +1334,41 @@ def test_events_user_layout_agg_consumers_tiny_shuffle(spark, sf_dir):
         assert "Bucketed: true" in plan, f"{name} does not read the layout:\n{plan}"
         n = _shuffle_exchanges(plan)
         assert n <= max_ex, f"{name} shuffles ({n}) > {max_ex}:\n{plan}"
+
+
+# One registered query per size gate whose optimized plan the gate's
+# at-scale value moves at fixture scale.
+GATE_PROBES = {
+    "SERIAL_WINDOW_MAX_INPUT_BYTES": "q_event_rolling_zscore",
+    "SERIAL_WINDOW_MAX_PARTITION_BYTES": "q_win_frame_rows",
+    "BROADCAST_MAX_INPUT_BYTES": "q_report_market_share",
+    "KERNEL_SPREAD_MAX_INPUT_BYTES": "q_llm_substring_dedup",
+    "SKEW_RATIO_THRESHOLD": "q_report_ship_priority_split",
+    "CC_LOCAL_MAX_EDGES": "q_llm_dedup_cluster",
+    "PHI_EXACT_MAX_INPUT_BYTES": "q_event_heavy_hitters",
+}
+
+
+def _optimized_plan(spark, sf_dir, name: str) -> str:
+    import re
+
+    df = REGISTRY[name].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?|plan_id=\d+", "#", plan)
+    return re.sub(r"(lambda \w+?)_\d+", r"\1", plan)
+
+
+@pytest.mark.parametrize("target", AT_SCALE, ids=lambda t: t.rsplit(".", 1)[1])
+def test_at_scale_profile_reaches_gate(target, spark, sf_dir, monkeypatch):
+    """Each gate's at-scale value alone moves its probe query's plan, so
+    the ``at_scale`` profile really runs the registry on the other side
+    of every gate."""
+    import warnings
+
+    name = GATE_PROBES[target.rsplit(".", 1)[1]]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # skew-degenerate layout self-report
+        default = _optimized_plan(spark, sf_dir, name)
+        monkeypatch.setattr(target, AT_SCALE[target])
+        at_scale = _optimized_plan(spark, sf_dir, name)
+    assert at_scale != default, f"{target} does not reach {name}'s plan"
