@@ -1,59 +1,25 @@
-"""Chunked rolling-window evaluation for low-cardinality keys.
+"""Size-selected window operators for low-cardinality keys.
 
-A ROWS-frame window partitioned by key serializes each key into one
-task: with 5 symbols, a 1000-core cluster runs 5 tasks. That is fine
-when key cardinality exceeds cores (the usual 100 TB case) and fatal
-when a lake has few, huge keys (index-level series, a handful of
-benchmark tickers).
+A window partitioned by key serializes each key into one task: with 5
+symbols, a 1000-core cluster runs 5 tasks. That is fine when key
+cardinality exceeds cores and fatal when a lake has few, huge keys
+(index-level series, a handful of benchmark tickers).
 
-The fix is the classic overlap-chunk decomposition: split each key's
-timeline into fixed-width row chunks, REPLICATE the trailing
-``frame - 1`` rows of chunk *c* into chunk *c+1* as carry-in context,
-then evaluate the frame inside each (key, chunk) partition. Rows keep
-their full trailing frame — carried rows contribute to frames but emit
-no output — so results are bit-identical to the single-partition window
-while parallelism becomes keys × chunks.
-
-Numbering is itself distributed (the round-3 design ran it as a plain
-per-key ``row_number`` window — the very serialization being escaped;
-each key's full history flowed through ONE task before chunking). The
-replacement derives a coarse monotone bucket from the ORDER-COLUMN
-VALUES (equi-width between the column's in-plan min/max — a
-deterministic expression of the row, so retried tasks and separate plan
-branches always agree; a ``spark_partition_id``-based scheme does NOT
+The operators here split each key's timeline into ``__bkt`` buckets
+derived from the first ORDER-COLUMN VALUE (equi-width between its min
+and max — a deterministic expression of the row, so retried tasks and
+separate plan branches agree; a ``spark_partition_id`` scheme does not
 survive AQE, which may coalesce the same exchange differently per
-consumer), then:
+consumer). Per-(key, bucket) partials form a keys × buckets bookkeeping
+table whose exclusive per-key prefix broadcasts back as each bucket's
+carry-in, so the payload sorts once at keys × buckets parallelism.
+Bucket skew costs parallelism, never exactness.
 
-1. per-(key, bucket) row counts — a keys × buckets bookkeeping table;
-2. exclusive prefix sums over that tiny table give each bucket's exact
-   starting offset within its key (the only per-key-serialized window,
-   and it holds counts, not rows);
-3. a local ``row_number`` within (key, bucket) plus the joined-back
-   offset (broadcast-sized) reconstructs the exact global per-key row
-   number at keys × buckets parallelism with ONE payload shuffle —
-   the same shuffle count as the serial design.
-
-Bucket skew degrades only parallelism, never correctness: offsets are
-exact counts, so ``__rn`` is identical to the serial pass (ties on the
-order columns may renumber among themselves — the same nondeterminism a
-plain window has) and chunk membership is unchanged.
-
-CONFIG HAZARD (r7 incident, now structurally closed): the first r7 cut
-ran the payload join as a co-partitioned SMJ on ``(key, __bkt)``; under
-``spark.sql.requireAllClusterKeysForCoPartition=false`` (a NON-default
-a consumer session might set), the bookkeeping side's hash(key)
-partitioning satisfied the join by SUBSET, dragging the payload down to
-key-cardinality parallelism — the exact serialization this operator
-exists to escape (measured: 38.7 s vs 7.7 s at sf10 on the zscore
-query). The offsets side is keys × buckets — bookkeeping-sized under
-this operator's stated contract (key cardinality ≪ rows; a
-high-cardinality caller wants the plain window, which already
-parallelizes) — so it now BROADCASTS into the payload: no
-co-partitioned join exists to collapse, and the fact is sorted once
-(for the numbering window) instead of twice (SMJ sort + window sort).
-The plan test ``test_numbering_join_partitions_on_key_and_bucket``
-still pins the numbering window's exchange to the full ``(key, __bkt)``
-cluster keys.
+Bounded trailing frames are prefix differences (``with_trailing_sums``):
+frame(i) = P(i) − P(i−f) over the running sums, with the earlier prefix
+fetched by an equi-join on (key, row number). That join is
+co-partitioned on both columns; ``session.py``'s r7 note explains why
+``requireAllClusterKeysForCoPartition`` stays at its default (true).
 """
 
 from __future__ import annotations
@@ -148,128 +114,6 @@ def _with_order_bucket(df: DataFrame, order_col: str, n_buckets: int) -> DataFra
     )
 
 
-def with_distributed_row_number(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    out_col: str = "__rn",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Attach a 0-based per-key row number ordered by ``order_cols``,
-    computed at full parallelism even when one key holds most rows.
-
-    Equivalent to ``row_number().over(partitionBy(keys).orderBy(order)) - 1``
-    but never funnels a whole key through a single task: rows are bucketed
-    by value ranges of the first order column, numbered locally within each
-    (key, bucket) slice, and shifted by the exclusive prefix sum of the
-    per-slice counts (a keys × buckets bookkeeping table — broadcast-sized).
-
-    Fully lazy — one plan, no driver round-trips: the bucket boundaries are
-    the order column's in-plan min/max (1-row broadcast), plus one narrow
-    count pass at execution (key/order columns only, map-side partial
-    aggregated)."""
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    bucketed = _with_order_bucket(df, order_cols[0], n_buckets)
-    # keys × buckets rows — bookkeeping scale, not data scale; reads only
-    # the key/order columns (column pruning) and partial-aggregates map-side
-    counts = bucketed.groupBy(*key_cols, "__bkt").agg(F.count(F.lit(1)).alias("__cnt"))
-    off_w = (
-        Window.partitionBy(*key_cols)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        *key_cols,
-        "__bkt",
-        F.coalesce(F.sum("__cnt").over(off_w), F.lit(0)).alias("__off"),
-    )
-    local_w = Window.partitionBy(*key_cols, "__bkt").orderBy(*order_cols)
-    # offsets is keys × buckets (bookkeeping scale under the operator's
-    # low-key-cardinality contract): broadcast it so the payload needs no
-    # join exchange/sort — the numbering window's clusterBy(key, __bkt) is
-    # then the ONLY fact distribution, and there is no co-partitioned join
-    # for subset co-partitioning to collapse (module docstring, r7 hazard)
-    return (
-        bucketed.join(F.broadcast(offsets), [*key_cols, "__bkt"])
-        .withColumn(out_col, F.row_number().over(local_w) - 1 + F.col("__off"))
-        .drop("__bkt", "__off")
-    )
-
-
-def chunked_rolling(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    frame_rows: int,
-    aggs: dict[str, Column],
-    chunk_rows: int = 10_000,
-    serial_below_bytes: int | None = None,
-) -> DataFrame:
-    """Evaluate trailing ``ROWS BETWEEN frame_rows-1 PRECEDING AND CURRENT
-    ROW`` aggregates at keys × chunks parallelism.
-
-    ``aggs`` maps output column name → an aggregate Column built over
-    ``F.col(...)`` inputs (e.g. ``{"m": F.avg("value")}``); each is
-    evaluated ``.over()`` the chunked trailing frame. Results are exactly
-    those of the plain per-key window.
-
-    Physical strategy is SIZE-SELECTED like the prefix/lag operators:
-    below the serial threshold (``serial_below_bytes`` if given, else
-    ``SERIAL_WINDOW_MAX_INPUT_BYTES``, 64 MiB) the plain per-key window
-    evaluates directly — at small inputs the numbering + carry-in
-    machinery costs more than it saves (zscore at sf0.1: 2.3 s chunked
-    vs sub-second serial); 0 forces chunked."""
-    if chunk_rows < frame_rows - 1:
-        raise ValueError(
-            f"chunk_rows ({chunk_rows}) must be >= frame_rows-1 "
-            f"({frame_rows - 1}): a chunk must hold a full carry-in frame"
-        )
-    if serial_window_ok(df, key_cols, serial_below_bytes):
-        w = (
-            Window.partitionBy(*key_cols)
-            .orderBy(*order_cols)
-            .rowsBetween(-(frame_rows - 1), 0)
-        )
-        return df.select(
-            *df.columns, *[expr.over(w).alias(n) for n, expr in aggs.items()]
-        )
-    numbered = with_distributed_row_number(df, key_cols, order_cols, "__rn")
-    numbered = numbered.withColumn("__chunk", (F.col("__rn") / chunk_rows).cast("long"))
-
-    # carry-in: the last frame_rows-1 rows of each chunk ALSO join the next
-    # chunk (emit=false) so its early rows see their full trailing frame.
-    # Built as a conditional explode — a union of (body, tail-filtered) would
-    # duplicate the numbering subtree into both branches and run the narrow
-    # pass twice; the explode keeps it a single pass with a Generate node.
-    own = F.struct(F.col("__chunk").alias("c"), F.lit(True).alias("e"))
-    next_ = F.struct((F.col("__chunk") + 1).alias("c"), F.lit(False).alias("e"))
-    in_tail = (F.col("__rn") % chunk_rows) >= chunk_rows - (frame_rows - 1)
-    unioned = (
-        numbered.select(
-            *df.columns,
-            F.explode(
-                F.when(in_tail, F.array(own, next_)).otherwise(F.array(own))
-            ).alias("__dest"),
-        )
-        .withColumn("__chunk", F.col("__dest.c"))
-        .withColumn("__emit", F.col("__dest.e"))
-    )
-
-    w = (
-        Window.partitionBy(*key_cols, "__chunk")
-        .orderBy(*order_cols)
-        .rowsBetween(-(frame_rows - 1), 0)
-    )
-    out = unioned.select(
-        *df.columns,
-        "__emit",
-        *[expr.over(w).alias(name) for name, expr in aggs.items()],
-    )
-    return out.filter(F.col("__emit")).drop("__emit")
-
-
 # Below this input size the two-level machinery (bookkeeping aggregate +
 # broadcast + merge) costs more than it saves: the whole input sorts in a
 # handful of tasks anyway. Measured crossover on the events ladder:
@@ -303,11 +147,10 @@ def serial_window_ok(
     strategy for ``df``: input knowably under the serial threshold AND no
     single ``key_cols`` partition estimated past the per-partition budget.
     The routing decision behind every size-selected operator in this
-    module; exposed so a query composing several of them (e.g.
-    q_win_frame_rows: chunked frame + distributed prefix) can decide ONCE
-    on its file-backed source and force both stages the same way —
-    intermediate DataFrames are not file-backed, so letting each stage
-    re-probe would mis-route the later ones to distributed at toy scale."""
+    module; ``with_trailing_sums`` decides ONCE on its file-backed input
+    and forces its running-sum stage the same way — intermediate
+    DataFrames are not file-backed, so letting a later stage re-probe
+    would mis-route it to distributed at toy scale."""
     threshold = (
         SERIAL_WINDOW_MAX_INPUT_BYTES
         if serial_below_bytes is None
@@ -428,7 +271,12 @@ def skew_split_sum_frames(
     Scale: at most scan_bytes/budget keys can be hot, so the hot list
     always fits an isin literal; the bookkeeping is hot-keys × buckets
     rows; the payload pays exactly one exchange + one sort, same as the
-    plain window."""
+    plain window.
+
+    It stays beside ``with_trailing_sums`` because that operator's
+    (key, row number) lookup join would make every cold key pay a second
+    fact-sized exchange, machinery the cold keys must never pay
+    (BASELINE.md:863: 13.8 s, machinery 10× the straggler it removes)."""
     spark = df.sparkSession
     budget = SERIAL_WINDOW_MAX_PARTITION_BYTES
     slide_sum, slide_cnt, run_sum = out_cols
@@ -582,10 +430,9 @@ def with_distributed_prefix(
     serial_below_bytes: int | None = None,
 ) -> DataFrame:
     """Running (UNBOUNDED PRECEDING) aggregates at keys × buckets
-    parallelism — the distributed prefix scan completing the chunked
-    family: ``chunked_rolling`` covers bounded trailing frames, this
-    covers the unbounded ones (running max/min/sum: drawdown peaks,
-    cumulative volume, high-water marks).
+    parallelism: drawdown peaks, cumulative volume, high-water marks,
+    and (as prefix differences) the bounded trailing sums of
+    ``with_trailing_sums``.
 
     ``prefix_aggs`` maps output name → ("max" | "min" | "sum", value_col).
     Decomposition: rows bucket by order-column value ranges (monotone, so
@@ -658,6 +505,67 @@ def with_distributed_prefix(
             ).otherwise(F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0)))
         out = out.withColumn(name, merged)
     return out.drop("__bkt", *[f"__o_{n}" for n in prefix_aggs])
+
+
+def with_trailing_sums(
+    df: DataFrame,
+    key_cols: list[str],
+    order_cols: list[str],
+    frame_rows: int,
+    sum_cols: dict[str, str],
+    n_col: str = "__n",
+) -> DataFrame:
+    """Trailing ``ROWS BETWEEN frame_rows-1 PRECEDING AND CURRENT ROW``
+    sums as prefix differences: frame(i) = P(i) − P(i − frame_rows).
+
+    ``sum_cols`` maps output name → a NON-NULL exact (integral or
+    decimal) column; ``n_col`` is the frame's row count,
+    ``least(row number, frame_rows)``. Exact arithmetic makes the
+    difference bit-identical to the plain sliding window, which
+    re-aggregates the whole frame for every row (Spark's
+    SlidingWindowFunctionFrame, O(rows × frame)); here every row costs
+    O(1) whatever the frame width.
+
+    Strategy is size-selected like the other operators here. Serial: one
+    running window, then ``lag(·, frame_rows)`` over the same spec — one
+    exchange and one sort. Distributed: one ``with_distributed_prefix``
+    pass (row number included), then a left equi-join on (key, row
+    number) against the same rows shifted by ``frame_rows``; the pair is
+    unique, so the join spreads evenly however few keys there are."""
+    base = df.withColumn("__one", F.lit(1))
+    sums = {"__rn": "__one", **{f"__p_{n}": c for n, c in sum_cols.items()}}
+    back_of = {f"__p_{n}": f"__b_{n}" for n in sum_cols}
+    if serial_window_ok(df, key_cols):
+        w = Window.partitionBy(*key_cols).orderBy(*order_cols)
+        run_w = w.rowsBetween(Window.unboundedPreceding, 0)
+        running = base.select(
+            *df.columns, *[F.sum(c).over(run_w).alias(p) for p, c in sums.items()]
+        )
+        back = running.select(
+            "*", *[F.lag(p, frame_rows).over(w).alias(b) for p, b in back_of.items()]
+        )
+    else:
+        running = with_distributed_prefix(
+            base,
+            key_cols,
+            order_cols,
+            {p: ("sum", c) for p, c in sums.items()},
+            serial_below_bytes=0,
+        ).drop("__one")
+        shifted = running.select(
+            *key_cols,
+            (F.col("__rn") + frame_rows).alias("__rn"),
+            *[F.col(p).alias(b) for p, b in back_of.items()],
+        )
+        back = running.join(shifted, [*key_cols, "__rn"], "left")
+    return back.select(
+        *df.columns,
+        *[
+            (F.col(f"__p_{n}") - F.coalesce(f"__b_{n}", F.lit(0))).alias(n)
+            for n in sum_cols
+        ],
+        F.least("__rn", F.lit(frame_rows)).alias(n_col),
+    )
 
 
 def with_distributed_lag(

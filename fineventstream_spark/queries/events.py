@@ -541,38 +541,46 @@ def q_event_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score per tick: each value standardized against its own
     trailing 100-tick window (warm-up ticks with <30 observations are
     suppressed, so early unstable scores never surface). The alerting
-    primitive for live anomaly feeds. Plan: a plain per-symbol window
-    serializes each symbol into ONE task — with few symbols, a
-    1000-core cluster idles. The frame therefore evaluates through
-    operators/rolling.py::chunked_rolling: a cheap narrow numbering
-    pass, then the trailing frame computed inside (symbol, chunk)
-    partitions with the previous chunk's last 99 rows replicated as
-    carry-in — bit-identical results (the DuckDB oracle is the plain
-    window) at symbols x chunks parallelism. mean/stddev/count still
-    share one Window node in the heavy pass."""
-    from fineventstream_spark.operators.rolling import chunked_rolling
+    primitive for live anomaly feeds.
+
+    Plan: the frame's count, Σc and Σc² over exact cents
+    ``c`` (decimal(38,0), so no overflow bound to check) are prefix
+    differences (operators/rolling.py::with_trailing_sums) — O(1) per
+    row where a sliding frame re-aggregates 100 rows, and a few symbols
+    still spread over keys × buckets tasks at scale. With k non-null
+    values in the frame, z = (k·c − Σc) / sqrt(k·(k·Σc² − (Σc)²) / (k − 1)).
+    NULL values are skipped as AVG/STDDEV_SAMP skip them, while the ≥30
+    gate counts rows, as COUNT(*) does."""
+    from fineventstream_spark.operators.rolling import with_trailing_sums
+    from fineventstream_spark.queries._money import cents
 
     t = Tables(spark, sf_dir)
-    rolled = chunked_rolling(
-        t.events.select("event_id", "event_type", "value", F.unix_micros("ts").alias("__us")),
-        key_cols=["event_type"],
-        order_cols=["__us", "event_id"],
-        frame_rows=100,
-        aggs={
-            "__m": F.avg("value"),
-            "__s": F.stddev_samp("value"),
-            "__n": F.count("*"),
-        },
-        chunk_rows=4096,
-    )
-    return (
-        rolled.filter(F.col("__n") >= 30)
-        .select(
+    c = cents("value").cast("decimal(38,0)")
+    rolled = with_trailing_sums(
+        t.events.select(
             "event_id",
             "event_type",
             "value",
-            F.round((F.col("value") - F.col("__m")) / F.col("__s"), 4).alias("z"),
-        )
+            F.unix_micros("ts").alias("__us"),
+            c.alias("__c"),
+            F.coalesce(c, F.lit(0)).alias("__c1"),
+            F.coalesce(c * c, F.lit(0)).alias("__c2"),
+            c.isNotNull().cast("int").alias("__ck"),
+        ),
+        key_cols=["event_type"],
+        order_cols=["__us", "event_id"],
+        frame_rows=100,
+        sum_cols={"__s1": "__c1", "__s2": "__c2", "__k": "__ck"},
+    )
+    # z = k·(c − mean) / (k·sd), both factors from exact integers
+    k, s1 = F.col("__k"), F.col("__s1")
+    k2_var = (k * F.col("__s2") - s1 * s1).cast("double")  # k·(k−1)·var
+    k_sd = F.when(k > 1, F.sqrt(k2_var * k / (k - 1)))
+    return rolled.filter(F.col("__n") >= 30).select(
+        "event_id",
+        "event_type",
+        "value",
+        F.round((k * F.col("__c") - s1).cast("double") / k_sd, 4).alias("z"),
     )
 
 

@@ -4,10 +4,10 @@ n-gram Jaccard / embedding-cosine), similarity search (brute-force + IVF),
 text analysis (lang-ID, quality, tokens, fingerprint), multimodal
 plumbing.
 
-Everything arithmetic is oracle-checked. Since r11 the near-dup family
-is hash-green too (boolean-gate pattern: DuckDB-oracled planted counts +
-a hash-checked recall_ok); only the multimodal decoders remain rows-only
-(planted_ok self-certification, no DuckDB twin by design).
+Every query here has a DuckDB oracle. The near-dup family is hash-green
+through the boolean-gate pattern (DuckDB-oracled planted counts + a
+hash-checked recall_ok), and the multimodal decoders are value-oracled
+since r12.
 """
 
 from __future__ import annotations

@@ -111,7 +111,7 @@ def q_win_frame_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     far exceeds cores, so the plain window already parallelizes — the
     straggler is only ever the hot key(s), and only their rows pay the
     bucketed-split machinery; uniform inputs keep the exact r9 plan with
-    zero overhead. (The first r10 cut ran chunked_rolling +
+    zero overhead. (The first r10 cut ran a chunked trailing frame +
     with_distributed_prefix over EVERYTHING above a total-bytes
     threshold: measured 13.8 s on uniform sf10 where the plain window is
     1.35 s — the machinery must never be paid by the cold keys.)

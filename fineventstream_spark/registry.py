@@ -1,8 +1,8 @@
 """Declared-query registry.
 
 Every operator from SURVEY.md §2 is exposed as a named query: a PySpark
-callable ``(spark, sf_dir) -> DataFrame`` plus (where SQL-expressible) a
-DuckDB oracle SQL twin. ``__spark_entry__.py`` and the differential test
+callable ``(spark, sf_dir) -> DataFrame`` plus its DuckDB oracle SQL
+twin. ``__spark_entry__.py`` and the differential test
 suite both read this registry, so there is exactly one source of truth for
 "what the engine claims to support".
 
@@ -27,7 +27,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None = None  # DuckDB ANSI SQL twin; None → rows-only check
+    oracle: str  # DuckDB ANSI SQL twin
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
@@ -114,7 +114,7 @@ if len(set(DRIVER_WINDOW_PRIORITY)) != len(DRIVER_WINDOW_PRIORITY):
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     tags: tuple[str, ...] = (),
     doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:

@@ -65,10 +65,13 @@ SESSION_SQL_CONFS: tuple[tuple[str, str], ...] = (
     # SMJ whose equi-keys widened to (orderkey, nationkey) could reuse
     # the bucket distribution — but globally, the relaxation let joins
     # whose small side is partitioned on a key SUBSET drag the big side
-    # down to that subset's distribution: chunked_rolling's bookkeeping
-    # join (key, __bkt) was satisfied by hash(key) alone, collapsing the
-    # heavy window to key-cardinality parallelism (sf10 measured: 38.7 s
-    # vs 7.7 s — a 5× regression on q_event_rolling_zscore). The one
+    # down to that subset's distribution: the z-score's former (key,
+    # __bkt) bookkeeping join was satisfied by hash(key) alone,
+    # collapsing the heavy window to key-cardinality parallelism (sf10
+    # measured: 38.7 s vs 7.7 s — a 5× regression on
+    # q_event_rolling_zscore). Its co-partitioned join is now on
+    # (key, row number) (rolling.with_trailing_sums), and the default
+    # keeps it hashed on both columns: a few keys, every reducer. The one
     # query that needed the widened-key reuse (Q5) now joins on the
     # bucket key ONLY and applies the second equality as a post-join
     # filter — identical semantics, single-key SMJ, default configs.

@@ -6,7 +6,7 @@ at sf0.1 Spark's constant per-query JVM overhead dominates).
 
 Prints one JSON line mirroring bench.py's shape:
   {"metric": "duckdb_twin_total_sec", "value": N, "queries": {...},
-   "sf": "...", "n_queries": K, "skipped": [names with no oracle]}
+   "sf": "...", "n_queries": K, "skipped": [names not registered]}
 
 Methodology matches bench.py: 32 threads, each query executed to
 completion (fetchall), best-of-reps until the two fastest agree within
@@ -51,7 +51,7 @@ def main() -> None:
     total = 0.0
     for name in names:
         q = registry.get(name)
-        if q is None or not q.oracle:
+        if q is None:
             skipped.append(name)
             continue
         runs: list[float] = []

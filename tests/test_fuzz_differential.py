@@ -770,21 +770,24 @@ def test_fuzz_hash_bridge_case(case_id, spark_two_tables, duck, sf_dir):
 
 
 @pytest.mark.parametrize("case_id", range(6))
-def test_fuzz_rolling_equivalence_case(case_id, spark_events, sf_dir):
+def test_fuzz_rolling_equivalence_case(case_id, spark_events, sf_dir, monkeypatch):
     """Fresh-seed equivalence fuzz of the size-selected rolling family
-    (r8 verdict ask #8): random trailing-frame (chunked_rolling) and
-    running-prefix (with_distributed_prefix) specs over events, the
-    DISTRIBUTED form (threshold 0) vs the SERIAL per-key window
-    (threshold huge) on identical input. The compare is ENGINE-SIDE
-    (row counts + one-sided exceptAll) so the check scales to sf30,
-    where the distributed paths engage naturally; values are exact
-    integer cents, so equality is bit-level, not tolerance-based."""
+    (r8 verdict ask #8): random trailing-frame sums (with_trailing_sums,
+    checked against the plain sliding window too) and running-prefix
+    (with_distributed_prefix) specs over events, the DISTRIBUTED form
+    (threshold 0) vs the SERIAL per-key window (threshold huge) on
+    identical input. The compare is ENGINE-SIDE (row counts + one-sided
+    exceptAll) so the check scales to sf30, where the distributed paths
+    engage naturally; values are exact integer cents, so equality is
+    bit-level, not tolerance-based."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from fineventstream_spark.catalog import load_table
+    from fineventstream_spark.operators import rolling
     from fineventstream_spark.operators.rolling import (
-        chunked_rolling,
         with_distributed_prefix,
+        with_trailing_sums,
     )
 
     rng = random.Random(_SEED_OFFSET + 61_000 + case_id)
@@ -794,17 +797,23 @@ def test_fuzz_rolling_equivalence_case(case_id, spark_events, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     order_cols = ["ts", "event_id"]  # unique total order within a user
+    plain = None
     if rng.random() < 0.5:
-        frame = rng.choice([2, 3, 5, 8, 13])
-        chunk = rng.choice([64, 256, 1024])
-        kind = rng.choice(["sum", "max", "min"])
-        aggs = {"out": {"sum": F.sum, "max": F.max, "min": F.min}[kind]("cents")}
+        frame = rng.choice([1, 2, 3, 5, 8, 13, 100])
+        kind = "trailing sum"
 
         def run(threshold):
-            return chunked_rolling(
-                ev, ["user_id"], order_cols, frame, aggs,
-                chunk_rows=chunk, serial_below_bytes=threshold,
+            monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", threshold)
+            return with_trailing_sums(
+                ev, ["user_id"], order_cols, frame, {"out": "cents"}, n_col="n"
             )
+
+        w = Window.partitionBy("user_id").orderBy(*order_cols)
+        plain = ev.select(
+            *ev.columns,
+            F.sum("cents").over(w.rowsBetween(-(frame - 1), 0)).alias("out"),
+            F.count("*").over(w.rowsBetween(-(frame - 1), 0)).alias("n"),
+        )
     else:
         kind = rng.choice(["sum", "max", "min"])
 
@@ -822,6 +831,10 @@ def test_fuzz_rolling_equivalence_case(case_id, spark_events, sf_dir):
     assert dist.exceptAll(serial).count() == 0, (
         f"case {case_id}: distributed {kind} diverges from serial window"
     )
+    if plain is not None:
+        assert serial.exceptAll(plain).count() == 0, (
+            f"case {case_id}: trailing sums diverge from the sliding window"
+        )
 
 
 @pytest.mark.parametrize("case_id", range(4))

@@ -1132,54 +1132,90 @@ def test_rollup_merge_matches_from_scratch(spark, sf_dir):
 # ---------------------------------------------------------------- rolling
 
 
-@pytest.mark.parametrize("chunk_rows", [99, 100, 137, 5000])
-def test_chunked_rolling_matches_plain_window(spark, chunk_rows):
-    """Chunked evaluation must be bit-identical to the plain per-key
-    window at every chunk width — including the minimum legal width
-    (frame-1, every chunk is pure carry) and a width larger than any
-    key's row count (single chunk, no carry at all)."""
+def _on_both_branches(monkeypatch, build):
+    """``build()`` on the serial branch, then with the serial window off;
+    asserts each really took its branch (only the distributed one
+    buckets)."""
+    from fineventstream_spark.operators import rolling
+
+    serial = build()
+    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", 0)
+    dist = build()
+    for df, bucketed in ((serial, False), (dist, True)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert ("__bkt" in plan) == bucketed, plan
+    return serial, dist
+
+
+@pytest.mark.parametrize("frame_rows", [1, 100, 137, 5000])
+def test_trailing_sums_matches_plain_window(spark, tmp_path, monkeypatch, frame_rows):
+    """Prefix differences must equal the plain sliding window exactly, on
+    both branches, at every frame width — a one-row frame, frames that
+    start mid-key, and a frame wider than any key (nothing to subtract)."""
     from pyspark.sql import Window
 
-    from fineventstream_spark.operators.rolling import chunked_rolling
+    from fineventstream_spark.operators.rolling import with_trailing_sums
 
-    df = (
-        spark.range(3_000)
-        .select(
-            (F.col("id") % 3).alias("k"),
-            F.col("id").alias("seq"),
-            (F.sin(F.col("id").cast("double")) * 100).alias("v"),
-        )
-    )
-    got = chunked_rolling(
-        df,
-        key_cols=["k"],
-        order_cols=["seq"],
-        frame_rows=100,
-        aggs={"m": F.avg("v"), "s": F.stddev_samp("v"), "n": F.count("*")},
-        chunk_rows=chunk_rows,
-    )
-    w = Window.partitionBy("k").orderBy("seq").rowsBetween(-99, 0)
+    spark.range(3_000).select(
+        (F.col("id") % 3).alias("k"),
+        F.col("id").alias("seq"),
+        F.round(F.sin(F.col("id").cast("double")) * 10_000).cast("long").alias("v"),
+    ).write.parquet(str(tmp_path / "src"))
+    df = spark.read.parquet(str(tmp_path / "src"))  # file-backed: serial by default
+    f = frame_rows
+    w = Window.partitionBy("k").orderBy("seq").rowsBetween(-(f - 1), 0)
     want = df.select(
-        "k", "seq", "v",
-        F.avg("v").over(w).alias("m"),
-        F.stddev_samp("v").over(w).alias("s"),
+        "k", "seq",
+        F.sum("v").over(w).alias("s1"),
+        F.sum(F.col("v") * F.col("v")).over(w).alias("s2"),
         F.count("*").over(w).alias("n"),
     )
-    g = {(r["k"], r["seq"]): (round(r["m"], 9), round(r["s"] or 0.0, 9), r["n"])
-         for r in got.collect()}
-    e = {(r["k"], r["seq"]): (round(r["m"], 9), round(r["s"] or 0.0, 9), r["n"])
-         for r in want.collect()}
-    assert g == e
+    e = {(r.k, r.seq): (r.s1, r.s2, r.n) for r in want.collect()}
+    for got in _on_both_branches(
+        monkeypatch,
+        lambda: with_trailing_sums(
+            df.withColumn("v2", F.col("v") * F.col("v")),
+            ["k"], ["seq"], f, {"s1": "v", "s2": "v2"}, n_col="n",
+        ),
+    ):
+        assert {(r.k, r.seq): (r.s1, r.s2, r.n) for r in got.collect()} == e
 
 
-def test_chunked_rolling_rejects_undersized_chunks(spark):
-    from fineventstream_spark.operators.rolling import chunked_rolling
+def test_rolling_zscore_null_values_match_plain_window(spark, sf_dir, tmp_path, monkeypatch):
+    """NULL values: the z-score's mean and stddev skip them, as AVG and
+    STDDEV_SAMP do, while the >=30 warm-up gate counts rows, as COUNT(*)
+    does. Every fixture has 0 NULLs, so the oracle cannot see this."""
+    from pyspark.sql import Window
 
-    df = spark.range(10).select(F.lit(1).alias("k"), F.col("id").alias("seq"),
-                                F.col("id").cast("double").alias("v"))
-    with pytest.raises(ValueError, match="chunk_rows"):
-        chunked_rolling(df, ["k"], ["seq"], frame_rows=100,
-                        aggs={"n": F.count("*")}, chunk_rows=50)
+    from fineventstream_spark.catalog import load_table
+    from fineventstream_spark.registry import all_queries
+
+    # a fifth of the values, plus every value of one type for its first
+    # two weeks, so some frames hold fewer than two non-null values
+    dropped = (F.col("event_id") % 5 == 0) | (
+        (F.col("event_type") == "view") & (F.col("ts") < F.lit("2024-01-15").cast("timestamp"))
+    )
+    load_table(spark, sf_dir, "events").withColumn(
+        "value", F.when(~dropped, F.col("value"))
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    lake = str(tmp_path)
+    w = Window.partitionBy("event_type").orderBy(F.unix_micros("ts"), "event_id")
+    w = w.rowsBetween(-99, 0)
+    want = load_table(spark, lake, "events").select(
+        "event_id", "value",
+        ((F.col("value") - F.avg("value").over(w)) / F.stddev_samp("value").over(w)).alias("z"),
+        F.count("*").over(w).alias("n"),
+    ).filter(F.col("n") >= 30)
+    e = {r.event_id: r.z for r in want.collect()}
+    assert want.filter(F.col("value").isNotNull() & F.col("z").isNull()).count() > 0
+
+    q = all_queries()["q_event_rolling_zscore"].fn
+    for got in _on_both_branches(monkeypatch, lambda: q(spark, lake)):
+        g = {r.event_id: r.z for r in got.collect()}
+        assert g.keys() == e.keys()
+        bad = [(i, g[i], e[i]) for i in e if (g[i] is None) != (e[i] is None)
+               or (g[i] is not None and abs(g[i] - e[i]) > 1e-4)]
+        assert not bad, bad[:5]
 
 
 # ---------------------------------------------------------------- real codecs
@@ -1488,8 +1524,19 @@ def test_win_frame_rows_paths_identical(spark, sf_dir, monkeypatch):
     assert plain == split
 
 
+def _distributed_row_number(df, key_cols, order_cols):
+    """0-based per-key row number as ``with_distributed_prefix``'s
+    running count — the row index the trailing-sum join keys on."""
+    from fineventstream_spark.operators.rolling import with_distributed_prefix
+
+    return with_distributed_prefix(
+        df.withColumn("__one", F.lit(1)), key_cols, order_cols,
+        {"rn": ("sum", "__one")}, serial_below_bytes=0,
+    ).select(*df.columns, (F.col("rn") - 1).alias("rn"))
+
+
 def test_distributed_row_number_matches_serial_on_skew(spark):
-    """with_distributed_row_number must reproduce the serial per-key
+    """The distributed running count must reproduce the serial per-key
     row_number exactly — including under heavy key skew (one key holds
     ~90% of rows) and multi-column ordering. Regression armor for the
     round-4 rewrite: a spark_partition_id-based scheme desynced under
@@ -1497,14 +1544,12 @@ def test_distributed_row_number_matches_serial_on_skew(spark):
     the value-bucket scheme must not."""
     from pyspark.sql import Window
 
-    from fineventstream_spark.operators.rolling import with_distributed_row_number
-
     df = spark.range(20_000).select(
         F.when(F.col("id") % 10 == 0, F.col("id") % 3).otherwise(F.lit(99)).alias("k"),
         (F.col("id") * 7 % 9973).alias("t"),  # shuffled order values
         F.col("id").alias("tie"),
     )
-    got = with_distributed_row_number(df, ["k"], ["t", "tie"], "rn")
+    got = _distributed_row_number(df, ["k"], ["t", "tie"])
     w = Window.partitionBy("k").orderBy("t", "tie")
     want = df.withColumn("rn", F.row_number().over(w) - 1)
     g = {(r.k, r.t, r.tie): r.rn for r in got.collect()}
@@ -1517,23 +1562,20 @@ def test_distributed_row_number_nonfinite_order_values(spark):
     bucket arithmetic (inf width → null floor → every finite row silently
     collapsing into one bucket) nor break exactness: non-finite values are
     excluded from the min/max and pinned to the edge buckets matching
-    Spark's ASC sort order (-inf first, NaN after +inf last). Numbering
-    must equal the serial window AND finite rows must still spread over
-    multiple buckets (the scalability contract the round-4 form silently
-    dropped)."""
+    Spark's ASC sort order (-inf first, NaN after +inf last). The running
+    count must equal the serial row number AND finite rows must still
+    spread over multiple buckets (the scalability contract the round-4
+    form silently dropped)."""
     from pyspark.sql import Window
 
-    from fineventstream_spark.operators.rolling import (
-        _with_order_bucket,
-        with_distributed_row_number,
-    )
+    from fineventstream_spark.operators.rolling import _with_order_bucket
 
     inf, nan = float("inf"), float("nan")
     rows = [(i % 4, float(i * 13 % 997), i) for i in range(4_000)]
     rows += [(0, -inf, 90001), (1, inf, 90002), (2, nan, 90003), (3, None, 90004),
              (0, inf, 90005), (1, -inf, 90006)]
     df = spark.createDataFrame(rows, "k int, t double, tie long")
-    got = with_distributed_row_number(df, ["k"], ["t", "tie"], "rn")
+    got = _distributed_row_number(df, ["k"], ["t", "tie"])
     w = Window.partitionBy("k").orderBy("t", "tie")
     want = df.withColumn("rn", F.row_number().over(w) - 1)
     key = lambda r: (r.k, str(r.t), r.tie)  # str(): NaN != NaN under ==
@@ -1551,7 +1593,7 @@ def test_distributed_row_number_nonfinite_order_values(spark):
         [(0, inf, 1), (0, -inf, 2), (0, nan, 3), (0, None, 4)],
         "k int, t double, tie long",
     )
-    got2 = with_distributed_row_number(df2, ["k"], ["t", "tie"], "rn")
+    got2 = _distributed_row_number(df2, ["k"], ["t", "tie"])
     want2 = df2.withColumn("rn", F.row_number().over(w) - 1)
     assert {key(r): r.rn for r in got2.collect()} == {
         key(r): r.rn for r in want2.collect()

@@ -635,26 +635,31 @@ def test_resample_ffill_aggregates_to_grid_granularity(spark, sf_dir):
 
 def test_numbering_join_partitions_on_key_and_bucket(spark):
     """Runtime guard for the r7 parallelism-collapse incident: the
-    distributed numbering must execute its payload at (key, __bkt)
-    parallelism, never key alone. The original collapse was an AQE
-    RUNTIME replan (requireAllClusterKeysForCoPartition=false let the
-    bookkeeping side's hash(key) satisfy the co-partitioned SMJ by
-    subset; sf10: 38.7 s vs 7.7 s on q_event_rolling_zscore). The
-    offsets side now BROADCASTS (bookkeeping-sized by contract), so no
-    co-partitioned join exists to collapse — this guard pins that shape:
-    the payload join is a BroadcastHashJoin, and the executed adaptive
-    plan still hashes on the FULL (key, __bkt) cluster keys for both the
-    numbering window and the bookkeeping count."""
+    distributed running count (the row index the trailing-sum join keys
+    on) must execute its payload at (key, __bkt) parallelism, never key
+    alone. The original collapse was an AQE RUNTIME replan
+    (requireAllClusterKeysForCoPartition=false let the bookkeeping
+    side's hash(key) satisfy a co-partitioned SMJ by subset; sf10:
+    38.7 s vs 7.7 s on q_event_rolling_zscore). The offsets side
+    BROADCASTS (bookkeeping-sized by contract), so no co-partitioned
+    join exists to collapse — this guard pins that shape: the payload
+    join is a BroadcastHashJoin, and the executed adaptive plan still
+    hashes on the FULL (key, __bkt) cluster keys for both the payload
+    window and the bookkeeping aggregate."""
     import re
 
     from pyspark.sql import functions as F
 
-    from fineventstream_spark.operators.rolling import with_distributed_row_number
+    from fineventstream_spark.operators.rolling import with_distributed_prefix
 
     df = spark.range(200_000).select(
-        (F.col("id") % 16).cast("string").alias("k"), F.col("id").alias("v")
+        (F.col("id") % 16).cast("string").alias("k"),
+        F.col("id").alias("v"),
+        F.lit(1).alias("one"),
     )
-    out = with_distributed_row_number(df, ["k"], ["v"], n_buckets=32)
+    out = with_distributed_prefix(
+        df, ["k"], ["v"], {"rn": ("sum", "one")}, n_buckets=32, serial_below_bytes=0
+    )
     out.write.format("noop").mode("overwrite").save()
     final = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -675,27 +680,32 @@ def test_numbering_join_partitions_on_key_and_bucket(spark):
     )
 
 
-def test_rolling_zscore_chunked_parallelism(spark, sf_dir, monkeypatch):
-    """Size-selected since r7: at test-fixture scale the rolling frame
-    evaluates as the plain per-key window (no numbering machinery for
-    data that sorts in one task). Forced chunked (threshold 0 — the
-    ≥64 MiB shape), the heavy frame pass must partition by
-    (symbol, chunk) — not by symbol alone — with mean/stddev/count
-    sharing a single Window node; the numbering pass is value-bucketed
-    and the only per-key window runs over the tiny (key, bucket) counts
-    table. Exactly three Window nodes: counts prefix-sum, local
-    numbering, chunked frame."""
-    from fineventstream_spark.operators import rolling
+def test_rolling_zscore_has_no_sliding_frame(spark, sf_dir):
+    """At fixture scale the z-score's trailing frame is a prefix
+    difference: one running window plus lag(·, 100) over the same spec —
+    one exchange and one sort, and no bounded sliding ROWS frame
+    (SlidingWindowFunctionFrame re-aggregates all 100 rows per row)."""
+    import re
 
     plan = _plan(spark, sf_dir, "q_event_rolling_zscore")
-    assert "__chunk" not in plan, "tiny input should take the serial window"
+    assert not re.search(r"RowFrame, -\d+, currentrow", plan), plan
+    assert _shuffle_exchanges(plan) == 1, plan
+    assert len(re.findall(r"\(\d+\) Sort\b", plan)) == 1, plan
 
-    monkeypatch.setattr(rolling, "SERIAL_WINDOW_MAX_INPUT_BYTES", 0)
+
+def test_rolling_zscore_at_scale_joins_on_key_and_row(at_scale, spark, sf_dir):
+    """At scale the running sums come from ONE with_distributed_prefix
+    pass, whose payload window partitions by (event_type, __bkt), and the
+    earlier prefix is an equi-join on the unique (event_type, row) pair:
+    no chunk replication (no Generate) and no sliding frame."""
+    import re
+
     plan = _plan(spark, sf_dir, "q_event_rolling_zscore")
-    assert "hashpartitioning(event_type#" in plan, "counts prefix-sum window missing"
-    assert "__bkt" in plan, "numbering pass is not value-bucketed"
-    assert "__chunk" in plan, "frame pass is not chunk-partitioned"
-    assert plan.count("- Window (") == 3, "expected counts + numbering + frame windows"
+    assert "Generate" not in plan and "chunk" not in plan, plan
+    assert not re.search(r"RowFrame, -\d+, currentrow", plan), plan
+    # a Window's formatted arguments: [functions], [partition], [order]
+    assert re.search(r"\], \[event_type#\d+, __bkt#\d+\], \[__us#", plan), plan
+    assert re.search(r"hashpartitioning\(event_type#\d+, __rn#\d+L?, ", plan), plan
     assert "rangepartitioning" not in plan, "window sort went global"
 
 
@@ -1016,14 +1026,14 @@ def test_lsh_bucket_cap_is_partial_agg_and_never_forces_broadcast(spark, sf_dir)
 
 
 def test_distributed_row_number_handles_ntz_order(spark):
-    """with_distributed_row_number must accept a TIMESTAMP_NTZ order
+    """The distributed running count must accept a TIMESTAMP_NTZ order
     column (raw-parquet lakes surface NTZ before catalog normalization):
     NTZ has no direct double cast, so the bucket expression routes
     through TIMESTAMP — monotone, which is all bucketing needs."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from fineventstream_spark.operators.rolling import with_distributed_row_number
+    from fineventstream_spark.operators.rolling import with_distributed_prefix
 
     df = spark.range(500).select(
         (F.col("id") % 3).alias("k"),
@@ -1032,12 +1042,14 @@ def test_distributed_row_number_handles_ntz_order(spark):
             + F.make_interval(secs=(F.col("id") * 37 % 1009).cast("double"))
         ).alias("ts"),
         F.col("id").alias("tie"),
+        F.lit(1).alias("one"),
     )
-    got = {(r.k, r.ts, r.tie): r.rn for r in
-           with_distributed_row_number(df, ["k"], ["ts", "tie"], "rn").collect()}
+    got = {(r.k, r.ts, r.tie): r.rn for r in with_distributed_prefix(
+        df, ["k"], ["ts", "tie"], {"rn": ("sum", "one")}, serial_below_bytes=0
+    ).collect()}
     w = Window.partitionBy("k").orderBy("ts", "tie")
     want = {(r.k, r.ts, r.tie): r.rn for r in
-            df.withColumn("rn", F.row_number().over(w) - 1).collect()}
+            df.withColumn("rn", F.row_number().over(w)).collect()}
     assert got == want
 
 

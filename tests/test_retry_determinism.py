@@ -7,8 +7,8 @@ re-execution: a retried task must emit the same rows its first attempt
 would have. The engine's design leans on this in several advertised
 places — md5-prefix uniforms instead of RNG state (sampling), in-plan /
 literal-memoized bucket bounds instead of ``spark_partition_id``
-(chunked rolling's numbering, whose docstring explicitly claims retry
-safety), content-hash dedup keys — but no test ever actually RAN a
+(the distributed window operators, whose module docstring explicitly
+claims retry safety), content-hash dedup keys — but no test ever actually RAN a
 retry.
 
 This test does: a subprocess JVM at ``local[8,3]`` (maxFailures=3 —
@@ -21,8 +21,9 @@ under test. The flaky run's results must be bit-identical to the clean
 run's for:
 
 - a grouped aggregation (sum/count — partial aggs re-executed),
-- the chunked-rolling zscore path (distributed numbering + carry-in
-  replication downstream of retried tasks),
+- the zscore's trailing-sum path, forced distributed (per-bucket
+  running-sum bookkeeping + the (key, row) join downstream of retried
+  tasks),
 - md5-prefix weighted sampling (the no-RNG-state claim).
 
 A sentinel accumulator proves the injected failures actually fired —
@@ -102,20 +103,23 @@ WORKER = textwrap.dedent(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(20,4)")).alias("total"),
         )
-        # 2) chunked-rolling mean (distributed numbering downstream of
-        #    retried tasks; small frame keeps the subprocess fast)
-        from fineventstream_spark.operators.rolling import chunked_rolling
+        # 2) trailing-frame sums on the distributed path (running-sum
+        #    bookkeeping + (key, row) join downstream of retried tasks;
+        #    small frame keeps the subprocess fast)
+        from fineventstream_spark.operators import rolling
 
-        rolled = chunked_rolling(
-            src.select("event_id", "event_type", "value", "us"),
+        rolling.SERIAL_WINDOW_MAX_INPUT_BYTES = 0
+        rolled = rolling.with_trailing_sums(
+            src.select(
+                "event_id", "event_type", "us",
+                F.round(F.col("value") * 100).cast("long").alias("c"),
+            ),
             key_cols=["event_type"],
             order_cols=["us", "event_id"],
             frame_rows=50,
-            aggs={"m": F.avg("value"), "k": F.count("*")},
-            chunk_rows=512,
-        ).select(
-            "event_id", F.round("m", 4).alias("m"), "k"
-        )
+            sum_cols={"s": "c"},
+            n_col="k",
+        ).select("event_id", "s", "k")
         # 3) md5-prefix weighted sample (stateless uniform -> top-k)
         u = (
             F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 13),
@@ -170,5 +174,5 @@ def test_retries_fire_and_results_are_bit_identical(sf_dir):
     assert rec["fired"] >= 1, "injected failure never fired — no retry tested"
     assert rec["n_agg"] >= 1 and rec["n_rolled"] > 100
     assert rec["match_agg"], "grouped aggregation diverged under task retry"
-    assert rec["match_rolled"], "chunked rolling diverged under task retry"
+    assert rec["match_rolled"], "trailing sums diverged under task retry"
     assert rec["match_sample"], "md5-prefix sampling diverged under task retry"
