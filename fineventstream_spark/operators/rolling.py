@@ -20,6 +20,9 @@ frame(i) = P(i) − P(i−f) over the running sums, with the earlier prefix
 fetched by an equi-join on (key, row number). That join is
 co-partitioned on both columns; ``session.py``'s r7 note explains why
 ``requireAllClusterKeysForCoPartition`` stays at its default (true).
+
+The distributed forms join on the key NULL-safely (``_join_on_keys``), as
+PARTITION BY groups NULL keys into one partition.
 """
 
 from __future__ import annotations
@@ -229,6 +232,25 @@ def _literal_bucket_expr(
         )
         .cast("int")
     )
+
+
+def _join_on_keys(
+    left: DataFrame, right: DataFrame, key_cols: list[str], on: str, how: str
+) -> DataFrame:
+    """``left.join(right, [*key_cols, on], how)`` with NULL-safe key
+    equality: a window's PARTITION BY groups NULL keys as one partition,
+    so the distributed forms must match a NULL key to its NULL-key
+    bookkeeping row, where a plain equi-join drops it (and lets Catalyst
+    filter NULL keys out under the scan). ``on`` is never NULL and keeps
+    plain equality. The output carries ``left``'s key columns."""
+    joined = [*key_cols, on]
+    renamed = right.select(
+        *[F.col(c).alias(f"__j_{c}") if c in joined else F.col(c) for c in right.columns]
+    )
+    cond = F.col(on) == F.col(f"__j_{on}")
+    for c in reversed(key_cols):
+        cond = F.col(c).eqNullSafe(F.col(f"__j_{c}")) & cond
+    return left.join(renamed, cond, how).drop(*[f"__j_{c}" for c in joined])
 
 
 def skew_split_sum_frames(
@@ -491,20 +513,31 @@ def with_distributed_prefix(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = bucketed.join(F.broadcast(offsets), [*key_cols, "__bkt"])
-    for name, (kind, col) in prefix_aggs.items():
-        local = ops[kind](col).over(local_w)
-        off = F.col(f"__o_{name}")
+    # window outputs into columns first, merge after: the sum merge uses
+    # its operand twice, and a window Column used twice is computed twice
+    out = _join_on_keys(
+        bucketed, F.broadcast(offsets), key_cols, "__bkt", "inner"
+    ).select(
+        "*",
+        *[
+            ops[kind](col).over(local_w).alias(f"__l_{name}")
+            for name, (kind, col) in prefix_aggs.items()
+        ],
+    )
+    merged = {}
+    for name, (kind, _) in prefix_aggs.items():
+        local, off = F.col(f"__l_{name}"), F.col(f"__o_{name}")
         if kind == "max":
-            merged = F.greatest(local, off)
+            merged[name] = F.greatest(local, off)
         elif kind == "min":
-            merged = F.least(local, off)
+            merged[name] = F.least(local, off)
         else:  # sum: null only when BOTH sides carry no non-null input
-            merged = F.when(
+            merged[name] = F.when(
                 local.isNull() & off.isNull(), F.lit(None)
             ).otherwise(F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0)))
-        out = out.withColumn(name, merged)
-    return out.drop("__bkt", *[f"__o_{n}" for n in prefix_aggs])
+    return out.withColumns(merged).drop(
+        "__bkt", *[f"__{p}_{n}" for n in prefix_aggs for p in "ol"]
+    )
 
 
 def with_trailing_sums(
@@ -557,7 +590,7 @@ def with_trailing_sums(
             (F.col("__rn") + frame_rows).alias("__rn"),
             *[F.col(p).alias(b) for p, b in back_of.items()],
         )
-        back = running.join(shifted, [*key_cols, "__rn"], "left")
+        back = _join_on_keys(running, shifted, key_cols, "__rn", "left")
     return back.select(
         *df.columns,
         *[
@@ -624,10 +657,9 @@ def with_distributed_lag(
         ],
     )
     local_w = Window.partitionBy(*key_cols, "__bkt").orderBy(*order_cols)
-    out = (
-        bucketed.join(F.broadcast(offsets), [*key_cols, "__bkt"])
-        .withColumn("__rnl", F.row_number().over(local_w))
-    )
+    out = _join_on_keys(
+        bucketed, F.broadcast(offsets), key_cols, "__bkt", "inner"
+    ).withColumn("__rnl", F.row_number().over(local_w))
     for name, src in lag_cols.items():
         out = out.withColumn(
             name,

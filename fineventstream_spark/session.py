@@ -25,8 +25,18 @@ One place to pin every config that correctness or scale depends on:
   which on a local disk is ``rename(2)``: atomic, and no process. Its
   no-overwrite check before the rename is not atomic, which matters only
   with two writers on one checkpoint — something Spark already forbids.
-  What forks remain is ``chmod`` on each ``FileSystem.create`` (about 38
-  per batch on that drain).
+- ``file:`` is ``NioLocalFileSystem`` (``jvm/``, on the driver classpath),
+  in place of Hive's ``ProxyLocalFileSystem``, which ``hive-exec``
+  registers for it. Without the native Hadoop library, ``RawLocalFileSystem.setPermission``
+  forks a ``chmod`` process, and every ``FileSystem.create`` and ``mkdirs``
+  calls it: 303 forks in that 8-batch drain, about 38 per trigger. The
+  engine's file system sets the same bits through
+  ``Files.setPosixFilePermissions`` (one syscall) and keeps the ``.crc``
+  checksums of ``LocalFileSystem``, so the local write path forks nothing.
+  HDFS and S3 deployments are unaffected: only the ``file:`` scheme is
+  rebound. A vanilla driver session keeps the default file system, since a
+  running JVM cannot take a classpath entry; the two settings live in
+  ``get_spark``, not in ``SESSION_SQL_CONFS``.
 """
 
 from __future__ import annotations
@@ -90,6 +100,13 @@ SESSION_SQL_CONFS: tuple[tuple[str, str], ...] = (
 )
 
 
+# The ``file:`` file system that sets permissions without forking ``chmod``
+# (module docstring); ``scripts/build_localfs_jar.py`` rebuilds the jar from
+# the sources beside it.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+LOCALFS_IMPL = "fineventstream.localfs.NioLocalFileSystem"
+
+
 def _default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
@@ -132,6 +149,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraClassPath", LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCALFS_IMPL)
     )
     for k, v in SESSION_SQL_CONFS:
         builder = builder.config(k, v)

@@ -1151,13 +1151,14 @@ def _on_both_branches(monkeypatch, build):
 def test_trailing_sums_matches_plain_window(spark, tmp_path, monkeypatch, frame_rows):
     """Prefix differences must equal the plain sliding window exactly, on
     both branches, at every frame width — a one-row frame, frames that
-    start mid-key, and a frame wider than any key (nothing to subtract)."""
+    start mid-key, and a frame wider than any key (nothing to subtract).
+    One key is NULL: PARTITION BY groups its rows like any other key's."""
     from pyspark.sql import Window
 
     from fineventstream_spark.operators.rolling import with_trailing_sums
 
     spark.range(3_000).select(
-        (F.col("id") % 3).alias("k"),
+        F.when(F.col("id") % 3 > 0, F.col("id") % 3).alias("k"),
         F.col("id").alias("seq"),
         F.round(F.sin(F.col("id").cast("double")) * 10_000).cast("long").alias("v"),
     ).write.parquet(str(tmp_path / "src"))
@@ -1179,6 +1180,28 @@ def test_trailing_sums_matches_plain_window(spark, tmp_path, monkeypatch, frame_
         ),
     ):
         assert {(r.k, r.seq): (r.s1, r.s2, r.n) for r in got.collect()} == e
+
+
+def test_trailing_sums_null_key_at_scale(at_scale, spark):
+    """At scale the (key, row number) lookup is a sort-merge join: a NULL
+    key's rows must find their earlier prefix there too, and get the frame
+    difference, not the whole running sum."""
+    from pyspark.sql import Window
+
+    from fineventstream_spark.operators.rolling import with_trailing_sums
+
+    df = spark.range(600).select(
+        F.when(F.col("id") % 2 == 0, F.lit("a")).alias("k"),
+        F.col("id").alias("seq"),
+        (F.col("id") % 7 - 3).alias("v"),
+    )
+    w = Window.partitionBy("k").orderBy("seq").rowsBetween(-9, 0)
+    want = df.select("k", "seq", F.sum("v").over(w).alias("s"), F.count("*").over(w).alias("n"))
+    got = with_trailing_sums(df, ["k"], ["seq"], 10, {"s": "v"}, n_col="n")
+    assert "SortMergeJoin" in got._jdf.queryExecution().executedPlan().toString()
+    e = {(r.k, r.seq): (r.s, r.n) for r in want.collect()}
+    assert {(r.k, r.seq): (r.s, r.n) for r in got.collect()} == e
+    assert sum(k is None for k, _ in e) == 300
 
 
 def test_rolling_zscore_null_values_match_plain_window(spark, sf_dir, tmp_path, monkeypatch):
@@ -1929,13 +1952,14 @@ def test_weighted_sample_prefers_heavy_docs(spark, sf_dir):
 
 
 def _prefix_fixture(spark):
-    """Keyed series with nulls, duplicate order values, and a 0-opening
-    key — the serial-window edge cases the distributed forms must match."""
+    """Keyed series with nulls, duplicate order values, a NULL key and a
+    0-opening key — the serial-window edge cases the distributed forms
+    must match."""
     import random
 
     rng = random.Random(7)
     rows = []
-    for k in ("a", "b", "c"):
+    for k in ("a", "b", "c", None):
         for i in range(400):
             v = None if rng.random() < 0.1 else round(rng.uniform(-5, 100), 3)
             # duplicate order values every ~7 rows exercise tie handling

@@ -705,8 +705,38 @@ def test_rolling_zscore_at_scale_joins_on_key_and_row(at_scale, spark, sf_dir):
     assert not re.search(r"RowFrame, -\d+, currentrow", plan), plan
     # a Window's formatted arguments: [functions], [partition], [order]
     assert re.search(r"\], \[event_type#\d+, __bkt#\d+\], \[__us#", plan), plan
-    assert re.search(r"hashpartitioning\(event_type#\d+, __rn#\d+L?, ", plan), plan
+    # null-safe key equality hashes the key as (coalesce, isnull)
+    assert re.search(
+        r"hashpartitioning\(coalesce\(event_type#\d+, \), isnull\(event_type#\d+\), "
+        r"__rn#\d+L?, ",
+        plan,
+    ), plan
     assert "rangepartitioning" not in plan, "window sort went global"
+
+
+def test_rolling_zscore_at_scale_sums_each_prefix_once(at_scale, spark, sf_dir):
+    """The in-bucket Window of with_distributed_prefix computes one running
+    sum per prefix aggregate (row number, Σc, Σc², k): its sum merge
+    reads each window output twice, and must read a column, not repeat
+    the window expression."""
+    df = REGISTRY["q_event_rolling_zscore"].fn(spark, sf_dir)
+    stack, in_bucket = [df._jdf.queryExecution().optimizedPlan()], []
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+        if node.nodeName() != "Window":
+            continue
+        partition = node.partitionSpec()
+        if "__bkt" in partition.apply(partition.size() - 1).toString():
+            exprs = node.windowExpressions()
+            in_bucket.append(
+                [exprs.apply(i).child().toString() for i in range(exprs.size())]
+            )
+    assert in_bucket
+    for exprs in in_bucket:
+        sums = [e for e in exprs if e.startswith("sum(")]
+        assert len(sums) == len(set(sums)) == 4, exprs
 
 
 def test_correlation_collapses_fact_before_pair_join(spark, sf_dir):
