@@ -18,9 +18,12 @@ Two implementations:
 Tie semantics: a right row at exactly ``left_ts`` is matched (backward
 inclusive); among right rows with identical timestamps the one latest in
 ``(ts, tiebreak)`` order wins — pass ``right_tiebreak`` for determinism.
+A NULL key matches nothing (SQL equality), as in DuckDB's ``ASOF JOIN``.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -83,7 +86,11 @@ def asof_join(
         ],
     )
     rtb = F.col(right_tiebreak).cast("long") if right_tiebreak else F.lit(0).cast("long")
-    r = right.select(
+    # SQL equality never matches NULL, but the fill window groups NULL
+    # keys together: a NULL-key right row would fill a NULL-key left row.
+    r = right.filter(
+        reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    ).select(
         *[F.lit(None).cast(dict(left.dtypes)[c]).alias(c) for c in left_cols if c not in keys],
         *[F.col(k) for k in keys],
         F.col(right_ts).alias("__ts"),

@@ -13,11 +13,10 @@ would force a full shuffle of the key column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fineventstream_spark.catalog import Tables
-from fineventstream_spark.queries._audit import audits_enabled
 from fineventstream_spark.registry import register
 
 
@@ -130,17 +129,8 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a hash-checked boolean TRUE iff the HLL estimate sits within 6%
     (3× the configured rsd 0.02) of its exact twin; observed 0.95% max
     at sf0.01. A sketch regression flips the boolean and FAILS the hash
-    compare. The exact pass exists ONLY for the audit; the production
-    form is the sketch alone (countDistinct at 100 TB reshuffles every
-    (flag, part) pair — the thing the sketch avoids).
-    SPARK_GRAFT_AUDIT=off benches that production form
-    (queries/_audit.py — the schema changes, bench-only mode)."""
+    compare."""
     t = Tables(spark, sf_dir)
-    if not audits_enabled():
-        return t.lineitem.groupBy("l_returnflag").agg(
-            F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
-            F.count("*").alias("n"),
-        )
     return (
         t.lineitem.groupBy("l_returnflag")
         .agg(
@@ -158,6 +148,20 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= 0.06
             ).alias("approx_within_tol"),
         )
+    )
+
+
+def _weekly_sketch_union(events: DataFrame) -> DataFrame:
+    """(week, approx_users): per-day HLL sketches of ``user_id``
+    unioned into weekly estimates — the sketch half of
+    q_agg_sketch_rollup."""
+    daily = events.groupBy(
+        F.date_trunc("day", "ts").cast("date").alias("day")
+    ).agg(F.hll_sketch_agg("user_id").alias("sk"))
+    return daily.groupBy(
+        F.date_trunc("week", "day").cast("date").alias("week")
+    ).agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users"),
     )
 
 
@@ -189,21 +193,9 @@ def q_agg_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff the merged estimate sits within 5% of its exact twin (HLL at
     default lgK=12 is ~1.6% rsd; observed 0.0% at sf0.01 — sub-capacity
     exact regime). A sketch or merge regression flips the boolean and
-    FAILS the hash compare. The exact pass exists ONLY for the audit;
-    production rollups skip it — SPARK_GRAFT_AUDIT=off benches that
-    form (queries/_audit.py)."""
+    FAILS the hash compare."""
     t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(F.hll_sketch_agg("user_id").alias("sk"))
-    weekly = (
-        daily.groupBy(F.date_trunc("week", "day").cast("date").alias("week"))
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users"),
-        )
-    )
-    if not audits_enabled():
-        return weekly
+    weekly = _weekly_sketch_union(t.events)
     exact = t.events.groupBy(
         F.date_trunc("week", "ts").cast("date").alias("ex_week")
     ).agg(F.countDistinct("user_id").alias("exact_users"))
@@ -317,8 +309,7 @@ def q_agg_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/percentiles.py) — Spark's built-in ``percentile`` buffers
     every (value, count) of a group in ONE aggregation buffer (measured
     at sf1: 25 s for the global median vs ~2 s refined; at 100 TB it is
-    an OOM, not a slowdown). SPARK_GRAFT_AUDIT=off benches the
-    production form: sketch-only rollup, zero exact passes."""
+    an OOM, not a slowdown)."""
     from fineventstream_spark.operators.percentiles import exact_percentiles
 
     t = Tables(spark, sf_dir)
@@ -326,32 +317,6 @@ def q_agg_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("kll_sketch_agg_double(l_extendedprice)").alias("sk"),
         F.count(F.lit(1)).alias("n"),
     )
-    if not audits_enabled():
-        # production rollup: per-group quantiles + merged-global quantile,
-        # straight from the sketches — zero exact passes
-        groups = per_group.select(
-            "l_returnflag",
-            "n",
-            F.round(F.kll_sketch_get_quantile_double("sk", F.lit(0.5)), 4).alias("est_p50"),
-            F.round(F.kll_sketch_get_quantile_double("sk", F.lit(0.95)), 4).alias("est_p95"),
-            "sk",
-        )
-        # groups feeds BOTH the output rows and the global merge; as two
-        # plan subtrees the whole fact aggregation runs twice (r9 advisor —
-        # verified: 4 FileScans, 0 ReusedExchange in the executed plan,
-        # overstating exactly the production cost this mode measures).
-        # A lazy localCheckpoint materializes the handful of (group,
-        # sketch) rows once; both consumers read the blocks.
-        groups = groups.localCheckpoint(eager=False)
-        merged = groups.agg(
-            F.round(
-                F.kll_sketch_get_quantile_double(
-                    F.expr("kll_merge_agg_double(sk)"), F.lit(0.5)
-                ),
-                4,
-            ).alias("global_est_p50")
-        )
-        return groups.drop("sk").join(F.broadcast(merged))
     # r14: one fused three-pass refinement computes the per-group exact
     # medians AND the global exact median (global_spec) — previously two
     # full exact_percentiles runs (two extent scans, two histogram scans,
@@ -383,6 +348,27 @@ def q_agg_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return groups.drop("sk").join(F.broadcast(audit))
+
+
+def _theta_day_pairs(events: DataFrame, day: Column) -> DataFrame:
+    """(day, est_returning, est_reach): Theta estimates of |day ∩ next
+    day| and |day ∪ next day| over per-day ``user_id`` sketches — the
+    sketch half of q_event_theta_overlap."""
+    daily = events.groupBy(day.alias("day")).agg(
+        F.expr("theta_sketch_agg(user_id)").alias("sk")
+    )
+    # daily feeds both join sides — as two plan subtrees the full fact
+    # sketch-aggregation runs twice (r14): materialize the days ×
+    # KB-sketch rows once
+    daily = daily.localCheckpoint(eager=False)
+    nxt = daily.select(F.date_sub("day", 1).alias("day"), F.col("sk").alias("sk_next"))
+    return daily.join(nxt, "day").select(
+        "day",
+        F.expr("theta_sketch_estimate(theta_intersection(sk, sk_next))").alias(
+            "est_returning"
+        ),
+        F.expr("theta_sketch_estimate(theta_union(sk, sk_next))").alias("est_reach"),
+    )
 
 
 @register(
@@ -432,32 +418,10 @@ def q_event_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the theta estimate sits within 5% of its exact twin (theta is EXACT
     below k=4096 retained entries — the small-sf regime, observed 0.0%
     at sf0.01 — and ~3% rsd above). A sketch or set-expression
-    regression flips a boolean and FAILS the hash compare. The exact
-    passes exist ONLY for the audit; SPARK_GRAFT_AUDIT=off benches the
-    production form (sketch estimates alone, no exact passes)."""
+    regression flips a boolean and FAILS the hash compare."""
     t = Tables(spark, sf_dir)
     day = F.date_trunc("day", "ts").cast("date")
-    daily = t.events.groupBy(day.alias("day")).agg(
-        F.expr("theta_sketch_agg(user_id)").alias("sk")
-    )
-    # daily feeds both join sides — as two plan subtrees the full fact
-    # sketch-aggregation runs twice (r14; the kll production branch's
-    # localCheckpoint pattern): materialize the days × KB-sketch rows once
-    daily = daily.localCheckpoint(eager=False)
-    nxt = daily.select(F.date_sub("day", 1).alias("day"), F.col("sk").alias("sk_next"))
-    pairs = daily.join(nxt, "day").select(
-        "day",
-        F.expr("theta_sketch_estimate(theta_intersection(sk, sk_next))").alias(
-            "est_returning"
-        ),
-        F.expr("theta_sketch_estimate(theta_union(sk, sk_next))").alias("est_reach"),
-    )
-    if not audits_enabled():
-        return pairs.select(
-            "day",
-            F.col("est_returning").cast("long").alias("est_returning"),
-            F.col("est_reach").cast("long").alias("est_reach"),
-        )
+    pairs = _theta_day_pairs(t.events, day)
     # the distinct (day, user) set feeds four consumers (both sides of the
     # returning join, both arms of the reach union) — without the
     # materialization the fact scan + distinct exchange ran 4× (r14)
@@ -679,13 +643,8 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation, rank error ≤ n/accuracy = n/10000), so on the price
     column (smooth, 5 orders of magnitude of support, adjacent order
     stats ~1e-4 apart relatively) the deviation vs the interpolated
-    exact value is orders of magnitude under the 0.5% gate.
-
-    ``SPARK_GRAFT_AUDIT=off`` switches to the production form: sketch
-    only, no exact pass (the schema changes — bench-only mode, per
-    queries/_audit.py)."""
+    exact value is orders of magnitude under the 0.5% gate."""
     from fineventstream_spark.operators.percentiles import exact_percentiles
-    from fineventstream_spark.queries._audit import audits_enabled
 
     t = Tables(spark, sf_dir)
     # The quartile sketch is computed once as an array but surfaced as
@@ -698,16 +657,6 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__p75a": F.element_at(iqr, 2),
         "n": F.count("l_extendedprice"),
     }
-    if not audits_enabled():
-        return t.lineitem.groupBy("l_returnflag").agg(
-            *[c.alias(a) for a, c in sketch_aggs.items()]
-        ).select(
-            "l_returnflag",
-            "n",
-            F.col("__p25a").alias("p25_approx"),
-            F.col("__p50a").alias("p50_approx"),
-            F.col("__p75a").alias("p75_approx"),
-        )
     # r14 (guide §1.2 fewest passes): the sketch rides exact_percentiles'
     # pass-1 extent scan as extra_aggs — previously a second full fact
     # scan plus a join on the group key (the exact same shape the r13
@@ -866,26 +815,13 @@ def q_agg_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact counts of the top 20 keys; ``rel_err`` >= 0 always, ~0
     while n_keys << d*w.
 
-    AUDITED form (default, the hash-checked oracle twin): the d hash
-    functions are DISJOINT 8-hex-char slices of ONE md5 per key (the
-    standard split-one-strong-hash construction) — the r7 first cut
+    The d hash functions are DISJOINT 8-hex-char slices of ONE md5 per
+    key (the standard split-one-strong-hash construction) — the r7 first cut
     hashed key||seed separately per seed and measured 4x the string work
     (10.1 s at sf30; the one-md5 form cuts the dominant cost). Each
     slice parses identically in Spark (conv(substr,16,10)) and DuckDB
     (('0x'||substr)::BIGINT), making this the only sketch in the engine
     with a full value-hash oracle rather than a rows-only audit.
-
-    PRODUCTION form (SPARK_GRAFT_AUDIT=off, r13 — clearing the r12 >2×
-    grade): the md5 was only ever the oracle's portability price — sf10
-    solo: md5 sketch pass 2.26 s, xxhash64 sketch pass 0.43 s — so the
-    production cells hash (key, seed) with Spark's native xxhash64 and
-    the audit columns (exact_n, rel_err — which require the exact
-    groupBy the sketch exists to avoid) drop from the output: the same
-    one-pass mergeable 2,048-row sketch plus estimates for the probe
-    keys, JVM-side end to end. The toggle keeps the same key set (the
-    exact top 20) so both forms answer the same question; the schema
-    divergence is pinned by the audit-toggle test, same as the other
-    sketch queries (7406b31 pattern).
 
     Reference parity: the reference computes no sketches (its Lambda
     forwards records untouched, processor_company_news.py:37-38); this
@@ -893,23 +829,14 @@ def q_agg_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-sketch the reference's Athena tier would need at scale."""
     t = Tables(spark, sf_dir)
     w = 512
-    audit = audits_enabled()
 
-    if audit:
-        def cell(key_col, seed: int):
-            h = F.md5(key_col.cast("string").cast("binary"))
-            return (
-                F.conv(F.substring(h, 1 + 8 * seed, 8), 16, 10).cast("bigint") % w
-            )
-    else:
-        def cell(key_col, seed: int):
-            # native long hash of (key, seed): no string materialization,
-            # no digest, whole-stage-codegen'd — the production path
-            return F.pmod(F.xxhash64(key_col, F.lit(seed)), F.lit(w))
+    def cell(key_col, seed: int):
+        h = F.md5(key_col.cast("string").cast("binary"))
+        return F.conv(F.substring(h, 1 + 8 * seed, 8), 16, 10).cast("bigint") % w
 
-    # one digest per row in the audited form; the 4 cells are slices of
-    # it (common subexpression elimination computes it once),
-    # posexploded into (seed, cell)
+    # one digest per row; the 4 cells are slices of it (common
+    # subexpression elimination computes it once), posexploded into
+    # (seed, cell)
     cells = t.events.select(
         F.posexplode(
             F.array(*[cell(F.col("user_id"), i) for i in range(4)])
@@ -924,29 +851,19 @@ def q_agg_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 20-key probe side against the broadcast 2,048-row sketch: the
     # estimate join never touches the fact again. seed is a COLUMN here
-    # (from the sketch side), so the audited probe computes the slice
-    # start in SQL; the production probe hashes the (key, seed) tuple —
-    # identical to the build-side cell because xxhash64 is value-wise
-    # over its argument row whether seed is a literal or a column.
-    if audit:
-        probe_cell = (
-            F.conv(
-                F.expr(
-                    "substring(md5(CAST(CAST(user_id AS STRING) AS BINARY)), 1 + 8 * seed, 8)"
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % w
-        )
-    else:
-        probe_cell = F.pmod(
-            F.xxhash64(F.col("user_id"), F.col("seed")), F.lit(w)
-        )
+    # (from the sketch side), so the probe computes the slice start in SQL.
+    probe_cell = (
+        F.conv(
+            F.expr(
+                "substring(md5(CAST(CAST(user_id AS STRING) AS BINARY)), 1 + 8 * seed, 8)"
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % w
+    )
     probed = top_users.join(F.broadcast(sketch), F.col("cell") == probe_cell)
     est = probed.groupBy("user_id", "exact_n").agg(F.min("c").alias("est_n"))
-    if not audit:
-        return est.select("user_id", "est_n").orderBy("user_id")
     return est.withColumn(
         "rel_err",
         F.round(
@@ -989,7 +906,7 @@ def q_agg_approx_topk_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate bound degrades gracefully instead of vanishing.
 
     Value-oracled since r12 (was rows-only; the r11 boolean-gate
-    template): the audited form returns the EXACT top-10 cells and
+    template): the query returns the EXACT top-10 cells and
     counts (DuckDB twin — deterministic (count desc, cell) order) and
     the sketch certifies itself through two hash-checked booleans per
     row: ``est_found`` (the exact-top cell surfaced in the merged
@@ -998,24 +915,20 @@ def q_agg_approx_topk_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merged estimate within 1% of exact; on a sub-capacity domain the
     family's counts are exact, so the observed error is 0). A sketch,
     merge, or capacity regression (the r7 empty-estimate failure mode)
-    flips both gates on every row and fails the hash compare. The
-    estimated ranking alone is the production form (AUDIT=off)."""
+    flips both gates on every row and fails the hash compare."""
     t = Tables(spark, sf_dir)
     cell = F.concat_ws(":", "event_type", F.hour("ts").cast("string"))
     daily = t.events.select(
         F.date_trunc("day", "ts").cast("date").alias("day"), cell.alias("cell")
     ).groupBy("day").agg(F.expr("approx_top_k_accumulate(cell, 4096)").alias("acc"))
-    audit = audits_enabled()
     est = daily.agg(
         F.expr(
-            f"approx_top_k_estimate(approx_top_k_combine(acc, 4096), {100 if audit else 10})"
+            "approx_top_k_estimate(approx_top_k_combine(acc, 4096), 100)"
         ).alias("topk")
     )
     items = est.select(F.explode("topk").alias("e")).select(
         F.col("e.item").alias("cell"), F.col("e.count").alias("est_n")
     )
-    if not audit:
-        return items.orderBy(F.desc("est_n"), "cell")
     exact_top = (
         t.events.groupBy(cell.alias("cell"))
         .agg(F.count(F.lit(1)).alias("exact_n"))

@@ -144,7 +144,7 @@ def _planted_corpora(docs: DataFrame, mutation, near_words_min: int | None = Non
 def _planted_recall_summary(
     pairs: DataFrame, expected: DataFrame, total: DataFrame
 ) -> DataFrame:
-    """The AUDITED (hash-green) form of a near-dup query: ONE summary row
+    """The hash-green result of a near-dup query: ONE summary row
     whose exact columns a DuckDB oracle reproduces from the base table —
     ``n_docs`` (corpus size) and ``planted_pairs`` (the deterministic
     plant predicate) — plus ``recall_ok``, a hash-checked boolean TRUE
@@ -154,8 +154,7 @@ def _planted_recall_summary(
     empty pair set, flips the boolean and FAILS the driver's hash
     compare — strictly stronger than the old rows-only
     ``planted_recall`` column only a human would read). Vacuously TRUE
-    when the fixture planted nothing. The pair list itself stays the
-    production output (SPARK_GRAFT_AUDIT=off)."""
+    when the fixture planted nothing."""
     n_docs = total.agg(F.count("*").alias("n_docs"))
     # r14: expected-count and hit-count fused into ONE aggregation — the
     # expected subtree (a members join) used to run once per count. The
@@ -387,38 +386,26 @@ def q_llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimated Jaccard ≥ 0.5, behind the exact-collapse prepass
     (identical texts → one representative + linear star edges, so
     boilerplate never forms a capped-out mega-bucket). Value-oracled
-    since r11 (boolean-gate pattern): the audited form is a one-row
+    since r11 (boolean-gate pattern): the query returns a one-row
     summary whose corpus size and planted-copy count the DuckDB oracle
     reproduces, plus ``recall_ok`` — TRUE iff every planted copy's
     structural (rep, clone) edge is present (an LSH/collapse regression
-    or an empty pair set flips it and fails the hash compare). The pair
-    list is the production form (SPARK_GRAFT_AUDIT=off)."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    or an empty pair set flips it and fails the hash compare)."""
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-
-    def build(corpus):
-        rep_corpus, members = _exact_collapse(corpus)
-        cands = dedup.minhash_lsh_candidates(rep_corpus, "text", "doc_id").filter(
-            F.col("est_jaccard") >= 0.5
-        ).select("id_a", "id_b", "est_jaccard")
-        return cands, members
-
-    if not audits_enabled():
-        cands, members = build(docs)
-        return dedup.persist_tracked(
-            cands.unionByName(_star_edges(members, "est_jaccard", 1.0))
-        )
     src, near_src, corpus = _planted_corpora(
         docs, _appended_token_mutation(), _MIN_NEAR_WORDS
     )
-    cands, members = build(corpus)
-    cands = dedup.persist_tracked(cands)
+    rep_corpus, members = _exact_collapse(corpus)
+    cands = dedup.persist_tracked(
+        dedup.minhash_lsh_candidates(rep_corpus, "text", "doc_id")
+        .filter(F.col("est_jaccard") >= 0.5)
+        .select("id_a", "id_b", "est_jaccard")
+    )
     # members feeds the star edges and BOTH gate edge sets, each of which
     # is itself consumed twice (count + semi-join hit count) — without the
-    # persist the collapse subtree re-runs ~5× per audited query (r14;
-    # narrow (doc_id, rep_id) rows, audit-only branch)
+    # persist the collapse subtree re-runs ~5× per query (r14; narrow
+    # (doc_id, rep_id) rows)
     members = dedup.persist_tracked(members)
     pairs = cands.unionByName(_star_edges(members, "est_jaccard", 1.0))
     return _planted_recall_summary(
@@ -435,33 +422,21 @@ def q_llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 (boolean-gate): ``recall_ok`` is TRUE iff every planted exact
     copy (Jaccard exactly 1.0) survived candidate generation AND the
     exact verify — a regression in either stage fails the hash compare.
-    The verified pair list is the production form (AUDIT=off). Runs
-    behind the exact-collapse prepass: identical texts verify trivially
-    (Jaccard 1.0 star edges), the expensive shingle-set verify runs on
-    representative pairs only."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    Runs behind the exact-collapse prepass: identical texts verify
+    trivially (Jaccard 1.0 star edges), the expensive shingle-set verify
+    runs on representative pairs only."""
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-
-    def build(corpus):
-        rep_corpus, members = _exact_collapse(corpus)
-        cands = dedup.minhash_lsh_candidates(rep_corpus, "text", "doc_id")
-        verified = dedup.ngram_jaccard_verify(
-            cands, rep_corpus, "text", "doc_id"
-        ).filter(F.col("jaccard") >= 0.5).select("id_a", "id_b", "jaccard")
-        return verified, members
-
-    if not audits_enabled():
-        verified, members = build(docs)
-        return dedup.persist_tracked(
-            verified.unionByName(_star_edges(members, "jaccard", 1.0))
-        )
     src, near_src, corpus = _planted_corpora(
         docs, _appended_token_mutation(), _MIN_NEAR_WORDS
     )
-    verified, members = build(corpus)
-    verified = dedup.persist_tracked(verified)
+    rep_corpus, members = _exact_collapse(corpus)
+    cands = dedup.minhash_lsh_candidates(rep_corpus, "text", "doc_id")
+    verified = dedup.persist_tracked(
+        dedup.ngram_jaccard_verify(cands, rep_corpus, "text", "doc_id")
+        .filter(F.col("jaccard") >= 0.5)
+        .select("id_a", "id_b", "jaccard")
+    )
     members = dedup.persist_tracked(members)  # see q_llm_dedup_near note
     pairs = verified.unionByName(_star_edges(members, "jaccard", 1.0))
     return _planted_recall_summary(
@@ -482,33 +457,23 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rightly refusing the quadratic join) dropped half the exact-copy
     pairs. Collapsed, exact copies are linear star edges the caps never
     see. Value-oracled (boolean-gate): ``recall_ok`` TRUE iff every
-    planted copy's structural (rep, clone) edge is present. The pair
-    list is the production form (AUDIT=off)."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    planted copy's structural (rep, clone) edge is present."""
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-
-    def build(corpus):
-        rep_corpus, members = _exact_collapse(corpus)
-        cands = dedup.simhash_candidates(rep_corpus, "text", "doc_id").filter(
-            F.col("hamming") <= 6
-        ).select("id_a", "id_b", "hamming")
-        star = _star_edges(members, "hamming", 0).withColumn(
-            "hamming", F.col("hamming").cast(dict(cands.dtypes)["hamming"])
-        )
-        return cands, star, members
-
-    if not audits_enabled():
-        cands, star, members = build(docs)
-        return dedup.persist_tracked(cands.unionByName(star))
     # near plant = word-order PERMUTATION: SimHash is a bag-of-words
     # fingerprint, so the permuted text hashes IDENTICALLY (Hamming 0 at
     # any scale) while the text differs — it cannot collapse and must
     # ride the live prefix-bucket path
     src, near_src, corpus = _planted_corpora(docs, _permuted_words_mutation())
-    cands, star, members = build(corpus)
-    cands = dedup.persist_tracked(cands)
+    rep_corpus, members = _exact_collapse(corpus)
+    cands = dedup.persist_tracked(
+        dedup.simhash_candidates(rep_corpus, "text", "doc_id")
+        .filter(F.col("hamming") <= 6)
+        .select("id_a", "id_b", "hamming")
+    )
+    star = _star_edges(members, "hamming", 0).withColumn(
+        "hamming", F.col("hamming").cast(dict(cands.dtypes)["hamming"])
+    )
     members = dedup.persist_tracked(members)  # see q_llm_dedup_near note
     pairs = cands.unionByName(star)
     # near-rep ids whose mutation was NOT a no-op (one-word docs reverse
@@ -619,7 +584,7 @@ _INCR_DEDUP_ORACLE = """
 @register("q_llm_dedup_incremental", oracle=_INCR_DEDUP_ORACLE, tags=("U5",))
 def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus near-dedup against a persisted fingerprint store
-    (r12 — the production form of U5 a daily-ingest pipeline needs; the
+    (r12 — the form of U5 a daily-ingest pipeline needs; the
     batch-corpus twin of the reference's streaming high-water dedup,
     producer_company_news.py:128-141). The newest 10% of documents by id
     plays the role of "today's shard"; the other 90% is the accumulated
@@ -630,7 +595,7 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; history text is never rescanned.
 
     Value-oracled (the q_rollup_incremental equivalence pattern): the
-    audited form returns split sizes and the exact shard-duplicate count
+    query returns split sizes and the exact shard-duplicate count
     (all three DuckDB-reproducible — the duplicate count via an EXISTS
     over earlier identical texts, which is precisely what the star edges
     assert), plus ``matches_recompute`` — a hash-checked boolean TRUE iff
@@ -638,11 +603,8 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (history ∪ shard) restricted to shard-touching pairs, kind and
     est_jaccard included (exceptAll both ways == empty). Any drift in
     collapse semantics, cap arithmetic, store staleness, or signature
-    determinism flips it. The incremental pair list itself is the
-    production form (SPARK_GRAFT_AUDIT=off)."""
+    determinism flips it."""
     import math
-
-    from fineventstream_spark.queries._audit import audits_enabled
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
@@ -657,8 +619,6 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = dedup.incremental_dedup_against_store(
         spark, path, shard, "text", "doc_id", threshold=0.5
     )
-    if not audits_enabled():
-        return inc
     inc = dedup.persist_tracked(inc.select("id_a", "id_b", "est_jaccard", "kind"))
 
     # from-scratch twin on the full corpus, restricted to shard-touching
@@ -733,7 +693,7 @@ def q_llm_dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone append is TAGGED, so re-runs are idempotent no-ops against
     the cached store.
 
-    Value-oracled (boolean-gate pattern): the audited form returns the
+    Value-oracled (boolean-gate pattern): the query returns the
     split sizes, the retracted rep id and its history group size (all
     DuckDB-reproducible), plus ``matches_retracted_recompute`` — a
     hash-checked boolean TRUE iff the post-retraction incremental pair
@@ -745,11 +705,8 @@ def q_llm_dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge to the retracted rep and flips the gate. Non-vacuity is pinned
     by the synthetic retraction test
     (tests/test_incremental_dedup.py::test_tombstone_retracts_content_
-    and_compaction_erases). The post-retraction pair list is the
-    production form (SPARK_GRAFT_AUDIT=off)."""
+    and_compaction_erases)."""
     import math
-
-    from fineventstream_spark.queries._audit import audits_enabled
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
@@ -779,8 +736,6 @@ def q_llm_dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = dedup.incremental_dedup_against_store(
         spark, path, shard, "text", "doc_id", threshold=0.5
     )
-    if not audits_enabled():
-        return inc
     inc = dedup.persist_tracked(inc.select("id_a", "id_b", "est_jaccard", "kind"))
 
     # from-scratch twin on the corpus WITHOUT the retracted content
@@ -840,17 +795,13 @@ def q_llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Value-oracled since r11 (boolean-gate pattern): a deterministic ~3%
     of nonzero vectors is cloned into the corpus scaled by 1.001 (same
-    direction → cosine exactly 1.0, ids offset by 10^8); the audited
-    form is a one-row summary whose corpus size and plant count the
+    direction → cosine exactly 1.0, ids offset by 10^8); the query
+    returns a one-row summary whose corpus size and plant count the
     DuckDB oracle reproduces, plus ``recall_ok`` — TRUE iff the
     hyperplane-bucket → exact-cosine → threshold pipeline recovered
     EVERY planted (original, clone) pair. The r10 recall-0 bug (near-
     parallel sin-generated hyperplanes) would today fail the driver's
-    hash compare instead of needing a human to read a recall column.
-    The pair list (every detected pair ≥ 0.9) is the production form
-    (SPARK_GRAFT_AUDIT=off)."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    hash compare instead of needing a human to read a recall column."""
     offset = 100_000_000
     t = Tables(spark, sf_dir)
     emb = t.embeddings
@@ -866,8 +817,6 @@ def q_llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus, "embedding", "vec_id", dim=64, threshold=0.9
         )
     )
-    if not audits_enabled():
-        return pairs
     expected = planted_src.select(
         F.col("vec_id").alias("id_a"),
         (F.col("vec_id") + offset).alias("id_b"),
@@ -1205,7 +1154,7 @@ def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-count/fps are parsed from the bytes, not echoed from metadata.
 
     Value-oracled since r12 (was rows-only + a planted_ok fraction only a
-    human would read): the audited form hash-checks every DECODED
+    human would read): the query hash-checks every DECODED
     structural value — width/height/sample_rate/n_samples/n_frames/fps,
     NULL outside the row's modality — against the DuckDB twin computing
     the planted-geometry formulas (image w = 4 + id % 13, h = 3 + id % 7;
@@ -1216,18 +1165,10 @@ def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean_lum, rms, n_bytes) certify through ``decode_ok``, a
     hash-checked boolean TRUE iff the row's stats are present and
     in-range for its modality (luminance in [0,255], rms ≥ 0, a payload
-    longer than its codec header). The full decoded feature frame
-    (stats included) is the production form (SPARK_GRAFT_AUDIT=off)."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    longer than its codec header)."""
     t = Tables(spark, sf_dir)
     media = multimodal.synthesize_real_media(t.documents)
     feats = multimodal.decode_media_features(media)
-    if not audits_enabled():
-        return feats.select(
-            "media_id", "kind", "n_bytes", "width", "height", "mean_lum",
-            "sample_rate", "n_samples", "rms", "n_frames", "fps",
-        )
     # mean_lum is NORMALIZED [0,1] (decode_bmp/decode_y4m divide by 255);
     # the bound is 1.0 so a dropped normalization — the scale-confusion
     # regression this gate exists to catch — flips decode_ok (r12 review:
@@ -1287,16 +1228,12 @@ def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     miscounted FRAME marker, or a dropped video is a per-row hash
     mismatch. ``frame_exact`` additionally gates that the sliced bytes
     are exactly one planar frame (length matches the header geometry
-    in-row). Frames WITH payloads are the production form (AUDIT=off)."""
-    from fineventstream_spark.queries._audit import audits_enabled
-
+    in-row)."""
     t = Tables(spark, sf_dir)
     media = multimodal.synthesize_real_media(t.documents).filter(
         F.col("kind") == "video"
     )
     frames = multimodal.sample_video_frames(media, k=3)
-    if not audits_enabled():
-        return frames
     return frames.select(
         "media_id", "frame_idx", "n_src_frames", "width", "height", "n_bytes",
         (
@@ -1727,69 +1664,13 @@ def q_llm_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_llm_near_dedup_pipeline",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN doc_id % 97 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS planted_pairs,
-           TRUE AS recall_ok,
-           TRUE AS near_recall_ok,
-           TRUE AS no_planted_leak
-    FROM documents
-    """,
-    tags=("U5", "X1"),
-)
-def q_llm_near_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup ring composed end-to-end: MinHash-LSH candidates →
-    exact n-gram Jaccard verify (≥ 0.8) → connected components →
-    per-cluster keeper. Approximate by design (LSH recall) → rows-only,
-    so the result self-certifies: a deterministic ~1% of docs is cloned
-    into the corpus (planted exact duplicates, ids offset by 10^8) and
-    ``planted_recall`` reports the fraction of planted pairs the full
-    pipeline collapsed into one cluster — a driver row that "ran" now
-    also proves signature→bucket→verify→cluster quality end-to-end.
-    Keeper semantics for real docs are unchanged: planted ids are all
-    larger than any real id, so cluster minima stay the real keepers,
-    and planted rows are dropped from the output. Scale shape:
-    candidates only form inside capped LSH buckets, the verify runs only
-    on candidate pairs, clustering iterates over the (tiny) verified
-    edge set — the corpus is touched twice (shingle pass, final keeper
-    join), never pairwise; the planted clones add 1% to the scan."""
+def _near_dedup_keepers(corpus: DataFrame) -> DataFrame:
+    """(doc_id, keeper_id) for every doc of ``corpus`` (doc_id, text):
+    the near-dup pipeline of q_llm_near_dedup_pipeline — exact collapse,
+    MinHash-LSH candidates, 3-gram Jaccard verify (≥ 0.8), connected
+    components, cluster-minimum keeper."""
     from fineventstream_spark.operators.cluster import dedup_keepers
 
-    from fineventstream_spark.queries._audit import audits_enabled
-
-    offset = 100_000_000
-    t = Tables(spark, sf_dir)
-    docs = t.documents
-    if audits_enabled():
-        # exact plants (%97, id+1e8) certify collapse→cluster→keeper;
-        # NEAR plants (appended token, id+2e8, ≥16-word sources so the
-        # 0.8 verify threshold clears with margin: 3-gram Jaccard
-        # (N-2)/(N-1) ≥ 0.93) must ride the LIVE LSH→verify→CC path —
-        # the non-tautological half of the gate
-        plant_src = docs.filter(F.col("doc_id") % 97 == 0)
-        near_src = plant_src.filter(
-            F.size(F.split("text", " ")) >= _MIN_NEAR_WORDS
-        ).select("doc_id", "text")
-        planted = plant_src.withColumn("doc_id", F.col("doc_id") + offset)
-        near = near_src.select(
-            (F.col("doc_id") + _NEAR_OFFSET).alias("doc_id"),
-            _appended_token_mutation().alias("text"),
-        )
-        near_padded = near.select(
-            "doc_id",
-            "text",
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in docs.schema.fields
-                if f.name not in ("doc_id", "text")
-            ],
-        )
-        corpus = docs.unionByName(planted).unionByName(near_padded)
-    else:
-        corpus = docs
     # EXACT-COLLAPSE prepass (r10, from the skewed planted-recall audit):
     # identical texts — the boilerplate mass on a real crawl — collapse to
     # one representative (min doc_id per text) BEFORE shingling. A 6-18 k-
@@ -1828,16 +1709,71 @@ def q_llm_near_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_keepers = dedup_keepers(
         rep_corpus, verified.select("id_a", "id_b"), "doc_id"
     ).select(F.col("doc_id").alias("rep_id"), "keeper_id")
-    keepers = members.join(rep_keepers, "rep_id").select("doc_id", "keeper_id")
-    if not audits_enabled():
-        return keepers
-    # the audited gates derive four frames from keepers (orig, clone,
-    # near, leaks) — without the persist the whole kernel→LSH→verify→CC
-    # chain re-ran per consumer (r14; narrow (doc_id, keeper_id) rows)
-    keepers = dedup.persist_tracked(keepers)
-    # AUDITED form (value-oracled since r11, boolean-gate pattern): one
-    # summary row — n_docs and planted_pairs reproduced by the DuckDB
-    # oracle from the documents table, recall_ok TRUE iff every planted
+    return members.join(rep_keepers, "rep_id").select("doc_id", "keeper_id")
+
+
+@register(
+    "q_llm_near_dedup_pipeline",
+    oracle="""
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN doc_id % 97 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS planted_pairs,
+           TRUE AS recall_ok,
+           TRUE AS near_recall_ok,
+           TRUE AS no_planted_leak
+    FROM documents
+    """,
+    tags=("U5", "X1"),
+)
+def q_llm_near_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The near-dup ring composed end-to-end: MinHash-LSH candidates →
+    exact n-gram Jaccard verify (≥ 0.8) → connected components →
+    per-cluster keeper (``_near_dedup_keepers``). Approximate by design
+    (LSH recall), so the result self-certifies: a deterministic ~1% of
+    docs is cloned into the corpus (planted exact duplicates, ids offset
+    by 10^8) and ``recall_ok`` is TRUE iff the full pipeline collapsed
+    every planted pair into one cluster — a driver row that "ran" also
+    proves signature→bucket→verify→cluster quality end-to-end. Planted
+    ids are all larger than any real id, so cluster minima stay the real
+    keepers. Scale shape: candidates only form inside capped LSH
+    buckets, the verify runs only on candidate pairs, clustering
+    iterates over the (tiny) verified edge set — the corpus is touched
+    twice (shingle pass, final keeper join), never pairwise; the planted
+    clones add 1% to the scan."""
+    offset = 100_000_000
+    t = Tables(spark, sf_dir)
+    docs = t.documents
+    # exact plants (%97, id+1e8) certify collapse→cluster→keeper;
+    # NEAR plants (appended token, id+2e8, ≥16-word sources so the
+    # 0.8 verify threshold clears with margin: 3-gram Jaccard
+    # (N-2)/(N-1) ≥ 0.93) must ride the LIVE LSH→verify→CC path —
+    # the non-tautological half of the gate
+    plant_src = docs.filter(F.col("doc_id") % 97 == 0)
+    near_src = plant_src.filter(
+        F.size(F.split("text", " ")) >= _MIN_NEAR_WORDS
+    ).select("doc_id", "text")
+    planted = plant_src.withColumn("doc_id", F.col("doc_id") + offset)
+    near = near_src.select(
+        (F.col("doc_id") + _NEAR_OFFSET).alias("doc_id"),
+        _appended_token_mutation().alias("text"),
+    )
+    near_padded = near.select(
+        "doc_id",
+        "text",
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in docs.schema.fields
+            if f.name not in ("doc_id", "text")
+        ],
+    )
+    corpus = docs.unionByName(planted).unionByName(near_padded)
+    # the gates derive four frames from keepers (orig, clone, near,
+    # leaks) — without the persist the whole kernel→LSH→verify→CC chain
+    # re-ran per consumer (r14; narrow (doc_id, keeper_id) rows)
+    keepers = dedup.persist_tracked(_near_dedup_keepers(corpus))
+    # value-oracled since r11 (boolean-gate pattern): one summary row —
+    # n_docs and planted_pairs reproduced by the DuckDB oracle from the
+    # documents table, recall_ok TRUE iff every planted
     # (orig, clone) pair collapsed to ONE cluster end-to-end, and
     # no_planted_leak TRUE iff no planted id reached the keeper output.
     orig = keepers.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < offset)).select(
@@ -1875,10 +1811,9 @@ def q_llm_near_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).alias("__near_recalled")
     )
-    # leak = a planted id surviving into the production output: either as
-    # a row (the output filter drops doc_id >= offset) or as a real doc's
-    # keeper (impossible by construction — cluster minima are real ids —
-    # which is exactly why it's worth hash-checking)
+    # leak = a planted id as a real doc's keeper (impossible by
+    # construction — cluster minima are real ids — which is exactly why
+    # it's worth hash-checking)
     leaks = keepers.filter(
         (F.col("doc_id") < offset) & (F.col("keeper_id") >= offset)
     ).agg(F.count("*").alias("__leaks"))

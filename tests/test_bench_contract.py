@@ -17,6 +17,7 @@ tests. The layer-schema test traces one real rep.
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib.util
 import json
@@ -174,3 +175,55 @@ def test_default_driver_memory_is_half_of_ram_capped_at_32g():
     assert default_driver_memory(15_600_000_000) == "7438m"
     assert default_driver_memory(64 << 30) == "32768m"
     assert default_driver_memory(1 << 40) == "32768m"
+
+
+ENGINE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fineventstream_spark"
+)
+
+
+def _env_reads(tree) -> set[str]:
+    """Names read through ``os.environ.get``, ``os.getenv`` and
+    ``os.environ[...]``; a non-literal name reads as its source text."""
+
+    def is_environ(node):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    names = set()
+    for node in ast.walk(tree):
+        key = None
+        if isinstance(node, ast.Call) and node.args and isinstance(
+            node.func, ast.Attribute
+        ):
+            f = node.func
+            if (f.attr == "get" and is_environ(f.value)) or (
+                f.attr == "getenv"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "os"
+            ):
+                key = node.args[0]
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            key = node.slice
+        if key is not None:
+            names.add(
+                key.value
+                if isinstance(key, ast.Constant) and isinstance(key.value, str)
+                else ast.unparse(key)
+            )
+    return names
+
+
+def test_engine_reads_only_deployment_env_vars():
+    # the engine's environment is where it runs (lake path, CPUs, driver
+    # heap), never how a query behaves: a query has one form, so a
+    # behaviour switch cannot come back through an env var
+    names = set()
+    for path in glob.glob(os.path.join(ENGINE_DIR, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            names |= _env_reads(ast.parse(f.read(), path))
+    assert names == {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}

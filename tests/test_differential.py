@@ -148,17 +148,6 @@ OVERSIZE_ROW_THRESHOLD = 5_000_000
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match(name, spark, duck, sf_dir):
-    # The registered oracles describe the AUDITED query forms; with
-    # SPARK_GRAFT_AUDIT=off many queries return their production schema
-    # (pair lists, sketch-only rollups) and would hash-fail by
-    # construction (r11 advisor). Refuse loudly instead of failing 30+
-    # queries with opaque column mismatches.
-    from fineventstream_spark.queries._audit import audits_enabled
-
-    assert audits_enabled(), (
-        "the differential suite compares against AUDITED-form oracles; "
-        "unset SPARK_GRAFT_AUDIT (bench-only knob) before running it"
-    )
     q = REGISTRY[name]
     sdf = q.fn(spark, sf_dir)
     spark_cols = sdf.columns
