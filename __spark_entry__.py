@@ -29,11 +29,20 @@ def _registry():
 
 
 def _pin_confs(spark: SparkSession) -> None:
-    """Defensive: the driver may hand us a session without our configs."""
-    from fineventstream_spark.session import SESSION_SQL_CONFS
+    """Defensive: the driver may hand us a session without our configs,
+    and with Python workers that cannot import the package."""
+    import os
+
+    from fineventstream_spark.session import PACKAGE_PARENT, SESSION_SQL_CONFS
 
     for key, value in SESSION_SQL_CONFS:
         spark.conf.set(key, value)
+    # a running session takes no executorEnv conf; Python functions built
+    # from here on carry the context's environment to their workers
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_PARENT])
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -27,6 +27,8 @@ ours.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,6 +153,57 @@ def source_fingerprint(df: DataFrame, sf_dir: str, name: str) -> str:
     return hashlib.sha256(
         (schema_fingerprint(df) + data_fingerprint(sf_dir, name)).encode()
     ).hexdigest()[:12]
+
+
+# Derivatives the engine materializes from the lake (JSONL/CSV/ORC copies,
+# bucketed layouts, the MinHash store) live under <repo>/.cache/<sf name>/,
+# one directory per derivative named "<prefix>-<source_fingerprint>".
+CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache")
+
+# source_fingerprint's form: the only suffix a stale sibling may carry
+_FINGERPRINT_RE = re.compile(r"[0-9a-f]{12}")
+
+
+def cache_path(sf_dir: str, name: str, fingerprint: str = "") -> str:
+    """``<repo>/.cache/<sf name>/<name>-<fingerprint>`` (``<name>`` alone
+    without one) — pure path arithmetic. Keyed on the source fingerprint,
+    a change in the lake's schema, the catalog's normalization or the data
+    itself regenerates a derivative instead of reusing a stale one."""
+    leaf = f"{name}-{fingerprint}" if fingerprint else name
+    return os.path.join(CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)), leaf)
+
+
+def prune_stale_siblings(path: str) -> None:
+    """Delete the superseded fingerprints of the derivative at ``path``
+    (``<prefix>-<fingerprint>``): exactly the siblings named ``<prefix>-``
+    plus a 12-hex source fingerprint.
+
+    Call it only AFTER the new derivative is fully written, so a session
+    still planning a lazy read of its own (still valid) derivative is
+    never raced by one that has not produced the replacement yet.
+
+    Only fingerprints of the same prefix go: one table holds several live
+    layouts at once (lineitem by orderkey and the partkey projection). The
+    suffix must be exactly one fingerprint: a plain bucketed spec
+    ``b32-<key>`` is a string prefix of every projected spec
+    ``b32-<key>-p<hash>`` on the same key, and a prefix-only match would
+    delete those live layouts. A retired spec's directories are left as
+    orphans; clear ``.cache/<sf>`` to reclaim them.
+
+    Single writer per ``.cache/<sf>`` tree (the driver, bench.py and the
+    test suite each own theirs): pruning deletes files another live
+    session may still have registered as an external table."""
+    parent, leaf = os.path.split(path)
+    prefix = leaf.rsplit("-", 1)[0] + "-"
+    if not os.path.isdir(parent):
+        return
+    for entry in os.listdir(parent):
+        if (
+            entry != leaf
+            and entry.startswith(prefix)
+            and _FINGERPRINT_RE.fullmatch(entry[len(prefix) :])
+        ):
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:

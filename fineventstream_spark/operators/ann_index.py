@@ -8,8 +8,8 @@ build from query:
 - **build** (once): k-means centroids over the corpus (driver holds
   k × dim floats — same footprint class as any broadcast dim), assign
   every vector to its nearest list, and write the vectors
-  ``partitionBy("ivf_bucket")`` with the centroids in a JSON sidecar.
-- **query** (many): load the sidecar, pick the ``nprobe`` nearest lists
+  ``partitionBy("ivf_bucket")`` with the centroids in the manifest.
+- **query** (many): load the manifest, pick the ``nprobe`` nearest lists
   on the driver, and read ONLY those hive partitions — Catalyst's
   partition pruning (`PartitionFilters: ivf_bucket IN (...)`) skips the
   other ``(1 - nprobe/k)`` of the corpus before any task launches. The
@@ -24,153 +24,35 @@ exists to avoid. :func:`append_ivf_index` assigns NEW vectors to the
 EXISTING centroids and appends into the partitioned list layout —
 O(append) work, queries prune exactly as before. Appends drift the
 list balance (the data distribution moves away from the build-time
-centroids), so the sidecar records per-list counts at build time and
+centroids), so the manifest records per-list counts at build time and
 every append updates them; :func:`needs_recluster` compares the
 current max/mean list skew against the build-time skew and flags when
 the drift passes a threshold — the recorded, testable signal for the
 (still O(corpus), deliberately explicit) rebuild.
 
-**Epoch-committed appends (r13)**: each build/append writes its own
-``vectors/e=N`` directory and the sidecar's ``epochs`` list is the
-manifest — readers load only committed epochs, so appended rows and
-the updated ``list_counts`` become visible ATOMICALLY at the sidecar
-``os.replace``. The prior ``mode("append")`` made appended rows
-reader-visible before the counts committed, and a crash between write
-and sidecar left a torn state a replay would double-append (r12
-advisor); now a torn epoch directory is simply invisible and a replay
-``mode("overwrite")``s it with identical content before committing.
-Optional ``tag`` gives streaming callers the same idempotence key the
-minhash store has (operators/dedup.py). Single-writer per index.
+Storage is an epoch store (operators/epoch_store.py): one ``vectors``
+table partitioned by ``ivf_bucket``, the centroids and list counts in
+its manifest. Appends, tombstones and compaction commit through it, so
+appended rows and their counts become visible in one manifest replace.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fineventstream_spark.operators import epoch_store
 from fineventstream_spark.operators.kmeans import kmeans_fit
 from fineventstream_spark.operators.similarity import cosine_topk, ivf_assign
 
-_SIDECAR = "_IVF_CENTROIDS.json"
+VECTORS = "vectors"
 
 
 def _list_counts(assigned: DataFrame) -> dict[str, int]:
     rows = assigned.groupBy("ivf_bucket").count().collect()  # k rows, bounded
     return {str(r["ivf_bucket"]): int(r["count"]) for r in rows}
-
-
-def _write_sidecar(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, _SIDECAR + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _SIDECAR))
-
-
-def _load_sidecar(path: str) -> dict:
-    with open(os.path.join(path, _SIDECAR)) as f:
-        meta = json.load(f)
-    if isinstance(meta, list):  # legacy pre-r12 format: bare centroid list
-        return {"centroids": meta, "list_counts": {}, "built_counts": {}}
-    return meta
-
-
-def _next_epoch(meta: dict) -> int:
-    """One shared epoch counter across vector and tombstone epochs — a
-    new epoch number can never alias ANY committed directory (mirrors
-    the minhash store, operators/dedup.py)."""
-    return max(meta["epochs"] + (meta.get("tombstone_epochs") or [])) + 1
-
-
-def _vectors_reader_schema_dict(assigned: DataFrame) -> dict:
-    """Reader schema for the epoch layout — the written (id, vec,
-    ivf_bucket) frame plus the ``e`` partition column. Recorded in the
-    sidecar at build/append so probes never pay a footer-inference job
-    (r14 — same pattern as the minhash store, operators/dedup.py)."""
-    import json
-
-    sch = json.loads(assigned.schema.json())
-    sch["fields"] = list(sch["fields"]) + [
-        {"name": "e", "type": "integer", "nullable": True, "metadata": {}}
-    ]
-    return sch
-
-
-def _schema_from_dict(sch: dict | None):
-    if sch is None:
-        return None
-    from pyspark.sql.types import StructType
-
-    return StructType.fromJson(sch)
-
-
-def _tombstone_reader_schema(meta: dict):
-    """(id, e) — the id field borrowed from the recorded vectors schema."""
-    sch = meta.get("vectors_schema")
-    if sch is None:
-        return None
-    id_field = next(
-        (f for f in sch["fields"] if f["name"] == meta.get("id_col")), None
-    )
-    if id_field is None:
-        return None
-    return _schema_from_dict(
-        {
-            "type": "struct",
-            "fields": [
-                id_field,
-                {"name": "e", "type": "integer", "nullable": True, "metadata": {}},
-            ],
-        }
-    )
-
-
-def _read_tombstones(spark: SparkSession, path: str, meta: dict) -> DataFrame | None:
-    """Committed tombstoned vector ids, or None when the index has none."""
-    epochs = meta.get("tombstone_epochs") or []
-    if not epochs:
-        return None
-    root = os.path.join(path, "tombstones")
-    paths = [os.path.join(root, f"e={e}") for e in epochs]
-    reader = spark.read.option("basePath", root)
-    sch = _tombstone_reader_schema(meta)
-    if sch is not None:
-        reader = reader.schema(sch)
-    return reader.parquet(*paths).select(meta["id_col"])
-
-
-def _minus_tombstones(df: DataFrame, spark, path: str, meta: dict) -> DataFrame:
-    tomb = _read_tombstones(spark, path, meta)
-    if tomb is None:
-        return df
-    from fineventstream_spark.operators.sizing import maybe_broadcast
-
-    # retraction lists are tiny vs the index; size-guarded broadcast
-    # keeps the anti-join map-side (falls back un-hinted if ever large)
-    return df.join(maybe_broadcast(tomb), meta["id_col"], "left_anti")
-
-
-def _read_vectors(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    """Committed epochs only, minus committed tombstones; ``e`` dropped
-    so callers see the stable (id, vec, ivf_bucket) schema. Legacy
-    pre-r13 indexes (no ``epochs`` manifest) read the flat layout as
-    before. The tombstone anti-join sits ABOVE the epoch scan, so a
-    bucket partition filter applied by the caller still pushes down to
-    ``PartitionFilters`` (plan-asserted)."""
-    root = os.path.join(path, "vectors")
-    epochs = meta.get("epochs")
-    if epochs is None:
-        return spark.read.parquet(root)
-    paths = [os.path.join(root, f"e={e}") for e in epochs]
-    reader = spark.read.option("basePath", root)
-    sch = _schema_from_dict(meta.get("vectors_schema"))
-    if sch is not None:
-        reader = reader.schema(sch)
-    df = reader.parquet(*paths).drop("e")
-    return _minus_tombstones(df, spark, path, meta)
 
 
 def _skew(counts: dict[str, int]) -> float:
@@ -188,32 +70,21 @@ def build_ivf_index(
     n_lists: int = 16,
     iterations: int = 5,
 ) -> list[list[float]]:
-    """Fit centroids, bucket the corpus, persist partitioned by list.
-    The sidecar records the build-time per-list counts — the baseline
-    :func:`needs_recluster` measures append drift against."""
+    """Fit centroids, bucket the corpus, persist partitioned by list as
+    epoch 0. The manifest records the build-time per-list counts — the
+    baseline :func:`needs_recluster` measures append drift against."""
     centroids, _ = kmeans_fit(df, vec_col, id_col, k=n_lists, iterations=iterations)
     assigned = ivf_assign(df.select(id_col, vec_col), vec_col, centroids)
-    assigned.write.mode("overwrite").partitionBy("ivf_bucket").parquet(
-        os.path.join(path, "vectors", "e=0")
-    )
-    counts = _list_counts(
-        df.sparkSession.read.parquet(os.path.join(path, "vectors", "e=0"))
-    )
-    _write_sidecar(
+    e0 = epoch_store.epoch_dir(path, VECTORS, 0)
+    assigned.write.mode("overwrite").partitionBy("ivf_bucket").parquet(e0)
+    counts = _list_counts(df.sparkSession.read.parquet(e0))
+    epoch_store.create(
         path,
-        {
-            "centroids": centroids,
-            "list_counts": counts,
-            "built_counts": counts,
-            "epochs": [0],
-            "tags": {},
-            # recorded so tombstone/compaction readers know the stored id
-            # column without the caller re-stating it (r14 lifecycle)
-            "id_col": id_col,
-            "tombstone_epochs": [],
-            # reader schema recorded so probes skip footer inference (r14)
-            "vectors_schema": _vectors_reader_schema_dict(assigned),
-        },
+        id_col,
+        {VECTORS: assigned.schema},
+        centroids=centroids,
+        list_counts=counts,
+        built_counts=counts,
     )
     return centroids
 
@@ -223,179 +94,72 @@ def append_ivf_index(
 ) -> dict:
     """Fold new vectors into the persisted index WITHOUT re-clustering:
     assign to the existing centroids (one narrow pass over the append —
-    no shuffle, no touch of the stored lists) and write them as a NEW
-    committed epoch. Returns the updated sidecar meta (counts + skew),
-    so callers can act on :func:`needs_recluster` immediately.
+    no shuffle, no touch of the stored lists) and commit them as the next
+    epoch with the updated list counts. Returns the manifest (counts +
+    skew), so callers can act on :func:`needs_recluster` immediately; a
+    replay of a committed ``tag`` changes nothing and returns it as is."""
 
-    Atomicity: rows land in ``vectors/e=N`` (invisible — not in the
-    manifest), then the sidecar commits epochs+counts+tags in one
-    ``os.replace``. A crash before the commit leaves an orphan dir the
-    replay overwrites with identical content; a replay of a COMMITTED
-    tagged append is a no-op (``tag`` already in the manifest), so
-    streaming callers get exactly-once, same as the minhash store."""
-    meta = _load_sidecar(path)
-    if tag is not None and tag in meta.get("tags", {}):
-        return meta  # replayed, fully-committed append
-    epochs = meta.get("epochs")
-    if epochs is None:
-        raise ValueError(
-            f"legacy non-epoch IVF layout at {path}: rebuild via build_ivf_index"
+    def write(meta: dict, epoch: int) -> None:
+        # persisted: the assignment kernel feeds both the counts job and
+        # the write — unpersisted it would run twice (r12 review)
+        assigned = ivf_assign(
+            df.select(id_col, vec_col), vec_col, meta["centroids"]
+        ).persist()
+        new_counts = _list_counts(assigned)
+        assigned.write.mode("overwrite").partitionBy("ivf_bucket").parquet(
+            epoch_store.epoch_dir(path, VECTORS, epoch)
         )
-    meta.setdefault("id_col", id_col)  # backfill pre-r14 sidecars
-    epoch = _next_epoch(meta)
-    # persisted: the assignment kernel feeds both the counts job and the
-    # write — unpersisted it would run twice (r12 review), doubling the
-    # dominant cost of the operation this function exists to make cheap
-    assigned = ivf_assign(
-        df.select(id_col, vec_col), vec_col, meta["centroids"]
-    ).persist()
-    new_counts = _list_counts(assigned)
-    assigned.write.mode("overwrite").partitionBy("ivf_bucket").parquet(
-        os.path.join(path, "vectors", f"e={epoch}")
-    )
-    assigned.unpersist()
-    counts = dict(meta.get("list_counts", {}))
-    for b, n in new_counts.items():
-        counts[b] = counts.get(b, 0) + n
-    meta["list_counts"] = counts
-    meta["epochs"] = epochs + [epoch]
-    if tag is not None:
-        meta.setdefault("tags", {})[tag] = epoch
-    if "vectors_schema" not in meta:
-        # pre-r14 sidecar: record the reader schema with this commit
-        meta["vectors_schema"] = _vectors_reader_schema_dict(assigned)
-    _write_sidecar(path, meta)
-    return meta
+        assigned.unpersist()
+        counts = meta["list_counts"]
+        for b, n in new_counts.items():
+            counts[b] = counts.get(b, 0) + n
+
+    return epoch_store.append(path, write, tag) or epoch_store.load(path)
 
 
 def tombstone_ivf_index(
     ids: DataFrame, path: str, id_col: str | None = None, tag: str | None = None
 ) -> bool:
-    """Retract vectors from the index (r13 verdict ask #2 — the text
-    store's delete contract extended to the ANN ring): append a
-    TOMBSTONE EPOCH naming vector ids whose embeddings are withdrawn
-    (document takedown, user deletion — a retracted document's embedding
-    must not keep surfacing as a neighbor). Committed through the same
-    atomic sidecar manifest as every append: a torn tombstone is
-    invisible, a tagged replay is a no-op. From the commit on,
-    :func:`query_ivf_index` anti-joins the ids out of every probe;
-    physical erasure happens at the next :func:`compact_ivf_index`,
-    which rewrites the lists WITHOUT tombstoned vectors and clears the
-    list — the Delta/Iceberg delete contract, mirroring
-    ``tombstone_minhash_store`` (operators/dedup.py). ``list_counts``
-    keep counting PHYSICAL rows until compaction (tombstoned vectors
-    still occupy their lists on disk, so probe cost — what the drift
-    signal guards — is unchanged until the rewrite). Returns True when
-    the epoch committed; single-writer per index."""
-    meta = _load_sidecar(path)
-    if tag is not None and tag in meta.get("tags", {}):
-        return False
-    if meta.get("epochs") is None:
-        raise ValueError(
-            f"legacy non-epoch IVF layout at {path}: rebuild via build_ivf_index"
-        )
-    store_id = meta.get("id_col") or id_col
-    if store_id is None:
-        raise ValueError(
-            "sidecar records no id_col (pre-r14 index): pass id_col= explicitly"
-        )
-    meta["id_col"] = store_id
-    src_col = id_col or store_id
-    epoch = _next_epoch(meta)
-    (
-        ids.select(F.col(src_col).alias(store_id))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "tombstones", f"e={epoch}"))
-    )
-    meta["tombstone_epochs"] = (meta.get("tombstone_epochs") or []) + [epoch]
-    if tag is not None:
-        meta.setdefault("tags", {})[tag] = epoch
-    _write_sidecar(path, meta)
-    return True
+    """Retract vectors from the index (a retracted document's embedding
+    must not keep surfacing as a neighbor): a tombstone epoch naming the
+    ids in ``ids[id_col]`` (default: the index's id column).
+    :func:`query_ivf_index` anti-joins them from the commit on, and
+    :func:`compact_ivf_index` erases them. ``list_counts`` keep counting
+    PHYSICAL rows until compaction (tombstoned vectors still occupy their
+    lists on disk, so probe cost — what the drift signal guards — is
+    unchanged until the rewrite). A tagged replay is a no-op returning
+    False."""
+    return epoch_store.tombstone(ids, path, id_col, tag)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> bool:
     """Fold every committed vector epoch into ONE new base epoch (r13
-    verdict ask #2). A daily-append index is at 365 ``vectors/e=N``
+    verdict ask #2): a daily-append index is at 365 ``vectors/e=N``
     directories within a year, each multiplying per-list files until
-    listing + tiny-file reads dominate every probe — the same
-    small-files decay ``compact_minhash_store`` fixed for the text
-    store. The fold:
+    listing + tiny-file reads dominate every probe. ``list_counts`` are
+    recomputed from the rewritten base (erased vectors leave their
+    lists). No centroid is recomputed — assignment is centroid-determined,
+    so probe results are identical pre/post minus tombstoned ids (pinned
+    by test), and ``built_counts`` (the recluster-drift baseline) stay:
+    compaction is storage maintenance, not reclustering. Returns False
+    when there was nothing to fold."""
 
-    - reads the union of committed epochs THROUGH the tombstone
-      anti-join and rewrites it as epoch ``_next_epoch`` (never a reused
-      number, so a torn compaction's partial directory can never alias
-      a committed epoch), partitioned by ``ivf_bucket`` as always;
-    - recomputes ``list_counts`` from the rewritten base (erased
-      vectors leave their lists — the physical erasure point);
-    - commits ``epochs=[new]``, ``tombstone_epochs=[]`` in the same
-      atomic sidecar ``os.replace`` every mutation uses — readers
-      switch in one step, a crash before the commit leaves the old
-      manifest fully valid (torn compaction invisible), and ``tags``
-      are preserved so replayed committed appends stay no-ops;
-    - sweeps superseded directories only AFTER the commit (best-effort;
-      strays are ignorable orphans readers never load).
+    def rewrite(meta: dict, epoch: int) -> None:
+        # cluster by list before the write: without it every input task
+        # writes a sliver into every hive partition (n_tasks × n_lists
+        # files — the first evidence run measured 3.6k files after folding
+        # 61 epochs); hash-repartitioned on ivf_bucket each list lands
+        # wholly in one task → ONE file per list. n_cores keys keeps the
+        # fold parallel up to min(n_lists, cores).
+        n_cores = spark.sparkContext.defaultParallelism
+        out = epoch_store.epoch_dir(path, VECTORS, epoch)
+        vectors = epoch_store.read(spark, path, meta, VECTORS)
+        vectors.repartition(n_cores, "ivf_bucket").write.mode("overwrite").partitionBy(
+            "ivf_bucket"
+        ).parquet(out)
+        meta["list_counts"] = _list_counts(spark.read.parquet(out))
 
-    No centroid is recomputed — assignment is centroid-determined, so
-    probe results are identical pre/post minus tombstoned ids (pinned
-    by test). ``built_counts`` (the recluster-drift baseline) survive
-    unchanged: compaction is storage maintenance, not reclustering.
-    Returns False (no-op, after an orphan sweep) when the index already
-    has a single epoch and no tombstones. Single-writer per index."""
-    meta = _load_sidecar(path)
-    if meta.get("epochs") is None:
-        raise ValueError(
-            f"legacy non-epoch IVF layout at {path}: rebuild via build_ivf_index"
-        )
-    old_epochs = list(meta["epochs"])
-    if len(old_epochs) <= 1 and not meta.get("tombstone_epochs"):
-        # still sweep orphans: a crash during a PREVIOUS compaction's
-        # post-commit cleanup strands superseded dirs no later compaction
-        # would target; single-writer, so any on-disk epoch not in the
-        # manifest is garbage by definition
-        _sweep_orphan_epochs(path, set(old_epochs))
-        return False
-    new_epoch = _next_epoch(meta)
-    vectors = _read_vectors(spark, path, meta)  # committed ∖ tombstoned
-    # cluster by list before the write: without it every input task
-    # writes a sliver into every hive partition (n_tasks × n_lists
-    # files — the first evidence run measured 3.6k files after folding
-    # 61 epochs); hash-repartitioned on ivf_bucket each list lands
-    # wholly in one task → ONE file per list. n_cores keys keeps the
-    # fold parallel up to min(n_lists, cores).
-    n_cores = spark.sparkContext.defaultParallelism
-    vectors.repartition(n_cores, "ivf_bucket").write.mode("overwrite").partitionBy(
-        "ivf_bucket"
-    ).parquet(os.path.join(path, "vectors", f"e={new_epoch}"))
-    meta["list_counts"] = _list_counts(
-        spark.read.parquet(os.path.join(path, "vectors", f"e={new_epoch}"))
-    )
-    meta["epochs"] = [new_epoch]
-    meta["tombstone_epochs"] = []
-    _write_sidecar(path, meta)
-    _sweep_orphan_epochs(path, {new_epoch})
-    return True
-
-
-def _sweep_orphan_epochs(path: str, keep: set[int]) -> None:
-    """Remove every on-disk ``e=N`` not in the committed manifest —
-    superseded epochs after a compaction commit, plus strays from torn
-    appends/compactions. Safe under the single-writer discipline:
-    readers only load manifest epochs."""
-    import shutil
-
-    for sub in ("vectors", "tombstones"):
-        root = os.path.join(path, sub)
-        if not os.path.isdir(root):
-            continue
-        for entry in os.listdir(root):
-            if (
-                entry.startswith("e=")
-                and entry[2:].isdigit()
-                and int(entry[2:]) not in keep
-            ):
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+    return epoch_store.compact(path, rewrite)
 
 
 def needs_recluster(path: str, drift_ratio: float = 1.5) -> bool:
@@ -406,8 +170,8 @@ def needs_recluster(path: str, drift_ratio: float = 1.5) -> bool:
     appends concentrating where the centroids no longer describe the
     data, which degrades the nprobe/recall trade (hot lists scan more,
     cold lists waste probes)."""
-    meta = _load_sidecar(path)
-    built, now = meta.get("built_counts", {}), meta.get("list_counts", {})
+    meta = epoch_store.load(path)
+    built, now = meta["built_counts"], meta["list_counts"]
     if not built or not now:
         return False
     return _skew(now) > drift_ratio * _skew(built)
@@ -424,7 +188,7 @@ def query_ivf_index(
 ) -> DataFrame:
     """Top-k over the persisted index, reading only the probed partitions
     of the COMMITTED epochs."""
-    meta = _load_sidecar(path)
+    meta = epoch_store.load(path)
     centroids = meta["centroids"]
 
     def cos(a: list[float], b: list[float]) -> float:
@@ -436,6 +200,6 @@ def query_ivf_index(
     probe = sorted(range(len(centroids)), key=lambda i: -cos(centroids[i], query))[
         :nprobe
     ]
-    vectors = _read_vectors(spark, path, meta)
+    vectors = epoch_store.read(spark, path, meta, VECTORS)
     pruned = vectors.filter(F.col("ivf_bucket").isin([int(p) for p in probe]))
     return cosine_topk(pruned, vec_col, id_col, query, k)

@@ -33,13 +33,14 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fineventstream_spark.catalog import load_table, source_fingerprint
+from fineventstream_spark.catalog import (
+    cache_path,
+    load_table,
+    prune_stale_siblings,
+    source_fingerprint,
+)
 
 N_BUCKETS = 32
-
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".cache"
-)
 
 # the bucket keys the engine's headline queries co-locate on
 # r15 adds the events/user_id layout (verdict #4 A/B at sf10, table in
@@ -75,11 +76,6 @@ def q5_prejoin_spec() -> dict:
 # Spark bucketed writes encode the bucket id in the file name:
 # part-<task>-<uuid>_<bucketId>.c000.snappy.parquet
 _BUCKET_ID_RE = re.compile(r"_(\d{5})\.c\d{3}")
-
-# catalog.source_fingerprint: sha256 hex truncated to 12 chars — the only
-# thing allowed after "<table>_bucketed-<spec>-" for _prune_stale to treat
-# an entry as a stale fingerprint of that same spec
-_FINGERPRINT_RE = re.compile(r"[0-9a-f]{12}")
 
 
 def _bucket_spec(
@@ -124,49 +120,9 @@ def _bucketed_paths(
     bucket-pruned scans.
     """
     sf = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_CACHE_ROOT, sf, f"{table}_bucketed-{spec}-{fingerprint}")
+    path = cache_path(sf_dir, f"{table}_bucketed-{spec}", fingerprint)
     name = f"fes_{table}_bkt_{spec}_{sf}_{fingerprint}".replace(".", "_").replace("-", "_")
     return path, name
-
-
-def _prune_stale(path: str, table: str, spec: str) -> None:
-    """Drop superseded FINGERPRINTS of this exact table × layout spec —
-    only after the replacement is fully written (same race discipline as
-    queries/scans.py derivatives). Scoped to the spec on purpose: a table
-    legitimately holds several live layouts at once (lineitem bucketed by
-    orderkey for Q5/Q9 AND the partkey covering projection), so pruning
-    across specs would delete a layout other queries still serve from.
-    A deliberate N_BUCKETS/key retirement therefore leaves the old spec's
-    files as orphans; reclaim them by clearing ``.cache/<sf>``.
-
-    SINGLE-WRITER ASSUMPTION (r6 advisor): pruning deletes files another
-    live session may still have registered as an external table; its
-    in-flight scans would fail mid-read. This matches the repo-wide
-    derivative discipline (queries/scans.py): one process owns a given
-    ``.cache/<sf>`` tree at a time — true for the driver, bench.py and the
-    test suite. Multi-writer deployments should prune at startup instead.
-
-    SPEC-BOUNDARY PARSE (r8 advisor): a plain spec ``b32-<key>`` is a
-    string PREFIX of every projected spec ``b32-<key>-p<hash>`` on the
-    same key, so ``startswith`` alone would let a plain-layout rebuild
-    rmtree live covering-projection dirs. The segment after the spec must
-    therefore be EXACTLY a source fingerprint (12 hex chars, no dashes —
-    catalog.source_fingerprint) for the entry to count as a stale
-    fingerprint of THIS spec.
-    """
-    import shutil
-
-    parent, leaf = os.path.split(path)
-    if not os.path.isdir(parent):
-        return
-    prefix = f"{table}_bucketed-{spec}-"
-    for entry in os.listdir(parent):
-        if (
-            entry != leaf
-            and entry.startswith(prefix)
-            and _FINGERPRINT_RE.fullmatch(entry[len(prefix) :])
-        ):
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
 
 
 def _assert_one_file_per_bucket(path: str, table: str) -> None:
@@ -270,8 +226,7 @@ def bucket_skew_ratio(path: str) -> float:
 
 
 def _registry_path(sf_dir: str) -> str:
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_CACHE_ROOT, sf, _SKEW_REGISTRY)
+    return cache_path(sf_dir, _SKEW_REGISTRY)
 
 
 def _record_skew(sf_dir: str, table: str, key: str, ratio: float) -> None:
@@ -281,7 +236,7 @@ def _record_skew(sf_dir: str, table: str, key: str, ratio: float) -> None:
     partner's ratio without knowing its projection spec). Entries carry the
     source data fingerprint — a regenerated fixture invalidates them.
     Atomic replace; single-writer per ``.cache/<sf>`` as documented on
-    :func:`_prune_stale`."""
+    ``catalog.prune_stale_siblings``."""
     import json
 
     from fineventstream_spark.catalog import data_fingerprint
@@ -535,7 +490,7 @@ def ensure_bucketed(
         _assert_one_file_per_bucket(path, table)
         _measure_and_record_skew(path, sf_dir, table, key)
         _SKEW_RECORDED.add(path)
-        _prune_stale(path, table, spec)
+        prune_stale_siblings(path)
         _ENSURED[memo_key] = (data_fps, name)
         return name
     # files already on disk from an earlier session: re-register metadata —

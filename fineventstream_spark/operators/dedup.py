@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fineventstream_spark.operators import epoch_store
 from fineventstream_spark.operators.sizing import spread_for_kernel
 
 # Large prime < 2^31 keeps rolling-hash arithmetic inside exact long range
@@ -627,14 +628,14 @@ def simhash_candidates(
 # The production form of near-dedup a daily-ingest pipeline needs: dedup a
 # new shard against the accumulated corpus WITHOUT rescanning it. The
 # corpus's text never moves again — what persists is a fingerprint store,
-# O(reps) and text-free:
+# O(reps) and text-free, committed through operators/epoch_store.py:
 #
 #   sigs/   (rep_id, text_sha, sig array<bigint>)     content-addressed probe
 #                                                      + est_jaccard lookup
 #   bands/  (band, bucket, rep_id) PARTITIONED BY bp   the LSH index the
 #           = pmod(bucket, 64), bucket-sorted files     shard joins against
-#   store.json                                          spec sidecar (success
-#                                                       marker, param guard)
+#   _MANIFEST.json                                      epochs, tags, schemas
+#                                                       + the hash spec
 #
 # Incremental cost is O(shard + matched buckets): the shard pays its own
 # signature kernel, the store contributes only (a) a text_sha probe of the
@@ -650,41 +651,16 @@ def simhash_candidates(
 # persisted high-water mark are reprocessed); equivalence with the
 # from-scratch recompute is the registered oracle of
 # q_llm_dedup_incremental (queries/llm.py).
+#
+# DELETES (r12 verdict #8, implemented r13). sigs/bands hold only
+# representatives, so deleting a plain member doc needs no store mutation
+# (pair-log rows naming it belong to the caller's retention policy).
+# Tombstoning a REP retracts its CONTENT: probes treat that text as
+# unseen, so a shard copy becomes a new rep — the from-scratch recompute
+# on the corpus minus the whole content group (takedown semantics).
 # ---------------------------------------------------------------------------
 
-_STORE_SIDECAR = "store.json"
 _STORE_BUCKET_PARTS = 64
-
-# DELETES / RETRACTIONS — design decision (r12 verdict #8). A production
-# corpus also REMOVES documents (takedowns, licensing, user deletion).
-# What a delete of doc_id D means for this store:
-#
-# - D was a plain member (not a rep): nothing in the store references D —
-#   sigs/bands hold only representatives. No store mutation needed; the
-#   pair LOG (id_a, id_b) rows naming D are downstream artifacts the
-#   caller's retention policy owns, exactly like any emitted event.
-# - D was a REP: its signature and band entries still describe content
-#   that may live on under other member ids, so physical removal is
-#   wrong unless the whole content group is gone. The correct mechanism
-#   is a TOMBSTONE EPOCH: append an epoch of (rep_id, deleted=true)
-#   rows committed through the same sidecar manifest; readers
-#   anti-join committed tombstones during _read_store_sigs/_read_store
-#   _bands, and compaction folds them in physically (tombstoned reps
-#   simply don't survive the rewrite — GDPR-style physical erasure
-#   happens at the next compaction, the same contract Delta/Iceberg
-#   give). Re-probing after a rep tombstone re-elects the min surviving
-#   member on the next shard touch, keeping the min-id keeper rule.
-#
-# IMPLEMENTED (r13, upgrading the design note): tombstone_minhash_store
-# appends a tombstone epoch through the same manifest; the committed
-# readers anti-join it; compact_minhash_store performs the physical
-# erasure and resets the tombstone list. CONTRACT: tombstoning a rep
-# declares the CONTENT RETRACTED from the store — probes treat that
-# text as unseen (a shard copy becomes a new rep), which equals the
-# from-scratch recompute on the corpus minus the whole content group
-# (the takedown semantics a retraction means). It does NOT mean
-# "remove one member doc" — member deletes need no store mutation at
-# all (first bullet above).
 
 
 def _rep_signatures(
@@ -736,18 +712,15 @@ def _exploded_bands(sigs: DataFrame, bucket_parts: int) -> DataFrame:
 def _write_bands(
     bands_df: DataFrame, path: str, epoch: int, bucket_parts: int
 ) -> None:
-    """Write band rows into one EPOCH of the bp-partitioned layout,
+    """Write band rows into one epoch of the bp-partitioned layout,
     bucket-sorted within files so parquet row-group min/max stats prune
-    inside a partition. An epoch directory is only visible to readers
-    once the sidecar commits it (see append_minhash_store)."""
-    import os
-
+    inside a partition."""
     (
         bands_df.repartition(bucket_parts, "bp")
         .sortWithinPartitions("bp", "band", "bucket")
         .write.mode("overwrite")
         .partitionBy("bp")
-        .parquet(os.path.join(path, "bands", f"e={epoch}"))
+        .parquet(epoch_store.epoch_dir(path, "bands", epoch))
     )
 
 
@@ -757,150 +730,6 @@ def _write_bands(
 # one NULL-text doc as a REP, diverging from this path on corpora mixing
 # NULL and empty texts) and the store path exclude them EXPLICITLY at
 # build and probe, so the two sides share one stated semantics.
-
-
-# --- explicit reader schemas (r14 optimization) ------------------------------
-# Building a store reader with schema INFERENCE launches a footer-reading
-# job (plus the partition-discovery listing) on EVERY probe — measured at
-# sf0.1: +1 job/~0.3 s for sigs and +2 jobs/~1.2-2.4 s for the
-# bp-partitioned band table, paid per query invocation, and growing with
-# epoch/file count at scale (guide §6: small-files listing decay; §1.2:
-# don't compute things you throw away — the schema is knowable). The
-# sidecar therefore records the full READER schema (data + partition
-# columns) at build/append time; readers pass it explicitly and never
-# touch a footer. Stores created before this key exist are upgraded IN
-# PLACE by _ensure_reader_schemas (one inference, then the sidecar
-# carries it — same atomic os.replace commit as every store mutation).
-
-
-def _e_field() -> dict:
-    return {"name": "e", "type": "integer", "nullable": True, "metadata": {}}
-
-
-def _bp_field() -> dict:
-    return {"name": "bp", "type": "integer", "nullable": True, "metadata": {}}
-
-
-def _sigs_reader_schema_dict(sigs_df: DataFrame) -> dict:
-    import json
-
-    sch = json.loads(sigs_df.schema.json())
-    sch["fields"] = list(sch["fields"]) + [_e_field()]
-    return sch
-
-
-def _bands_reader_schema_dict(sigs_df: DataFrame) -> dict:
-    """Band-table reader schema derived from the sigs frame's rep_id type:
-    (rep_id, band, bucket) data columns + bp/e partition columns — exactly
-    what _write_bands(_exploded_bands(sigs)) lays down."""
-    import json
-
-    rep_field = next(
-        f for f in json.loads(sigs_df.schema.json())["fields"]
-        if f["name"] == "rep_id"
-    )
-    return {
-        "type": "struct",
-        "fields": [
-            rep_field,
-            {"name": "band", "type": "integer", "nullable": False, "metadata": {}},
-            {"name": "bucket", "type": "long", "nullable": True, "metadata": {}},
-            _bp_field(),
-            _e_field(),
-        ],
-    }
-
-
-def _schema_from_dict(sch: dict | None):
-    if sch is None:
-        return None
-    from pyspark.sql.types import StructType
-
-    return StructType.fromJson(sch)
-
-
-def _ensure_reader_schemas(spark: SparkSession, path: str, meta: dict) -> dict:
-    """Upgrade a pre-r14 sidecar in place: infer the sigs schema ONCE,
-    derive the band schema from it, and commit both so no later probe
-    ever pays an inference job. No-op when already recorded. Runs under
-    the store's single-writer discipline (the callers are the same
-    process that owns every other store mutation)."""
-    import os
-
-    if "sigs_schema" in meta and "bands_schema" in meta:
-        return meta
-    root = os.path.join(path, "sigs")
-    first = os.path.join(root, f"e={meta['epochs'][0]}")
-    sigs_df = spark.read.parquet(first)
-    meta["sigs_schema"] = _sigs_reader_schema_dict(sigs_df)
-    meta["bands_schema"] = _bands_reader_schema_dict(sigs_df)
-    _commit_sidecar(path, meta)
-    return meta
-
-
-# Tombstone epochs are written with rep_id cast to long (see
-# tombstone_minhash_store), so their reader schema is a constant.
-_TOMBSTONE_READER_SCHEMA = {
-    "type": "struct",
-    "fields": [
-        {"name": "rep_id", "type": "long", "nullable": True, "metadata": {}},
-        {"name": "e", "type": "integer", "nullable": True, "metadata": {}},
-    ],
-}
-
-
-def _read_tombstones(spark: SparkSession, path: str, meta: dict) -> DataFrame | None:
-    """Committed tombstoned rep ids, or None when the store has none."""
-    import os
-
-    epochs = meta.get("tombstone_epochs") or []
-    if not epochs:
-        return None
-    root = os.path.join(path, "tombstones")
-    paths = [os.path.join(root, f"e={e}") for e in epochs]
-    return (
-        spark.read.schema(_schema_from_dict(_TOMBSTONE_READER_SCHEMA))
-        .option("basePath", root)
-        .parquet(*paths)
-        .select("rep_id")
-    )
-
-
-def _minus_tombstones(df: DataFrame, spark, path: str, meta: dict) -> DataFrame:
-    tomb = _read_tombstones(spark, path, meta)
-    if tomb is None:
-        return df
-    from fineventstream_spark.operators.sizing import maybe_broadcast
-
-    # retraction lists are tiny vs the store; size-guarded broadcast
-    # keeps the anti-join map-side (falls back un-hinted if ever large)
-    return df.join(maybe_broadcast(tomb), "rep_id", "left_anti")
-
-
-def _read_store_sigs(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    import os
-
-    root = os.path.join(path, "sigs")
-    paths = [os.path.join(root, f"e={e}") for e in meta["epochs"]]
-    reader = spark.read.option("basePath", root)
-    sch = _schema_from_dict(meta.get("sigs_schema"))
-    if sch is not None:
-        reader = reader.schema(sch)
-    df = reader.parquet(*paths).drop("e")
-    return _minus_tombstones(df, spark, path, meta)
-
-
-def _read_store_bands(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    import os
-
-    root = os.path.join(path, "bands")
-    paths = [os.path.join(root, f"e={e}") for e in meta["epochs"]]
-    reader = spark.read.option("basePath", root)
-    sch = _schema_from_dict(meta.get("bands_schema"))
-    if sch is not None:
-        reader = reader.schema(sch)
-    df = reader.parquet(*paths).drop("e")
-    return _minus_tombstones(df, spark, path, meta)
 
 
 def build_minhash_store(
@@ -913,148 +742,60 @@ def build_minhash_store(
     bands: int = 16,
     shingle_n: int = 3,
 ) -> None:
-    """Build the persisted fingerprint store from the current corpus.
+    """Build the persisted fingerprint store from the current corpus as
+    epoch 0.
 
     One signature pass over the corpus reps, then the corpus text is
     never needed again: subsequent shards dedup against ``path`` via
     :func:`incremental_dedup_against_store` and fold in via
-    :func:`append_minhash_store`.
-
-    Storage is EPOCH-COMMITTED (r12): sigs/ and bands/ hold ``e=N``
-    directories, and the sidecar's ``epochs`` list is the manifest —
-    readers load only committed epochs, so a torn build (no sidecar) or
-    a torn append (epoch dir written, sidecar not yet replaced) is
-    simply invisible. The sidecar ``os.replace`` is the atomic commit
-    point, the same shape a table format's transaction log provides.
-    Single-writer per store, as with every .cache derivative."""
-    import os
-
+    :func:`append_minhash_store`."""
     spark = docs.sparkSession
     sigs = _rep_signatures(docs, text_col, id_col, num_hashes, bands, shingle_n)
-    sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs", "e=0"))
+    sigs_dir = epoch_store.epoch_dir(path, "sigs", 0)
+    sigs.write.mode("overwrite").parquet(sigs_dir)
     # re-read rather than recompute: the Arrow kernel is the expensive
     # step, and reading back also guarantees sigs/ and bands/ agree
-    sigs_r = spark.read.parquet(os.path.join(path, "sigs", "e=0"))
-    _write_bands(
-        _exploded_bands(sigs_r, _STORE_BUCKET_PARTS), path, 0, _STORE_BUCKET_PARTS
-    )
-    _commit_sidecar(
+    sigs_r = spark.read.schema(sigs.schema).parquet(sigs_dir)
+    band_rows = _exploded_bands(sigs_r, _STORE_BUCKET_PARTS)
+    _write_bands(band_rows, path, 0, _STORE_BUCKET_PARTS)
+    epoch_store.create(
         path,
-        {
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_n": shingle_n,
-            "bucket_parts": _STORE_BUCKET_PARTS,
-            "epochs": [0],
-            "tags": {},
-            # reader schemas recorded at build time: probes never pay a
-            # footer-inference job (r14 — see _ensure_reader_schemas)
-            "sigs_schema": _sigs_reader_schema_dict(sigs_r),
-            "bands_schema": _bands_reader_schema_dict(sigs_r),
-        },
+        "rep_id",
+        {"sigs": sigs.schema, "bands": band_rows.schema},
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        bucket_parts=_STORE_BUCKET_PARTS,
     )
-
-
-def _commit_sidecar(path: str, meta: dict) -> None:
-    import json
-    import os
-
-    tmp = os.path.join(path, _STORE_SIDECAR + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _STORE_SIDECAR))
-
-
-def _load_store_spec(path: str) -> dict:
-    import json
-    import os
-
-    sidecar = os.path.join(path, _STORE_SIDECAR)
-    if not os.path.exists(sidecar):
-        raise FileNotFoundError(
-            f"no fingerprint store at {path} (missing {_STORE_SIDECAR})"
-        )
-    with open(sidecar) as fh:
-        return json.load(fh)
 
 
 def append_minhash_store(
     new_sigs: DataFrame, path: str, tag: str | None = None
 ) -> bool:
     """Fold a shard's NEW representatives (the ``new_sigs`` frame an
-    incremental run returns) into the store as the next EPOCH.
+    incremental run returns) into the store as the next epoch. With
+    ``tag`` set (e.g. "<checkpoint>:<batch_id>" from a streaming caller),
+    a tag already committed is a no-op returning False. Returns True
+    when the epoch committed."""
 
-    The epoch directory is written first, then the sidecar commit
-    (atomic ``os.replace``) makes it visible — a crash mid-append leaves
-    an orphan directory readers never load. With ``tag`` set (e.g.
-    "<checkpoint>:<batch_id>" from a streaming caller), a tag already
-    committed is a no-op returning False — the exactly-once recipe of
-    streaming/sink.py applied to the store, which is itself the
-    reference's high-water idempotence pattern
-    (producer_company_news.py:128-141). Returns True when the epoch
-    committed."""
-    import os
+    def write(meta: dict, epoch: int) -> None:
+        sigs = persist_tracked(new_sigs)
+        sigs.write.mode("overwrite").parquet(epoch_store.epoch_dir(path, "sigs", epoch))
+        parts = meta["bucket_parts"]
+        _write_bands(_exploded_bands(sigs, parts), path, epoch, parts)
 
-    meta = _load_store_spec(path)
-    if tag is not None and tag in meta.get("tags", {}):
-        return False
-    new_sigs = persist_tracked(new_sigs)
-    epoch = _next_epoch(meta)
-    new_sigs.write.mode("overwrite").parquet(
-        os.path.join(path, "sigs", f"e={epoch}")
-    )
-    bp_parts = meta["bucket_parts"]
-    _write_bands(_exploded_bands(new_sigs, bp_parts), path, epoch, bp_parts)
-    meta["epochs"] = meta["epochs"] + [epoch]
-    if tag is not None:
-        meta.setdefault("tags", {})[tag] = epoch
-    if "sigs_schema" not in meta:
-        # pre-r14 store: record reader schemas with this commit so later
-        # probes skip footer inference (appends write the same shape)
-        meta["sigs_schema"] = _sigs_reader_schema_dict(new_sigs)
-        meta["bands_schema"] = _bands_reader_schema_dict(new_sigs)
-    _commit_sidecar(path, meta)
-    return True
-
-
-def _next_epoch(meta: dict) -> int:
-    """One shared epoch counter across sigs/bands and tombstone epochs —
-    a new epoch number can never alias ANY committed directory."""
-    return max(meta["epochs"] + (meta.get("tombstone_epochs") or [])) + 1
+    return epoch_store.append(path, write, tag) is not None
 
 
 def tombstone_minhash_store(
     rep_ids: DataFrame, path: str, id_col: str = "rep_id", tag: str | None = None
 ) -> bool:
-    """Retract content from the store (r12 verdict #8, implemented r13):
-    append a TOMBSTONE EPOCH naming representative ids whose content is
-    withdrawn (takedown, licensing, user deletion). Committed through
-    the same atomic sidecar manifest as every append — a torn tombstone
-    is invisible, a tagged replay is a no-op. From the commit on, the
-    store's readers treat the content as unseen: probes of identical
-    text get no sha hit and no band match, so the next shard touch
-    re-elects a new representative — exactly the from-scratch behavior
-    on a corpus with the content group removed. Physical erasure
-    (GDPR-style) happens at the next :func:`compact_minhash_store`,
-    which rewrites sigs/bands WITHOUT tombstoned reps and clears the
-    tombstone list — the Delta/Iceberg delete contract."""
-    import os
-
-    meta = _load_store_spec(path)
-    if tag is not None and tag in meta.get("tags", {}):
-        return False
-    epoch = _next_epoch(meta)
-    (
-        rep_ids.select(F.col(id_col).cast("long").alias("rep_id"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "tombstones", f"e={epoch}"))
-    )
-    meta["tombstone_epochs"] = (meta.get("tombstone_epochs") or []) + [epoch]
-    if tag is not None:
-        meta.setdefault("tags", {})[tag] = epoch
-    _commit_sidecar(path, meta)
-    return True
+    """Retract content from the store: a tombstone epoch naming the
+    representative ids in ``rep_ids[id_col]`` (see the DELETES note
+    above). From the commit on, probes of identical text get no sha hit
+    and no band match; :func:`compact_minhash_store` erases the rows.
+    A tagged replay is a no-op returning False."""
+    return epoch_store.tombstone(rep_ids, path, id_col, tag)
 
 
 def compact_minhash_store(spark: SparkSession, path: str) -> bool:
@@ -1062,73 +803,21 @@ def compact_minhash_store(spark: SparkSession, path: str) -> bool:
     #2). A daily-append store is at 365 epochs within a year, and every
     probe unions all of them — per-epoch parquet files multiply under
     each ``bp=`` partition until listing + tiny-file reads dominate the
-    probe (the exact small-files regression the engine measured and
-    fixed for the lake derivatives, BASELINE r11). Compaction is the
-    store's equivalent of that lake rewrite:
+    probe (the small-files regression the engine measured and fixed for
+    the lake derivatives, BASELINE r11). No signature is recomputed: a
+    pure storage fold, so probe results are bit-identical pre/post
+    (pinned by test). Returns False when there was nothing to fold."""
 
-    - the union of committed sigs/bands is REWRITTEN as epoch
-      ``max(epochs)+1`` (never a reused number, so a torn compaction's
-      partial directories can never alias a committed epoch);
-    - the sidecar then commits ``epochs=[new]`` in the same atomic
-      ``os.replace`` every build/append uses — readers switch from all
-      old epochs to the single new one in one step, and a crash before
-      the commit leaves the old manifest fully valid (torn compaction
-      is invisible; a re-run overwrites the same orphan);
-    - ``tags`` are PRESERVED: a replayed streaming batch whose tag
-      committed pre-compaction must stay a no-op after it;
-    - superseded epoch directories are removed only AFTER the commit
-      (best-effort — a crash mid-cleanup leaves ignorable orphans,
-      same class as a torn append).
+    def rewrite(meta: dict, epoch: int) -> None:
+        n_cores = spark.sparkContext.defaultParallelism
+        sigs = epoch_store.read(spark, path, meta, "sigs")
+        sigs.repartition(n_cores, "rep_id").write.mode("overwrite").parquet(
+            epoch_store.epoch_dir(path, "sigs", epoch)
+        )
+        bands = epoch_store.read(spark, path, meta, "bands")
+        _write_bands(bands, path, epoch, meta["bucket_parts"])
 
-    No signature is recomputed: this is a pure storage fold, so probe
-    results are bit-identical pre/post (pinned by test). Returns False
-    (no-op) when the store already has a single epoch and no orphan
-    cleanup is needed. Single-writer, like every store mutation."""
-    import os
-
-    meta = _ensure_reader_schemas(spark, path, _load_store_spec(path))
-    old_epochs = list(meta["epochs"])
-    if len(old_epochs) <= 1 and not meta.get("tombstone_epochs"):
-        # still sweep orphans: a crash during a PREVIOUS compaction's
-        # post-commit cleanup strands superseded epoch dirs that no later
-        # compaction would ever target (r13 review — its old_epochs only
-        # names the manifest's epochs); single-writer, so any on-disk
-        # epoch not in the manifest is garbage by definition
-        _sweep_orphan_epochs(path, set(old_epochs))
-        return False
-    new_epoch = _next_epoch(meta)
-    sigs = _read_store_sigs(spark, path, meta)
-    n_cores = spark.sparkContext.defaultParallelism
-    sigs.repartition(n_cores, "rep_id").write.mode("overwrite").parquet(
-        os.path.join(path, "sigs", f"e={new_epoch}")
-    )
-    bp_parts = meta["bucket_parts"]
-    _write_bands(_read_store_bands(spark, path, meta), path, new_epoch, bp_parts)
-    meta["epochs"] = [new_epoch]
-    # physical erasure point: the rewrite above read through the
-    # tombstone anti-join, so withdrawn reps are simply absent from the
-    # new base and the tombstone list resets
-    meta["tombstone_epochs"] = []
-    _commit_sidecar(path, meta)
-    _sweep_orphan_epochs(path, {new_epoch})
-    return True
-
-
-def _sweep_orphan_epochs(path: str, keep: set[int]) -> None:
-    """Remove every on-disk ``e=N`` not in the committed manifest —
-    superseded epochs after a compaction commit, plus any strays from
-    torn appends/compactions. Safe under the single-writer discipline:
-    readers only load manifest epochs."""
-    import os
-    import shutil
-
-    for sub in ("sigs", "bands", "tombstones"):
-        root = os.path.join(path, sub)
-        if not os.path.isdir(root):
-            continue
-        for entry in os.listdir(root):
-            if entry.startswith("e=") and entry[2:].isdigit() and int(entry[2:]) not in keep:
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+    return epoch_store.compact(path, rewrite)
 
 
 def incremental_dedup_against_store(
@@ -1166,10 +855,10 @@ def incremental_dedup_against_store(
     bucket sort). No step scans corpus text."""
     from fineventstream_spark.operators.sizing import maybe_broadcast
 
-    spec = _ensure_reader_schemas(spark, path, _load_store_spec(path))
+    spec = epoch_store.load(path)
     num_hashes = spec["num_hashes"]
 
-    sigs = _read_store_sigs(spark, path, spec)
+    sigs = epoch_store.read(spark, path, spec, "sigs")
 
     # 1. exact copies of stored content: ONE content-addressed probe of
     # the compact sigs table (left join, persisted — the hit rows are the
@@ -1236,7 +925,7 @@ def incremental_dedup_against_store(
     # table from EVER crossing the wire (it streams map-side, partition-
     # pruned via bp and row-group-pruned via the bucket sort); a corpus-
     # scale shard falls back un-hinted and AQE picks from runtime stats.
-    store_bands = _read_store_bands(spark, path, spec)
+    store_bands = epoch_store.read(spark, path, spec, "bands")
     touched = shard_bands.select("bp", "band", "bucket").distinct()
     matched = persist_tracked(
         store_bands.join(maybe_broadcast(touched), ["bp", "band", "bucket"])

@@ -522,36 +522,29 @@ def _minhash_store_path(
     fixture rebuilds, never serves stale fingerprints), spec in the
     dirname (a parameter change rebuilds), stale siblings of the same
     spec pruned only after a successful build."""
-    import os
-
-    from fineventstream_spark.catalog import source_fingerprint
-    from fineventstream_spark.operators.bucketed import _CACHE_ROOT
+    from fineventstream_spark.catalog import cache_path, source_fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
     fp = source_fingerprint(docs, sf_dir, "documents")
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    # v2 = the r12 epoch-committed layout (sigs/e=N, bands/e=N/bp=K);
-    # pre-epoch stores under the unversioned spec are never reused
-    spec = f"mh64b16s3_bp{dedup._STORE_BUCKET_PARTS}_thr{thr}_v2{suffix}"
-    return os.path.join(_CACHE_ROOT, sf, f"minhash_store-{spec}-{fp}")
+    # v3 = the epoch-store layout (operators/epoch_store.py: _MANIFEST.json
+    # with recorded reader schemas); stores of earlier specs are never read
+    spec = f"mh64b16s3_bp{dedup._STORE_BUCKET_PARTS}_thr{thr}_v3{suffix}"
+    return cache_path(sf_dir, f"minhash_store-{spec}", fp)
 
 
 def _ensure_minhash_store(
     spark: SparkSession, sf_dir: str, history: DataFrame, thr: int,
     suffix: str = "",
 ) -> str:
-    import glob
     import os
-    import shutil
+
+    from fineventstream_spark.catalog import prune_stale_siblings
+    from fineventstream_spark.operators import epoch_store
 
     path = _minhash_store_path(spark, sf_dir, thr, suffix)
-    if not os.path.exists(os.path.join(path, dedup._STORE_SIDECAR)):
+    if not os.path.exists(os.path.join(path, epoch_store.MANIFEST)):
         dedup.build_minhash_store(history, "text", "doc_id", path)
-        spec_prefix = os.path.basename(path).rsplit("-", 1)[0]
-        parent = os.path.dirname(path)
-        for sib in glob.glob(os.path.join(parent, f"{spec_prefix}-*")):
-            if os.path.abspath(sib) != os.path.abspath(path):
-                shutil.rmtree(sib, ignore_errors=True)
+        prune_stale_siblings(path)
     return path
 
 

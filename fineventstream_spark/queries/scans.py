@@ -22,11 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fineventstream_spark.catalog import Tables, load_table, source_fingerprint
+from fineventstream_spark.catalog import (
+    Tables,
+    cache_path,
+    load_table,
+    prune_stale_siblings,
+    source_fingerprint,
+)
 from fineventstream_spark.registry import register
 from fineventstream_spark.streaming.pipelines import decode_envelope
 
-_CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".cache")
 
 # Spark's default JSON timestamp format truncates to millis; the lake keeps
 # microseconds, so pin a micro-preserving format on both write and read.
@@ -44,52 +49,17 @@ EVENTS_JSON_SCHEMA = T.StructType(
 )
 
 
-def _cache_dir(sf_dir: str, name: str, fingerprint: str = "") -> str:
-    """Derived-copy cache path, keyed on the SOURCE fingerprint
-    (schema × data — catalog.source_fingerprint).
-
-    The fingerprint keys the directory name so a change in the lake's
-    source schema, catalog normalization semantics, OR the source data
-    itself regenerates the derivative instead of silently reusing a stale
-    one (round-2 lesson: a ``_SUCCESS``-gated JSONL copy outlived a
-    timestamp-type change; round-5 advisor: a schema-only key would serve
-    stale rows after a same-schema fixture regeneration). Pure path
-    arithmetic — stale-sibling pruning happens in
-    :func:`_prune_stale_siblings`, only after a replacement is fully
-    written."""
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    leaf = f"{name}-{fingerprint}" if fingerprint else name
-    return os.path.join(_CACHE_ROOT, sf_name, leaf)
-
-
-def _prune_stale_siblings(path: str, name: str) -> None:
-    """Reclaim superseded derivatives of ``name`` (other fingerprints and
-    pre-fingerprint unsuffixed leftovers) — called only AFTER the new
-    derivative at ``path`` is fully written, so a concurrent session with
-    a different fingerprint is never raced between planning and executing
-    a lazy read of its own (still valid) derivative by a session that has
-    not yet produced its replacement (round-3 ADVICE)."""
-    import shutil
-
-    parent, leaf = os.path.split(path)
-    if not os.path.isdir(parent):
-        return
-    for entry in os.listdir(parent):
-        if entry != leaf and (entry == name or entry.startswith(f"{name}-")):
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
-
-
 def _events_jsonl_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as JSONL once (S7-style sink), return the path."""
     ev = load_table(spark, sf_dir, "events")
-    path = _cache_dir(sf_dir, "events_jsonl", source_fingerprint(ev, sf_dir, "events"))
+    path = cache_path(sf_dir, "events_jsonl", source_fingerprint(ev, sf_dir, "events"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             ev.write.mode("overwrite")
             .option("timestampFormat", _TS_FMT)
             .json(path)
         )
-        _prune_stale_siblings(path, "events_jsonl")
+        prune_stale_siblings(path)
     return path
 
 
@@ -101,7 +71,7 @@ def _events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
     what an analytics lake wants for pruning.
     """
     ev = load_table(spark, sf_dir, "events")
-    path = _cache_dir(sf_dir, "events_partitioned", source_fingerprint(ev, sf_dir, "events"))
+    path = cache_path(sf_dir, "events_partitioned", source_fingerprint(ev, sf_dir, "events"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             ev.withColumn("year", F.year("ts"))
@@ -111,7 +81,7 @@ def _events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("year", "month", "day")
             .parquet(path)
         )
-        _prune_stale_siblings(path, "events_partitioned")
+        prune_stale_siblings(path)
     return path
 
 
@@ -131,7 +101,7 @@ def events_shredded(spark: SparkSession, sf_dir: str):
     cold fields, and every downstream query reads the column. Returns
     the shredded DataFrame (schema = events + ``props_k double``)."""
     ev = load_table(spark, sf_dir, "events")
-    path = _cache_dir(sf_dir, "events_shredded", source_fingerprint(ev, sf_dir, "events"))
+    path = cache_path(sf_dir, "events_shredded", source_fingerprint(ev, sf_dir, "events"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             ev.withColumn(
@@ -140,7 +110,7 @@ def events_shredded(spark: SparkSession, sf_dir: str):
             .write.mode("overwrite")
             .parquet(path)
         )
-        _prune_stale_siblings(path, "events_shredded")
+        prune_stale_siblings(path)
     return spark.read.parquet(path)
 
 
@@ -261,7 +231,7 @@ def q_scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    path = _cache_dir(sf_dir, "lineitem_jsonl_by_flag", source_fingerprint(t.lineitem, sf_dir, "lineitem"))
+    path = cache_path(sf_dir, "lineitem_jsonl_by_flag", source_fingerprint(t.lineitem, sf_dir, "lineitem"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             t.lineitem.select("l_orderkey", "l_quantity", "l_returnflag")
@@ -269,7 +239,7 @@ def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("l_returnflag")
             .json(path)
         )
-        _prune_stale_siblings(path, "lineitem_jsonl_by_flag")
+        prune_stale_siblings(path)
     back = spark.read.schema("l_orderkey long, l_quantity double, l_returnflag string").json(path)
     return back.groupBy("l_returnflag").agg(F.count("*").alias("n_rows"))
 
@@ -285,7 +255,7 @@ def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    path = _cache_dir(sf_dir, "orders_csv", source_fingerprint(orders, sf_dir, "orders"))
+    path = cache_path(sf_dir, "orders_csv", source_fingerprint(orders, sf_dir, "orders"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             orders
@@ -294,7 +264,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("header", "true")
             .csv(path)  # o_orderdate is ms-precision: default format is lossless
         )
-        _prune_stale_siblings(path, "orders_csv")
+        prune_stale_siblings(path)
     return (
         spark.read.schema(
             "o_orderkey long, o_custkey long, o_orderstatus string, "
@@ -378,7 +348,7 @@ def _documents_drift_path(spark: SparkSession, sf_dir: str) -> str:
     even doc_ids without the source column, gen 2 = odd doc_ids with it.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _cache_dir(sf_dir, "documents_drift", source_fingerprint(docs, sf_dir, "documents"))
+    path = cache_path(sf_dir, "documents_drift", source_fingerprint(docs, sf_dir, "documents"))
     if not os.path.exists(os.path.join(path, "gen=2", "_SUCCESS")):
         docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text", "lang").write.mode(
             "overwrite"
@@ -386,7 +356,7 @@ def _documents_drift_path(spark: SparkSession, sf_dir: str) -> str:
         docs.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", "text", "lang", "source"
         ).write.mode("overwrite").parquet(os.path.join(path, "gen=2"))
-        _prune_stale_siblings(path, "documents_drift")
+        prune_stale_siblings(path)
     return path
 
 
@@ -442,10 +412,10 @@ def q_scan_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_shipdate"]
-    path = _cache_dir(sf_dir, "lineitem_orc", source_fingerprint(li, sf_dir, "lineitem"))
+    path = cache_path(sf_dir, "lineitem_orc", source_fingerprint(li, sf_dir, "lineitem"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         li.select(*cols).write.mode("overwrite").orc(path)
-        _prune_stale_siblings(path, "lineitem_orc")
+        prune_stale_siblings(path)
     return spark.read.orc(path).filter(
         (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-02-01").cast("timestamp"))
@@ -459,7 +429,7 @@ def _events_nested_path(spark: SparkSession, sf_dir: str) -> str:
     columns). ``noise`` exists solely so nested-field pruning has
     something to prune."""
     ev = load_table(spark, sf_dir, "events")
-    path = _cache_dir(sf_dir, "events_nested", source_fingerprint(ev, sf_dir, "events"))
+    path = cache_path(sf_dir, "events_nested", source_fingerprint(ev, sf_dir, "events"))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         nested = ev.select(
             "event_id",
@@ -475,7 +445,7 @@ def _events_nested_path(spark: SparkSession, sf_dir: str) -> str:
             ).alias("tags"),
         )
         nested.write.mode("overwrite").parquet(path)
-        _prune_stale_siblings(path, "events_nested")
+        prune_stale_siblings(path)
     return path
 
 

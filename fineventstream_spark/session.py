@@ -100,6 +100,12 @@ SESSION_SQL_CONFS: tuple[tuple[str, str], ...] = (
 )
 
 
+# The directory holding the package. Python workers import
+# ``fineventstream_spark`` to unpickle the engine's UDFs and data sources,
+# so a driver that found it through ``sys.path`` alone, started from another
+# directory, must hand them this path.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # The ``file:`` file system that sets permissions without forking ``chmod``
 # (module docstring); ``scripts/build_localfs_jar.py`` rebuilds the jar from
 # the sources beside it.
@@ -151,6 +157,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraClassPath", LOCALFS_JAR)
         .config("spark.hadoop.fs.file.impl", LOCALFS_IMPL)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     for k, v in SESSION_SQL_CONFS:
         builder = builder.config(k, v)

@@ -172,7 +172,7 @@ def incremental_dedup_stream(
        content (the store is unchanged until step 2 commits, and every
        operator in the path is deterministic);
     2. the store append is TAGGED "<checkpoint>:<batch_id>" — the
-       epoch-committed store (operators/dedup.py) makes the append
+       epoch store (operators/epoch_store.py) makes the append
        atomic, and a replayed batch whose tag already committed skips
        the whole body (its pairs directory already exists from the
        first attempt, byte-equivalent).
@@ -193,8 +193,8 @@ def incremental_dedup_stream(
     """
     import os
 
+    from fineventstream_spark.operators import epoch_store
     from fineventstream_spark.operators.dedup import (
-        _load_store_spec,
         append_minhash_store,
         incremental_dedup_against_store,
         release_intermediates,
@@ -216,14 +216,7 @@ def incremental_dedup_stream(
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         tag = f"{tag_prefix}:{batch_id}"
-        # also honor the PRE-normalization tag spelling: a batch committed
-        # by an older run under the raw checkpoint string must stay a
-        # no-op after an upgrade-spanning restart (r13 review — without
-        # this, the normalization itself could cause the double-append it
-        # exists to prevent, exactly once, across the upgrade)
-        legacy_tag = f"{checkpoint_dir}:{batch_id}"
-        committed = _load_store_spec(store_path).get("tags", {})
-        if tag in committed or legacy_tag in committed:
+        if epoch_store.committed(store_path, tag):
             return  # replayed, fully-committed batch
         pairs, new_sigs = incremental_dedup_against_store(
             spark,

@@ -227,3 +227,37 @@ def test_engine_reads_only_deployment_env_vars():
         with open(path) as f:
             names |= _env_reads(ast.parse(f.read(), path))
     assert names == {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def _cache_path_literals(tree) -> list[int]:
+    """Lines of string literals (docstrings aside) with a ``.cache`` path
+    segment."""
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+    }
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and ".cache" in node.value.replace("\\", "/").split("/")
+    ]
+
+
+def test_only_the_catalog_builds_the_cache_root():
+    # every derivative lives under catalog.CACHE_ROOT, where one rule
+    # prunes its stale fingerprints; a second root would escape it
+    found = {}
+    for path in glob.glob(os.path.join(ENGINE_DIR, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            lines = _cache_path_literals(ast.parse(f.read(), path))
+        if lines:
+            found[os.path.relpath(path, ENGINE_DIR)] = lines
+    assert list(found) == ["catalog.py"], found

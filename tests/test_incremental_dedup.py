@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from fineventstream_spark.operators import dedup
+from fineventstream_spark.operators import dedup, epoch_store
 
 VOCAB = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -127,9 +127,9 @@ def test_append_then_second_shard(spark, tmp_path):
     # dup of a shard1 text would resolve against the STORE. 190/191/192
     # share a shard-only text introduced in... shard2 itself here, so
     # additionally check a shard1 rep is queryable via the COMMITTED view:
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1]
-    sigs = dedup._read_store_sigs(spark, store, meta)
+    sigs = epoch_store.read(spark, store, meta, "sigs")
     assert sigs.filter(F.col("rep_id") >= thr1).count() > 0
 
 
@@ -143,9 +143,9 @@ def test_store_layout_partition_pruned(spark, tmp_path):
     # a bp-filtered read of the committed view must prune at PARTITION
     # level (file skipping) — the mechanism the shard join's
     # (bp, band, bucket) key hands to DPP
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     plan = (
-        dedup._read_store_bands(spark, store, meta)
+        epoch_store.read(spark, store, meta, "bands")
         .filter(F.col("bp") == 3)
         ._jdf.queryExecution()
         .executedPlan()
@@ -213,14 +213,14 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
     want = _pairs(_from_scratch_restricted(docs, thr))
     assert got == want
 
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1, 2, 3], meta["epochs"]
     assert len(meta["tags"]) == 3
     # replayed tag → no-op, store unchanged
     some_tag = next(iter(meta["tags"]))
-    new_sigs = dedup._read_store_sigs(spark, store, meta).limit(1)
+    new_sigs = epoch_store.read(spark, store, meta, "sigs").limit(1)
     assert dedup.append_minhash_store(new_sigs, store, tag=some_tag) is False
-    assert dedup._load_store_spec(store)["epochs"] == [0, 1, 2, 3]
+    assert epoch_store.load(store)["epochs"] == [0, 1, 2, 3]
 
 
 def test_null_text_is_non_content(spark, tmp_path):
@@ -303,7 +303,7 @@ def test_compaction_probe_equivalence_and_tags(spark, tmp_path):
         "text", "doc_id", threshold=0.5, return_new_sigs=True,
     )
     assert dedup.append_minhash_store(sigs1, store, tag="day1")
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1]
 
     shard2 = docs.filter(F.col("doc_id") >= thr2)
@@ -313,7 +313,7 @@ def test_compaction_probe_equivalence_and_tags(spark, tmp_path):
         )
     )
     assert dedup.compact_minhash_store(spark, store)
-    meta2 = dedup._load_store_spec(store)
+    meta2 = epoch_store.load(store)
     assert meta2["epochs"] == [2], meta2["epochs"]
     assert meta2["tags"] == {"day1": 1}, "tags must survive compaction"
     after = _pairs(
@@ -357,7 +357,7 @@ def test_torn_compaction_is_invisible(spark, tmp_path, monkeypatch):
     def crashing_commit(path, meta):
         raise boom
 
-    monkeypatch.setattr(dedup, "_commit_sidecar", crashing_commit)
+    monkeypatch.setattr(epoch_store, "commit", crashing_commit)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="simulated crash"):
@@ -366,7 +366,7 @@ def test_torn_compaction_is_invisible(spark, tmp_path, monkeypatch):
 
     # orphan e=2 exists on disk but the manifest never saw it
     assert os.path.isdir(os.path.join(store, "sigs", "e=2"))
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1]
     mid = _pairs(
         dedup.incremental_dedup_against_store(
@@ -376,7 +376,7 @@ def test_torn_compaction_is_invisible(spark, tmp_path, monkeypatch):
     assert mid == before
     # the re-run overwrites the orphan and commits cleanly
     assert dedup.compact_minhash_store(spark, store)
-    assert dedup._load_store_spec(store)["epochs"] == [2]
+    assert epoch_store.load(store)["epochs"] == [2]
     assert _pairs(
         dedup.incremental_dedup_against_store(
             spark, store, shard, "text", "doc_id", threshold=0.5
@@ -407,9 +407,9 @@ def test_tombstone_retracts_content_and_compaction_erases(spark, tmp_path):
     assert dedup.tombstone_minhash_store(
         spark.createDataFrame([(0,)], "rep_id long"), store, tag="takedown-1"
     ) is False
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["tombstone_epochs"], meta
-    assert dedup._read_store_sigs(spark, store, meta).filter(
+    assert epoch_store.read(spark, store, meta, "sigs").filter(
         F.col("rep_id") == 0
     ).count() == 0
 
@@ -432,12 +432,12 @@ def test_tombstone_retracts_content_and_compaction_erases(spark, tmp_path):
 
     # physical erasure at compaction
     assert dedup.compact_minhash_store(spark, store)
-    meta2 = dedup._load_store_spec(store)
+    meta2 = epoch_store.load(store)
     assert meta2["tombstone_epochs"] == []
     assert not os.path.isdir(os.path.join(store, "tombstones")) or not os.listdir(
         os.path.join(store, "tombstones")
     )
-    assert dedup._read_store_sigs(spark, store, meta2).filter(
+    assert epoch_store.read(spark, store, meta2, "sigs").filter(
         F.col("rep_id") == 0
     ).count() == 0
     after = _pairs(

@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fineventstream_spark.catalog import Tables
-from fineventstream_spark.operators import ann_index
+from fineventstream_spark.operators import epoch_store
 from fineventstream_spark.operators.ann_index import (
     append_ivf_index,
     build_ivf_index,
@@ -64,11 +64,11 @@ def test_ivf_compaction_probe_equivalence_and_tags(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf")
     emb = _build_with_appends(spark, sf_dir, path)
     before = _topk(spark, path)
-    meta0 = ann_index._load_sidecar(path)
+    meta0 = epoch_store.load(path)
     assert meta0["epochs"] == [0, 1, 2]
 
     assert compact_ivf_index(spark, path) is True
-    meta = ann_index._load_sidecar(path)
+    meta = epoch_store.load(path)
     assert meta["epochs"] == [3]
     assert _topk(spark, path) == before
     # counts re-derived from the rewritten base must cover the full corpus
@@ -97,18 +97,18 @@ def test_ivf_torn_compaction_is_invisible(spark, sf_dir, tmp_path, monkeypatch):
     def crashing_commit(p, meta):
         raise RuntimeError("simulated crash before sidecar commit")
 
-    monkeypatch.setattr(ann_index, "_write_sidecar", crashing_commit)
+    monkeypatch.setattr(epoch_store, "commit", crashing_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_ivf_index(spark, path)
     monkeypatch.undo()
 
     # orphan e=3 exists on disk but the manifest never saw it
     assert os.path.isdir(os.path.join(path, "vectors", "e=3"))
-    assert ann_index._load_sidecar(path)["epochs"] == [0, 1, 2]
+    assert epoch_store.load(path)["epochs"] == [0, 1, 2]
     assert _topk(spark, path) == before
     # re-run overwrites the orphan and commits cleanly
     assert compact_ivf_index(spark, path) is True
-    assert ann_index._load_sidecar(path)["epochs"] == [3]
+    assert epoch_store.load(path)["epochs"] == [3]
     assert _topk(spark, path) == before
 
 
@@ -134,7 +134,7 @@ def test_ivf_tombstone_retracts_and_compaction_erases(spark, sf_dir, tmp_path):
 
     # physical erasure at compaction
     assert compact_ivf_index(spark, path) is True
-    meta = ann_index._load_sidecar(path)
+    meta = epoch_store.load(path)
     assert meta["tombstone_epochs"] == []
     assert not os.path.isdir(os.path.join(path, "tombstones")) or not os.listdir(
         os.path.join(path, "tombstones")

@@ -197,9 +197,9 @@ def test_prune_stale_is_scoped_to_one_layout_spec(tmp_path):
     superseded fingerprint of one spec must never delete the OTHER spec's
     live files (the pre-r8 prune matched any `<table>_bucketed-` sibling
     and would have). Fingerprints below are 12-hex like
-    catalog.source_fingerprint produces — _prune_stale requires the
+    catalog.source_fingerprint produces — prune_stale_siblings requires the
     post-spec segment to be exactly one (r8 advisor)."""
-    from fineventstream_spark.operators.bucketed import _prune_stale
+    from fineventstream_spark.catalog import prune_stale_siblings
 
     keep_other_spec = tmp_path / "lineitem_bucketed-b32-l_orderkey-aaaaaaaaaaaa"
     stale_same_spec = tmp_path / "lineitem_bucketed-b32-l_partkey-p01234567-0123456789ab"
@@ -207,7 +207,7 @@ def test_prune_stale_is_scoped_to_one_layout_spec(tmp_path):
     for d in (keep_other_spec, stale_same_spec, fresh):
         d.mkdir()
         (d / "_SUCCESS").touch()
-    _prune_stale(str(fresh), "lineitem", "b32-l_partkey-p01234567")
+    prune_stale_siblings(str(fresh))
     assert fresh.exists()
     assert keep_other_spec.exists(), "prune crossed layout specs"
     assert not stale_same_spec.exists(), "superseded fingerprint not pruned"
@@ -219,7 +219,7 @@ def test_prune_stale_plain_spec_spares_projected_siblings_on_same_key(tmp_path):
     prefix-only match after rebuilding the plain layout would rmtree live
     covering projections. The exact-fingerprint boundary parse must spare
     them while still pruning the plain spec's own stale fingerprint."""
-    from fineventstream_spark.operators.bucketed import _prune_stale
+    from fineventstream_spark.catalog import prune_stale_siblings
 
     keep_projected = tmp_path / "lineitem_bucketed-b32-l_orderkey-pdeadbeef-cccccccccccc"
     stale_plain = tmp_path / "lineitem_bucketed-b32-l_orderkey-0123456789ab"
@@ -227,7 +227,7 @@ def test_prune_stale_plain_spec_spares_projected_siblings_on_same_key(tmp_path):
     for d in (keep_projected, stale_plain, fresh_plain):
         d.mkdir()
         (d / "_SUCCESS").touch()
-    _prune_stale(str(fresh_plain), "lineitem", "b32-l_orderkey")
+    prune_stale_siblings(str(fresh_plain))
     assert fresh_plain.exists()
     assert keep_projected.exists(), "plain-spec prune deleted a projected layout on the same key"
     assert not stale_plain.exists(), "superseded plain fingerprint not pruned"
@@ -2242,7 +2242,9 @@ def test_bucketed_layout_self_reports_skew(spark, tmp_path, monkeypatch):
 
     from fineventstream_spark.operators import bucketed as B
 
-    monkeypatch.setattr(B, "_CACHE_ROOT", str(tmp_path / "cache"))
+    from fineventstream_spark import catalog
+
+    monkeypatch.setattr(catalog, "CACHE_ROOT", str(tmp_path / "cache"))
     sfdir = str(tmp_path / "sf")
 
     def build(df, sub):

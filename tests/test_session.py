@@ -4,7 +4,8 @@
 permissions without forking ``chmod``. These tests pin what it must keep
 from Hadoop's default: the same modes under the configured umask, a
 ``.crc`` companion for every data file, and a committed jar built from the
-sources beside it.
+sources beside it. A driver that found the package through ``sys.path``
+alone still gets Python workers that can import it.
 """
 
 from __future__ import annotations
@@ -12,6 +13,10 @@ from __future__ import annotations
 import importlib.util
 import os
 import stat
+import subprocess
+import sys
+
+import pytest
 
 from fineventstream_spark.session import LOCALFS_IMPL
 
@@ -76,3 +81,47 @@ def test_committed_jar_matches_its_sources():
     spec.loader.exec_module(build)
     assert build.sources(), build.SRC_DIR
     assert build.jar_sha256() == build.sources_sha256()
+
+
+# A driver that puts the repository on sys.path (not PYTHONPATH) and runs
+# from another directory: the query's Python data source runs on workers,
+# which must import the package to unpickle it.
+SYS_PATH_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+if sys.argv[1] == "get_spark":
+    from fineventstream_spark.registry import all_queries
+    from fineventstream_spark.session import get_spark
+
+    spark = get_spark(app_name="sys-path-driver", cpus=2, driver_memory="1g")
+    query = all_queries()["q_source_datasource_quotes"].fn
+else:
+    from pyspark.sql import SparkSession
+
+    spark = (SparkSession.builder.master("local[2]").appName("sys-path-driver")
+             .config("spark.ui.enabled", "false")
+             .config("spark.driver.memory", "1g").getOrCreate())
+    import __spark_entry__
+
+    query = __spark_entry__.queries()["q_source_datasource_quotes"]
+print("rows", query(spark, {sf_dir!r}).count())
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("session", ["get_spark", "vanilla"])
+def test_python_workers_import_the_package_from_a_sys_path_driver(
+    session, sf_dir, tmp_path
+):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = SYS_PATH_DRIVER.format(repo=REPO, sf_dir=sf_dir)
+    run = subprocess.run(
+        [sys.executable, "-c", code, session],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "rows " in run.stdout

@@ -291,7 +291,7 @@ def test_sigkill_stateful_rocksdb_exactly_once(spark, tmp_path):
 # write and the sidecar commit. The epoch-committed design claims a torn
 # append is invisible and a replayed batch commits exactly once
 # (operators/dedup.py); this lands a real SIGKILL in exactly that window:
-# the worker's _commit_sidecar is wrapped so the SECOND append (batch 1)
+# the worker's epoch_store.commit is wrapped so the SECOND append (batch 1)
 # writes its epoch directory, touches a marker file, and stalls before
 # committing — the parent kills it there, then a drain run resumes the
 # same checkpoint. Asserted: the orphan epoch never entered the manifest,
@@ -320,13 +320,13 @@ DEDUP_KILL_WORKER = textwrap.dedent(
                       extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from fineventstream_spark.operators import dedup
+    from fineventstream_spark.operators import epoch_store
     from fineventstream_spark.streaming.sink import incremental_dedup_stream
 
     if mode == "run":
         # stall the SECOND append's sidecar commit (batch 0 commits
         # cleanly; batch 1 dies torn: epoch dir on disk, manifest not)
-        orig = dedup._commit_sidecar
+        orig = epoch_store.commit
         calls = {"n": 0}
         def stalling_commit(path, meta):
             calls["n"] += 1
@@ -335,7 +335,7 @@ DEDUP_KILL_WORKER = textwrap.dedent(
                     fh.write("torn")
                 time.sleep(300)  # parent SIGKILLs us here
             orig(path, meta)
-        dedup._commit_sidecar = stalling_commit
+        epoch_store.commit = stalling_commit
 
     src = (
         spark.readStream.schema("doc_id long, text string")
@@ -354,7 +354,7 @@ DEDUP_KILL_WORKER = textwrap.dedent(
 def test_sigkill_mid_store_append_exactly_once(spark, tmp_path, provider):
     from pyspark.sql import functions as F
 
-    from fineventstream_spark.operators import dedup
+    from fineventstream_spark.operators import dedup, epoch_store
 
     words = "alpha bravo charlie delta echo foxtrot golf hotel india juliet".split()
 
@@ -422,7 +422,7 @@ def test_sigkill_mid_store_append_exactly_once(spark, tmp_path, provider):
 
     # torn state: batch 0's epoch committed, batch 1's epoch dir is an
     # orphan the manifest never saw
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1], meta["epochs"]
     assert len(meta["tags"]) == 1
     assert os.path.isdir(os.path.join(store, "sigs", "e=2")), (
@@ -439,7 +439,7 @@ def test_sigkill_mid_store_append_exactly_once(spark, tmp_path, provider):
     assert drain.returncode == 0, drain.stderr[-3000:]
 
     # exactly once: one epoch and one tag per batch, no double-append
-    meta = dedup._load_store_spec(store)
+    meta = epoch_store.load(store)
     assert meta["epochs"] == [0, 1, 2, 3], meta["epochs"]
     assert len(meta["tags"]) == 3, meta["tags"]
     got = sorted(
