@@ -12,12 +12,14 @@ contract file, the pytest differential suite, and bench.py.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# the package beside this file, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -31,8 +33,6 @@ def _registry():
 def _pin_confs(spark: SparkSession) -> None:
     """Defensive: the driver may hand us a session without our configs,
     and with Python workers that cannot import the package."""
-    import os
-
     from fineventstream_spark.session import PACKAGE_PARENT, SESSION_SQL_CONFS
 
     for key, value in SESSION_SQL_CONFS:

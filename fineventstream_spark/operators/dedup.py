@@ -21,7 +21,9 @@ signature kernel is JVM built-ins.
 
 from __future__ import annotations
 
-import threading
+import contextlib
+import contextvars
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -123,87 +125,45 @@ def text_to_minhash_udf(num_hashes: int = 64, shingle_n: int = 3, bands: int = 0
     return _sig
 
 
-# --- persisted-intermediate registry (cache-hygiene contract) ---------------
+# --- persisted intermediates: released by the caller's scope ----------------
 # The dedup operators persist() small intermediates that feed 2+ consumers
-# (signature tables, candidate sets). The consuming ACTION happens in the
-# caller, so an operator cannot unpersist eagerly without discarding the
-# cache it just paid for (and UDF-derived plans never canonicalize equal, so
-# repeated calls would otherwise accumulate dead blocks — the r5 advisor
-# finding). The contract: a caller that owns a long-lived session calls
-# release_intermediates() after consuming the returned plan; bench.py's
-# per-query clearCache() is the blunt equivalent; short-lived sessions drop
-# everything at exit anyway.
+# (signature tables, candidate sets). The consuming action runs in the
+# caller, so an operator cannot unpersist them itself without discarding
+# the cache it just paid for. The caller owns their lifetime instead:
 #
-# Scoped PER SESSION (r6 advisor): a process-global list would let one
-# consumer's release unpersist intermediates a concurrent consumer in a
-# DIFFERENT session still relies on, and would call unpersist on DataFrames
-# whose context has since stopped (which raises). The registry is keyed by
-# the owning SparkSession, mutations are lock-guarded, and unpersist is
-# skipped for stopped contexts (their cached blocks died with the JVM
-# context anyway).
-_PERSISTED: dict[SparkSession, list[DataFrame]] = {}
-_PERSISTED_LOCK = threading.Lock()
-
-
-def _context_stopped(spark: SparkSession) -> bool:
-    try:
-        sc = spark.sparkContext
-        return sc._jsc is None or sc._jsc.sc().isStopped()
-    except Exception:
-        return True
+# - inside ``with released_on_exit():`` every persist_tracked() frame is
+#   unpersisted when the block exits, raised or not. Scopes nest and are
+#   per context (a contextvars.ContextVar), so leaving one never touches
+#   a frame persisted in an enclosing scope or in another thread's scope.
+#   The streaming dedup sink wraps each micro-batch in one.
+# - outside a scope this module keeps no reference; the caller frees the
+#   caches with the session (``spark.catalog.clearCache()``, as bench.py
+#   and perfbench do between queries) or by stopping it.
+_SCOPE: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "dedup_persist_scope", default=None
+)
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register under the owning session for
-    :func:`release_intermediates`."""
-    with _PERSISTED_LOCK:
-        _PERSISTED.setdefault(df.sparkSession, []).append(df)
+    """persist(), registered with the innermost active
+    :func:`released_on_exit` scope, if there is one."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(df)
     return df.persist()
 
 
-def release_intermediates(spark: SparkSession | None = None) -> None:
-    """Unpersist every intermediate the dedup operators (and the dedup
-    query wrappers in queries/llm.py) persisted under ``spark`` (default:
-    the active session) since the last release. Other sessions' tracked
-    caches are left alone; entries whose session has stopped are swept
-    without touching the dead context.
-
-    When called with no argument from a thread with NO active session
-    (r7 advisor: getActiveSession() is thread-local and returns None off
-    the driver thread), silently releasing nothing would quietly leak the
-    tracked caches. But releasing EVERY live session's caches is worse
-    when several sessions are running concurrently — a background cleanup
-    would unpersist DataFrames another in-flight session still depends on
-    (r8 advisor: silent recompute mid-bench). So the session-less call
-    releases the single live session if exactly one is tracked, and
-    releases NOTHING — with a warning — when several are (r9 advisor: a
-    cleanup API must not raise; this is typically called from a finally
-    block, where an exception would mask the original error AND leak the
-    caches it was asked to release). The caller knows which session it
-    worked in; the warning tells it to say so."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    with _PERSISTED_LOCK:
-        for s in [s for s in _PERSISTED if _context_stopped(s)]:
-            del _PERSISTED[s]
-        if spark is not None:
-            dfs = _PERSISTED.pop(spark, [])
-        elif len(_PERSISTED) <= 1:  # unambiguous: at most one live session
-            dfs = [df for lst in _PERSISTED.values() for df in lst]
-            _PERSISTED.clear()
-        else:
-            import warnings
-
-            warnings.warn(
-                f"release_intermediates() called with no active session while "
-                f"{len(_PERSISTED)} live sessions hold tracked caches — "
-                "released nothing; pass the session whose intermediates you "
-                "mean to release",
-                stacklevel=2,
-            )
-            dfs = []
-    for df in dfs:
-        if not _context_stopped(df.sparkSession):
+@contextlib.contextmanager
+def released_on_exit() -> Iterator[None]:
+    """Unpersist, on exit, exactly the frames persist_tracked() persisted
+    inside this block."""
+    persisted: list[DataFrame] = []
+    token = _SCOPE.set(persisted)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in persisted:
             df.unpersist()
 
 
@@ -256,7 +216,7 @@ def minhash_lsh_candidates(
     )
     # signatures feed two consumers (bucket-size counts and the a×b pair
     # join) — persist the tiny (id, sig) table instead of recomputing
-    # (tracked: see release_intermediates)
+    # (tracked: see released_on_exit)
     sig = persist_tracked(sig_and_buckets)
 
     # r15 (guide §2.3/§8 — shuffle keys and metadata, not payloads; the
@@ -370,7 +330,7 @@ def ngram_jaccard_verify(
     words = F.split(F.lower(F.col(text_col)), r"\s+")
     # the candidate plan is consumed three times (two id projections + the
     # final join); persist the small pair set instead of recomputing the
-    # whole LSH pipeline per consumer (tracked: see release_intermediates)
+    # whole LSH pipeline per consumer (tracked: see released_on_exit)
     candidates = persist_tracked(candidates)
     # shingle only documents that appear in a candidate pair (semi join):
     # the verify set is orders of magnitude smaller than the corpus
@@ -383,7 +343,7 @@ def ngram_jaccard_verify(
     # sh feeds BOTH pair sides below; unpersisted, the semi-join + shingle
     # subtree (and the caller's whole rep_corpus lineage — the exact-collapse
     # groupBy included) executes once per side (r14, guide §5: cache what is
-    # reused; candidate-bounded rows, tracked: see release_intermediates)
+    # reused; candidate-bounded rows, tracked: see released_on_exit)
     sh = persist_tracked(
         needed.select(
             F.col(id_col).alias("id"),

@@ -31,29 +31,9 @@ BROADCAST_MAX_INPUT_BYTES = 256 << 20
 
 def scan_input_bytes(df: DataFrame) -> int | None:
     """Total size of the scan's backing files, or None when unknowable
-    (in-memory relations, non-local filesystems). Metadata-only — no job.
-
-    ``inputFiles()`` returns percent-encoded file URIs (spaces, non-ASCII
-    in paths), so the path is unquoted before ``getsize`` — otherwise such
-    datasets would always probe as unknowable and silently lose the
-    fast-path selection.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(u.path))
-        except OSError:
-            return None
-    return total
+    (in-memory relations, non-local filesystems). Metadata-only — no job."""
+    files = files_signature(df)
+    return None if files is None else sum(size for _, size, _ in files)
 
 
 # memo: (input-file signatures, logical-plan hash, key cols) → hottest
@@ -70,7 +50,11 @@ _KEY_SHARE_MEMO: dict[tuple, object] = {}
 def files_signature(df: DataFrame) -> tuple | None:
     """Stable identity of a DataFrame's backing files — (path, size,
     mtime_ns) per file, sorted — or None when not file-backed / not
-    local. The memo key every eager-but-memoized probe hangs off."""
+    local. The memo key every eager-but-memoized probe hangs off.
+
+    ``inputFiles()`` returns percent-encoded file URIs (spaces, non-ASCII
+    in paths), so each path is unquoted before the stat; otherwise such
+    datasets would always probe as unknowable."""
     try:
         files = df.inputFiles()
     except Exception:

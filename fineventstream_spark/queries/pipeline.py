@@ -626,8 +626,8 @@ def q_llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the cache each consumer re-runs the two-string-pass tokenize
     over the full corpus — measured 9.0 s → 5.0 s at sf30. The persist
     is (doc_id, n_tokens) only — KBs per million docs, never the text —
-    and is released under the repo-wide cache-hygiene contract
-    (operators/dedup.py:release_intermediates / bench clearCache)."""
+    and is freed by the caller's scope (operators/dedup.py:
+    released_on_exit) or with the session's cache (``clearCache()``)."""
     from fineventstream_spark.operators.dedup import persist_tracked
     from fineventstream_spark.operators.rank import global_prefix_sum
     from fineventstream_spark.operators.text import ws_segment_count

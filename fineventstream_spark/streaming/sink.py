@@ -197,7 +197,7 @@ def incremental_dedup_stream(
     from fineventstream_spark.operators.dedup import (
         append_minhash_store,
         incremental_dedup_against_store,
-        release_intermediates,
+        released_on_exit,
     )
 
     # Idempotence key: NORMALIZED checkpoint path + batch id. Spark's own
@@ -218,20 +218,22 @@ def incremental_dedup_stream(
         tag = f"{tag_prefix}:{batch_id}"
         if epoch_store.committed(store_path, tag):
             return  # replayed, fully-committed batch
-        pairs, new_sigs = incremental_dedup_against_store(
-            spark,
-            store_path,
-            batch_df,
-            text_col,
-            id_col,
-            threshold=threshold,
-            return_new_sigs=True,
-        )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch={batch_id}")
-        )
-        append_minhash_store(new_sigs, store_path, tag=tag)
-        release_intermediates(spark)
+        # one micro-batch is the unit of work: its intermediates are
+        # unpersisted when the batch ends, raised or not
+        with released_on_exit():
+            pairs, new_sigs = incremental_dedup_against_store(
+                spark,
+                store_path,
+                batch_df,
+                text_col,
+                id_col,
+                threshold=threshold,
+                return_new_sigs=True,
+            )
+            pairs.write.mode("overwrite").parquet(
+                os.path.join(out_path, f"batch={batch_id}")
+            )
+            append_minhash_store(new_sigs, store_path, tag=tag)
 
     return (
         df.writeStream.foreachBatch(dedup_batch)

@@ -261,3 +261,75 @@ def test_only_the_catalog_builds_the_cache_root():
         if lines:
             found[os.path.relpath(path, ENGINE_DIR)] = lines
     assert list(found) == ["catalog.py"], found
+
+
+def _raw_persist_scopes(tree) -> set[str]:
+    """Names of the functions (``<module>`` at top level) that call
+    ``.persist()`` or ``.cache()`` directly."""
+    scopes: set[str] = set()
+
+    def visit(node, scope):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache")
+        ):
+            scopes.add(scope)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = node.name
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(tree, "<module>")
+    return scopes
+
+
+def test_engine_persists_go_through_persist_tracked():
+    # a raw persist is invisible to dedup.released_on_exit, so the
+    # streaming sink's per-batch scope would leak it; only the two
+    # operators that unpersist their own frames may persist directly
+    found = {}
+    for path in glob.glob(os.path.join(ENGINE_DIR, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            scopes = _raw_persist_scopes(ast.parse(f.read(), path))
+        if scopes:
+            found[os.path.relpath(path, ENGINE_DIR)] = scopes
+    assert found.pop(os.path.join("operators", "dedup.py")) == {"persist_tracked"}
+    assert set(found) <= {
+        os.path.join("operators", "ann_index.py"),
+        os.path.join("operators", "cluster.py"),
+    }, found
+
+
+def test_contract_imports_the_package_beside_it(tmp_path):
+    # a checkout anywhere runs its own package, not one at a fixed path
+    import shutil
+    import subprocess
+
+    repo = os.path.dirname(ENGINE_DIR)
+    shutil.copy(os.path.join(repo, "__spark_entry__.py"), tmp_path)
+    shutil.copytree(
+        ENGINE_DIR,
+        tmp_path / "fineventstream_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    code = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location('__spark_entry__', sys.argv[1])\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "import fineventstream_spark.registry as r\n"
+        "print(r.__file__)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path / "__spark_entry__.py")],
+        cwd=elsewhere,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    assert os.path.realpath(out.strip()).startswith(os.path.realpath(tmp_path) + os.sep)

@@ -137,30 +137,97 @@ def test_minhash_finds_exact_dupes(spark, sf_dir):
     assert not missing, f"exact dupes missed by LSH: {missing}"
 
 
-def test_release_intermediates_unpersists_tracked_caches(spark, sf_dir):
-    """Cache-hygiene contract (r5 advisor): every persist() in the dedup
-    family is tracked, and release_intermediates() drops them all — a
-    library consumer composing dedup calls in a long-lived session can
-    release without nuking the whole session cache."""
+def test_released_on_exit_unpersists_only_its_own_scope(spark, sf_dir, monkeypatch):
+    """Leaving a scope unpersists every frame persist_tracked() persisted
+    inside it (the whole minhash_lsh_candidates family), and nothing
+    persisted in an enclosing scope or in another thread's scope."""
+    import threading
+
     from fineventstream_spark.operators import dedup
 
-    dedup.release_intermediates(spark)  # clean slate
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    cands = minhash_lsh_candidates(docs, "text", "doc_id")
-    cands.count()  # materialize (fills the tracked persist)
-    tracked = list(dedup._PERSISTED.get(spark, []))
-    assert tracked, "minhash persist was not tracked under its session"
-    assert any(df.storageLevel.useMemory for df in tracked)
-    # registry is per-session (r6 advisor): releasing a DIFFERENT session
-    # must not touch this session's caches
-    other = object()  # stands in for another session key
-    dedup._PERSISTED[other] = []  # type: ignore[index]
-    dedup.release_intermediates(other)  # type: ignore[arg-type]
-    assert spark in dedup._PERSISTED, "release of another session swept ours"
-    assert any(df.storageLevel.useMemory for df in tracked)
-    dedup.release_intermediates(spark)
-    assert spark not in dedup._PERSISTED
-    assert all(not df.storageLevel.useMemory for df in tracked)
+    inner: list = []
+    real = dedup.persist_tracked
+
+    def spy(df):
+        inner.append(df)
+        return real(df)
+
+    other_persisted, other_may_exit = threading.Event(), threading.Event()
+    other: list = []
+
+    def other_thread():
+        with dedup.released_on_exit():
+            other.append(dedup.persist_tracked(spark.range(7)))
+            other_persisted.set()
+            other_may_exit.wait(60)
+
+    th = threading.Thread(target=other_thread)
+    th.start()
+    try:
+        assert other_persisted.wait(60)
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
+        with dedup.released_on_exit():
+            outer = dedup.persist_tracked(spark.range(5))
+            with dedup.released_on_exit():
+                monkeypatch.setattr(dedup, "persist_tracked", spy)
+                cands = minhash_lsh_candidates(docs, "text", "doc_id")
+                cands.count()
+                assert inner and all(df.storageLevel.useMemory for df in inner)
+            assert not any(df.storageLevel.useMemory for df in inner)
+            assert outer.storageLevel.useMemory, "inner scope released the outer"
+            assert other[0].storageLevel.useMemory, "scope released another thread's"
+        assert not outer.storageLevel.useMemory
+    finally:
+        other_may_exit.set()
+        th.join(60)
+    assert not th.is_alive()
+    assert not other[0].storageLevel.useMemory
+
+
+def test_released_on_exit_releases_when_the_body_raises(spark):
+    from fineventstream_spark.operators import dedup
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with dedup.released_on_exit():
+            df = dedup.persist_tracked(spark.range(5))
+            assert df.storageLevel.useMemory
+            raise RuntimeError("boom")
+    assert not df.storageLevel.useMemory
+
+
+def _dataframes_held(obj, seen: set) -> int:
+    """DataFrames reachable from ``obj`` through containers and context
+    variables (the current context's value)."""
+    import contextvars
+
+    from pyspark.sql import DataFrame
+
+    if id(obj) in seen:
+        return 0
+    seen.add(id(obj))
+    if isinstance(obj, DataFrame):
+        return 1
+    if isinstance(obj, contextvars.ContextVar):
+        return _dataframes_held(obj.get(None), seen)
+    if isinstance(obj, dict):
+        obj = [*obj.keys(), *obj.values()]
+    if isinstance(obj, (list, tuple, set, frozenset)):
+        return sum(_dataframes_held(x, seen) for x in obj)
+    return 0
+
+
+def test_unscoped_dedup_runs_leave_no_reference(spark, sf_dir):
+    """Harnesses free caches with clearCache() and open no scope; the
+    dedup module must then hold none of the frames it persisted, or every
+    run's plans stay live on the driver."""
+    from fineventstream_spark.operators import dedup
+    from fineventstream_spark.registry import all_queries
+
+    query = all_queries()["q_llm_dedup_near"]
+    for _ in range(3):
+        query.fn(spark, sf_dir).collect()
+        spark.catalog.clearCache()
+    assert _dataframes_held(list(vars(dedup).values()), set()) == 0
 
 
 def test_bucketed_spec_is_part_of_derivative_identity(sf_dir, monkeypatch):
@@ -231,88 +298,6 @@ def test_prune_stale_plain_spec_spares_projected_siblings_on_same_key(tmp_path):
     assert fresh_plain.exists()
     assert keep_projected.exists(), "plain-spec prune deleted a projected layout on the same key"
     assert not stale_plain.exists(), "superseded plain fingerprint not pruned"
-
-
-def test_release_intermediates_without_active_session(spark):
-    """r7 advisor: an argument-less release from a thread with no active
-    session must release every live session's tracked caches rather than
-    silently leaking them."""
-    import threading
-
-    from fineventstream_spark.operators.dedup import (
-        _PERSISTED,
-        persist_tracked,
-        release_intermediates,
-    )
-
-    df = persist_tracked(spark.range(10))
-    df.count()
-    assert any(df is d for lst in _PERSISTED.values() for d in lst)
-    # call from a thread where getActiveSession() is None
-    err: list[Exception] = []
-
-    def _release():
-        try:
-            release_intermediates()
-        except Exception as e:  # noqa: BLE001
-            err.append(e)
-
-    th = threading.Thread(target=_release)
-    th.start()
-    th.join()
-    assert not err, f"release raised off-thread: {err}"
-    assert not any(
-        df is d for lst in _PERSISTED.values() for d in lst
-    ), "tracked cache leaked when no session was active"
-    assert df.storageLevel.useMemory is False, "DataFrame still persisted"
-
-
-def test_release_intermediates_ambiguous_multi_session_warns(spark):
-    """r9 advisor: with NO active session and ≥2 live sessions holding
-    tracked caches, release_intermediates must WARN and release nothing —
-    not raise. It is typically called from a finally block, where an
-    exception would mask the original error and leak the very caches it
-    was asked to release. Each session's caches stay releasable by an
-    explicit call afterwards."""
-    import threading
-    import warnings as _w
-
-    from fineventstream_spark.operators.dedup import (
-        _PERSISTED,
-        persist_tracked,
-        release_intermediates,
-    )
-
-    release_intermediates(spark)  # clean slate
-    other = spark.newSession()
-    df_a = persist_tracked(spark.range(5))
-    df_a.count()
-    df_b = persist_tracked(other.range(7))  # registers under df.sparkSession
-    df_b.count()
-    assert len(_PERSISTED) == 2
-
-    rec: list = []
-    err: list = []
-
-    def _release():
-        try:
-            with _w.catch_warnings(record=True) as r:
-                _w.simplefilter("always")
-                release_intermediates()
-            rec.extend(r)
-        except Exception as e:  # noqa: BLE001
-            err.append(e)
-
-    th = threading.Thread(target=_release)
-    th.start()
-    th.join()
-    assert not err, f"cleanup API raised: {err}"
-    assert rec and "released nothing" in str(rec[-1].message)
-    assert len(_PERSISTED) == 2, "ambiguous release touched tracked caches"
-    # explicit per-session release still works
-    release_intermediates(spark)
-    release_intermediates(other)
-    assert not _PERSISTED
 
 
 def test_bucketed_layout_assertion_rejects_multi_file_buckets(tmp_path):
