@@ -4,19 +4,18 @@ Four families, all deterministic (no eval-time RNG — hashes are seeded by
 construction so re-runs and retried tasks agree):
 
 - exact:        hash-groupBy on content (or sha256 for wide payloads)
-- MinHash+LSH:  shingle → K minhashes → B bands → bucket-join candidates
+- MinHash+LSH:  shingle → K minhashes → B bands → in-bucket candidates
 - SimHash:      64-bit near-dup fingerprint, bucket by rotated prefixes
 - n-gram Jaccard: exact verify on LSH candidate pairs only
 
-Scale design (100 TB): band entries — (band, bucket → doc_id, signature),
-tiny vs the corpus — cross the wire ONCE, into the bucket groupBy that
-forms pairs (bounded collect_list + JVM upper-triangle explode; the cap
-count that precedes it is map-side partial-aggregated and its join-back
-is un-hinted, so AQE broadcasts it only while it is actually small). The
-O(n²) trap (all-pairs compare) is structurally avoided: pairs are only
-formed within an LSH bucket, and oversized buckets (degenerate content)
-are capped before any list materializes. Everything downstream of the
-signature kernel is JVM built-ins.
+Scale design (100 TB): every LSH candidate step here and in
+``similarity.cosine_near_dup_pairs`` buckets to prune, caps oversized
+buckets (degenerate content) before any list materializes, and forms
+pairs only inside a bucket (:func:`bucket_pairs`), so the O(n²)
+all-pairs compare never happens. Bucket entries are (bucket, id) rows,
+tiny vs the corpus, and cross the wire once; payloads such as
+signatures attach to the deduped pair list afterwards. Everything
+downstream of the signature kernel is JVM built-ins.
 """
 
 from __future__ import annotations
@@ -167,6 +166,125 @@ def released_on_exit() -> Iterator[None]:
             df.unpersist()
 
 
+def _minhash_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    bands: int,
+    *carry: str,
+) -> DataFrame:
+    """(id_col, *carry, sig, buckets): the ``num_hashes`` MinHash values
+    and ``bands`` band-bucket hashes of each row's text. The fixture and
+    lake files can be a few unsplittable row groups and the kernel is the
+    CPU-heavy step, so the rows are spread across the cores first while
+    the input is knowably small (sizing.spread_for_kernel)."""
+    sb = text_to_minhash_udf(num_hashes, shingle_n, bands)(F.col(text_col))
+    return (
+        spread_for_kernel(df, id_col)
+        .select(id_col, *carry, sb.alias("__sb"))
+        .select(
+            id_col,
+            *carry,
+            F.slice("__sb", 1, num_hashes).alias("sig"),
+            F.slice("__sb", num_hashes + 1, bands).alias("buckets"),
+        )
+    )
+
+
+def _agreement(a, b, num_hashes: int):
+    """Fraction of the ``num_hashes`` positions on which signatures ``a``
+    and ``b`` agree, to 4 places: the MinHash estimate of the Jaccard
+    similarity of their shingle sets."""
+    same = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return F.round(same / F.lit(float(num_hashes)), 4)
+
+
+def _with_agreement(pairs: DataFrame, sig: DataFrame, num_hashes: int) -> DataFrame:
+    """(id_a, id_b, est_jaccard) for the (a, b) id pairs of
+    :func:`bucket_pairs`, the signatures taken from ``sig`` (id, sig).
+
+    Pairs form on ids alone and take their signatures only once deduped:
+    the 512-byte signature would otherwise ride the bucket exchange once
+    per band. The pair list is bucket-cap-bounded, so AQE broadcasts it
+    and ``sig`` streams map-side; left un-hinted, a degenerate pair list
+    falls back to a shuffle instead of an OOM."""
+    return (
+        pairs.join(sig.select(F.col("id").alias("a"), F.col("sig").alias("__sa")), "a")
+        .join(sig.select(F.col("id").alias("b"), F.col("sig").alias("__sb")), "b")
+        .select(
+            F.col("a").alias("id_a"),
+            F.col("b").alias("id_b"),
+            _agreement("__sa", "__sb", num_hashes).alias("est_jaccard"),
+        )
+    )
+
+
+def _capped(entries: DataFrame, bucket_cols: list[str], max_bucket: int) -> DataFrame:
+    """The rows of ``entries`` whose bucket holds 2..``max_bucket`` rows.
+
+    The count is a map-side partial-aggregated groupBy, so a hot bucket
+    costs one long per task; a window count would buffer and sort the
+    whole hot partition before the filter. The join back is an un-hinted
+    semi join: AQE broadcasts the kept-bucket list while it is small and
+    shuffles otherwise. The list grows with the corpus, so a forced
+    broadcast of it is a driver OOM on a dedup-heavy corpus."""
+    keep = (
+        entries.groupBy(*bucket_cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter((F.col("__n") > 1) & (F.col("__n") <= max_bucket))
+        .select(*bucket_cols)
+    )
+    return entries.join(keep, bucket_cols, "left_semi")
+
+
+def bucket_pairs(entries: DataFrame, bucket_cols: list[str], entry="id") -> DataFrame:
+    """The in-bucket pair kernel of every LSH candidate step: (a, b) for
+    each two entries that share a bucket, with a < b, each pair once even
+    when it shares several buckets.
+
+    ``entries`` holds one row per (bucket, entry); ``bucket_cols`` name
+    the bucket and ``entry`` is a column name or Column. Entries compare
+    as values, so a struct entry orders by its first field (put a unique
+    id there) and carries the rest into the pair.
+
+    One sorted ``collect_list`` per bucket, then a JVM upper-triangle
+    explode: the entries cross the wire once, where an a×b self-join on
+    the bucket exchanges them once per side. Buckets of fewer than two
+    entries are dropped before the explode: a one-entry list makes the
+    triangle index past its end, which raises under ANSI. The list is
+    materialized per bucket, so the caller caps bucket sizes first
+    (:func:`_capped`)."""
+    es = F.col("__es")
+    pair = F.explode(
+        F.flatten(
+            F.transform(
+                F.sequence(F.lit(0), F.size(es) - 2),
+                lambda i: F.transform(
+                    F.sequence(i + 1, F.size(es) - 1),
+                    lambda j: F.struct(
+                        F.element_at(es, i + 1).alias("a"),
+                        F.element_at(es, j + 1).alias("b"),
+                    ),
+                ),
+            )
+        )
+    )
+    return (
+        entries.groupBy(*bucket_cols)
+        .agg(F.sort_array(F.collect_list(entry)).alias("__es"))
+        .filter(F.size(es) >= 2)
+        .select(pair.alias("__p"))
+        .select("__p.a", "__p.b")
+        .dropDuplicates(["a", "b"])
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -195,124 +313,24 @@ def minhash_lsh_candidates(
     exchange to pay for a contract violation, so the precondition is
     documented instead, as for ``similarity.cosine_near_dup_pairs``.
     """
-    # Spread first: fixture/lake files can be few huge unsplittable row
-    # groups, and the signature kernel is the CPU-heavy step — spread it
-    # across all cores before computing. r15: size-guarded
-    # (spread_for_kernel, guide §2.1) — at lake scale the scan's own
-    # splits fill the cores and the full-corpus text shuffle is skipped.
-    sig_and_buckets = (
-        spread_for_kernel(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"
-        )
-        .select(
+    # signatures feed two consumers (the band entries and the sig
+    # re-attach joins) — persist the small (id, sig) table instead of
+    # re-running the kernel
+    sig = persist_tracked(
+        _minhash_signatures(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")),
             "id",
-            text_to_minhash_udf(num_hashes, shingle_n, bands)(F.col("t")).alias("sb"),
-        )
-        .select(
-            "id",
-            F.slice("sb", 1, num_hashes).alias("sig"),
-            F.slice("sb", num_hashes + 1, bands).alias("buckets"),
+            "t",
+            num_hashes,
+            shingle_n,
+            bands,
         )
     )
-    # signatures feed two consumers (bucket-size counts and the a×b pair
-    # join) — persist the tiny (id, sig) table instead of recomputing
-    # (tracked: see released_on_exit)
-    sig = persist_tracked(sig_and_buckets)
-
-    # r15 (guide §2.3/§8 — shuffle keys and metadata, not payloads; the
-    # same split r14 applied to the embedding LSH): band entries carry
-    # ONLY (band, bucket, id). The 512-byte signature array used to ride
-    # the collect_list exchange 16× per doc (one per band) just so the
-    # in-bucket agreement could read it; now pairs form on ids alone and
-    # the signatures attach to the DEDUPED pair list at the end via two
-    # joins against the persisted (cached) sig table — at corpus scale
-    # the band shuffle shrinks from sig×bands to ~16 bytes×bands per rep.
-    band_entries = sig.select(
-        "id", F.posexplode("buckets").alias("band", "bucket")
+    band_entries = sig.select("id", F.posexplode("buckets").alias("band", "bucket"))
+    pairs = bucket_pairs(
+        _capped(band_entries, ["band", "bucket"], max_bucket), ["band", "bucket"]
     )
-
-    # Pair formation within buckets; cap bucket size to bound the blow-up.
-    # History of this shape (it has flip-flopped, so the reasoning is
-    # recorded): r3 capped via groupBy + a FORCED broadcast join-back — a
-    # driver OOM at 100 TB because the multi-occupancy bucket list is
-    # corpus-scale for a dedup-heavy corpus. r4 capped via a window count
-    # sharing the a×b self-join's exchange — scale-safe, but it buffered
-    # and sorted every full (band, bucket) partition BEFORE the cap filter
-    # (unbounded per-task memory on hot buckets) and regressed the measured
-    # bench 2.8× (1.10 → 3.05 s at sf0.1), because the self-join still
-    # exchanged the band entries twice (a side + b side; AQE does not reuse
-    # those exchanges across cached-subtree branches — measured: 4
-    # fact-scale exchanges executed). The r5 form drops the self-join
-    # entirely:
-    #
-    #   1. cap = map-side partial-aggregated groupBy count (hot buckets
-    #      cost one long per task, never a buffered partition) + an
-    #      UN-hinted semi-join-back — AQE broadcasts the filtered count
-    #      table when it is small, else a shuffle semi join;
-    #   2. pair formation = collect_list per (band, bucket) — bounded at
-    #      max_bucket entries per group BECAUSE the cap already ran — then
-    #      a JVM upper-triangle explode of in-bucket pairs. The signature
-    #      agreement is computed with zip_with/aggregate on the exploded
-    #      pair (interpreted HOFs, but over candidate pairs only — tiny).
-    #
-    # Band entries therefore cross the wire ONCE (the collect_list
-    # exchange; the semi join is broadcast at the scales where a second
-    # exchange would hurt), vs twice in r4 and four times in the un-hinted
-    # self-join formulation. Plan-asserted in tests/test_plans.py: no
-    # Window buffer, partial-aggregated cap, and zero BroadcastExchange
-    # when broadcasts are disabled (nothing *forces* one).
-    keep = (
-        band_entries.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") > 1) & (F.col("bsz") <= max_bucket))
-        .select("band", "bucket")
-    )
-    capped = band_entries.join(keep, ["band", "bucket"], "left_semi")
-    buckets_g = capped.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("id")).alias("es")
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.size("es") - 2),
-                lambda i: F.transform(
-                    F.sequence(i + 1, F.size("es") - 1),
-                    lambda j: F.struct(
-                        F.element_at(F.col("es"), i + 1).alias("a"),
-                        F.element_at(F.col("es"), j + 1).alias("b"),
-                    ),
-                ),
-            )
-        )
-    )
-    # ids sort identically to the old struct(id, sig) sort (ids are unique,
-    # so the struct comparison never reached sig) — pair orientation
-    # (id_a < id_b) is unchanged. Dedup BEFORE the sig joins: est_jaccard
-    # is a pure function of the pair, so per-band duplicates carried
-    # identical values anyway and each surviving pair now computes it once.
-    pairs = (
-        buckets_g.select(pair.alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(num_hashes))
-    # sig re-attach reads the persisted sig table (no kernel re-run); the
-    # pair list is bucket-cap-bounded, so AQE broadcasts it and the sig
-    # side streams map-side — left un-hinted so a degenerate pair list
-    # falls back to a shuffle instead of an OOM.
-    return (
-        pairs.join(
-            sig.select(F.col("id").alias("id_a"), F.col("sig").alias("__sa")), "id_a"
-        )
-        .join(
-            sig.select(F.col("id").alias("id_b"), F.col("sig").alias("__sb")), "id_b"
-        )
-        .select("id_a", "id_b", F.round(agree, 4).alias("est_jaccard"))
-    )
+    return _with_agreement(pairs, sig, num_hashes)
 
 
 def ngram_jaccard_verify(
@@ -472,7 +490,7 @@ def simhash_candidates(
 
     Buckets larger than ``max_bucket`` are dropped, same as
     :func:`minhash_lsh_candidates`: boilerplate-heavy corpora collapse into
-    one prefix bucket, and an uncapped a×b join there is a quadratic pair
+    one prefix bucket, and its uncapped pair list is a quadratic
     explosion on one executor.
 
     FINGERPRINT-COLLAPSE prepass (r11 — found by the near-plant oracle
@@ -497,8 +515,8 @@ def simhash_candidates(
     consumers (dedup keep/drop, clustering) get the same connected
     components either way — ``dedup_cluster`` already unions both edge
     kinds before label propagation."""
-    # (id, simhash) feeds two consumers post-r5 (bucket counts + the pair
-    # join) — persist the 16-byte-per-doc table instead of re-running the
+    # (id, simhash) feeds the fingerprint collapse and the prefix buckets
+    # — persist the 16-byte-per-doc table instead of re-running the
     # CPU-heavy kernel
     sh = persist_tracked(
         with_simhash64(df, text_col).select(F.col(id_col).alias("id"), "simhash")
@@ -538,48 +556,17 @@ def simhash_candidates(
             )
         ).alias("rb"),
     ).select("id", "simhash", F.col("rb.rot").alias("rot"), F.col("rb.bucket").alias("bucket"))
-    # Cap + pair formation exactly as in minhash_lsh_candidates (see the
-    # history note there): map-side partial-aggregated count bounds hot
-    # buckets to one long per task, the un-hinted semi-join-back lets AQE
-    # broadcast the small filtered count table (shuffle semi join at corpus
-    # scale), and pairs come from a bounded (≤ max_bucket) sorted
-    # collect_list + JVM upper-triangle explode — no self-join, so bucket
-    # entries cross the wire once.
-    keep = (
-        bucketed.groupBy("rot", "bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") > 1) & (F.col("bsz") <= max_bucket))
-        .select("rot", "bucket")
+    pairs = bucket_pairs(
+        _capped(bucketed, ["rot", "bucket"], max_bucket),
+        ["rot", "bucket"],
+        F.struct("id", "simhash"),
     )
-    capped = bucketed.join(keep, ["rot", "bucket"], "left_semi")
-    buckets_g = capped.groupBy("rot", "bucket").agg(
-        F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("es")
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.size("es") - 2),
-                lambda i: F.transform(
-                    F.sequence(i + 1, F.size("es") - 1),
-                    lambda j: F.struct(
-                        F.element_at(F.col("es"), i + 1).alias("a"),
-                        F.element_at(F.col("es"), j + 1).alias("b"),
-                    ),
-                ),
-            )
-        )
-    )
-    hamming = F.bit_count(F.col("p.a.simhash").bitwiseXOR(F.col("p.b.simhash")))
-    return (
-        buckets_g.select(pair.alias("p"))
-        .select(
-            F.col("p.a.id").alias("id_a"),
-            F.col("p.b.id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .unionByName(fp_star)
-    )
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return pairs.select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        hamming.cast("int").alias("hamming"),
+    ).unionByName(fp_star)
 
 
 # ---------------------------------------------------------------------------
@@ -638,23 +625,10 @@ def _rep_signatures(
         docs.filter(F.col(text_col).isNotNull())
         .groupBy(text_col)
         .agg(F.min(id_col).alias("rep_id"))
+        .withColumn("text_sha", F.sha2(F.col(text_col), 256))
     )
-    # size-guarded spread before the CPU-heavy kernel (r15, guide §2.1)
-    return (
-        spread_for_kernel(rep, "rep_id")
-        .select(
-            "rep_id",
-            F.sha2(F.col(text_col), 256).alias("text_sha"),
-            text_to_minhash_udf(num_hashes, shingle_n, bands)(
-                F.col(text_col)
-            ).alias("sb"),
-        )
-        .select(
-            "rep_id",
-            "text_sha",
-            F.slice("sb", 1, num_hashes).alias("sig"),
-            F.slice("sb", num_hashes + 1, bands).alias("buckets"),
-        )
+    return _minhash_signatures(
+        rep, "rep_id", text_col, num_hashes, shingle_n, bands, "text_sha"
     )
 
 
@@ -855,21 +829,9 @@ def incremental_dedup_against_store(
     )
 
     # 3. signature kernel over the shard's NEW representatives only
-    # (size-guarded spread, r15 — see sizing.spread_for_kernel)
     nsig = persist_tracked(
-        spread_for_kernel(new_reps, "id")
-        .select(
-            "id",
-            "text_sha",
-            text_to_minhash_udf(
-                num_hashes, spec["shingle_n"], spec["bands"]
-            )(F.col("t")).alias("sb"),
-        )
-        .select(
-            "id",
-            "text_sha",
-            F.slice("sb", 1, num_hashes).alias("sig"),
-            F.slice("sb", num_hashes + 1, spec["bands"]).alias("buckets"),
+        _minhash_signatures(
+            new_reps, "id", "t", num_hashes, spec["shingle_n"], spec["bands"], "text_sha"
         )
     )
     shard_bands = persist_tracked(
@@ -917,12 +879,6 @@ def incremental_dedup_against_store(
         ).select("band", "bucket")
     )
 
-    agree_frac = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(num_hashes))
-
     # 6a. store × shard candidates (bounded: both sides ≤ max_bucket per
     # kept bucket); est_jaccard from the full signatures via two compact
     # lookups — O(matches), never O(store)
@@ -948,59 +904,19 @@ def incremental_dedup_against_store(
         .select(
             F.least("rep_id", "id").alias("id_a"),
             F.greatest("rep_id", "id").alias("id_b"),
-            F.round(agree_frac(F.col("__sa"), F.col("__sb")), 4).alias(
-                "est_jaccard"
-            ),
+            _agreement("__sa", "__sb", num_hashes).alias("est_jaccard"),
             F.lit("lsh").alias("kind"),
         )
     )
 
-    # 6b. shard × shard candidates: the exact pair-formation shape of
-    # minhash_lsh_candidates (bounded collect_list + upper triangle).
-    # r15: ids-only through the bucket exchange, signatures re-attached to
-    # the deduped pair list from the persisted nsig table (guide §2.3/§8 —
-    # same split as minhash_lsh_candidates; the struct(id, sig) sort was
-    # id-decided anyway, so pair orientation is unchanged).
-    sh_ids = shard_bands.join(keep, ["band", "bucket"], "left_semi")
-    buckets_g = sh_ids.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("id")).alias("es")
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.size("es") - 2),
-                lambda i: F.transform(
-                    F.sequence(i + 1, F.size("es") - 1),
-                    lambda j: F.struct(
-                        F.element_at(F.col("es"), i + 1).alias("a"),
-                        F.element_at(F.col("es"), j + 1).alias("b"),
-                    ),
-                ),
-            )
-        )
-    )
-    shard_pairs = (
-        buckets_g.filter(F.size("es") >= 2)
-        .select(pair.alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .join(
-            nsig.select(F.col("id").alias("id_a"), F.col("sig").alias("__pa")),
-            "id_a",
-        )
-        .join(
-            nsig.select(F.col("id").alias("id_b"), F.col("sig").alias("__pb")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree_frac(F.col("__pa"), F.col("__pb")), 4).alias(
-                "est_jaccard"
-            ),
-            F.lit("lsh").alias("kind"),
-        )
-    )
+    # 6b. shard × shard candidates
+    shard_pairs = _with_agreement(
+        bucket_pairs(
+            shard_bands.join(keep, ["band", "bucket"], "left_semi"), ["band", "bucket"]
+        ),
+        nsig,
+        num_hashes,
+    ).withColumn("kind", F.lit("lsh"))
 
     cands = cross.unionByName(shard_pairs)
     if threshold is not None:

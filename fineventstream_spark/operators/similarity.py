@@ -14,18 +14,11 @@
   embedding near-duplicate detection (deterministic seeded hyperplanes);
   exact cosine only within buckets, never all-pairs.
 
-Design note (measured): Spark HOFs (``aggregate``/``zip_with``) are
-CodegenFallback — interpreted per element — so a 64-dim dot product via
-built-ins costs ~200 interpreted evals/row. A JVM-fold variant
-(:func:`cosine_similarity_col`) is kept for pure-SQL composability, but
-every hot path uses the numpy kernels. A third form was tried and
-REJECTED on measurement (r7): :func:`cosine_vs_query_expr` unrolls the
-query-vector dot product into per-dimension multiply-adds hoping to stay
-inside whole-stage codegen — but at dim 64 the 128-term tree exceeds
-codegen's generated-method limits and executes interpreted, measuring 3×
-SLOWER than the Arrow UDF (sf30, 600k vectors: 5.4 s vs 1.8 s warmed
-min-of-3). Kept for narrow vectors (≤ ~16 dims) and as the recorded
-experiment.
+Every cosine here is an Arrow/numpy kernel: Spark's HOF fold
+(``aggregate``/``zip_with``) is interpreted per element, and a dot
+product unrolled into per-dimension multiply-adds exceeds codegen's
+method limits at dim 64 and runs interpreted too, 3× slower than the
+Arrow UDF (sf30, 600k vectors: 5.4 s vs 1.8 s warmed min-of-3).
 """
 
 from __future__ import annotations
@@ -37,51 +30,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_similarity_col(vec_col, query: list[float]):
-    """JVM-side cosine vs a literal query vector (slow path — interpreted
-    HOFs — but composes in pure SQL plans with no Python worker)."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
-    return _dot(vec_col.cast("array<double>"), q) / (_norm(vec_col.cast("array<double>")) * F.lit(qn))
-
-
-def _balanced_sum(cols):
-    """Sum a list of Columns as a balanced tree: expression DEPTH stays
-    log2(n) instead of n, keeping the generated Java inside codegen's
-    nesting limits for wide vectors."""
-    while len(cols) > 1:
-        cols = [
-            cols[i] + cols[i + 1] if i + 1 < len(cols) else cols[i]
-            for i in range(0, len(cols), 2)
-        ]
-    return cols[0]
-
-
-def cosine_vs_query_expr(vec_col, query: list[float]):
-    """Cosine vs a literal query vector as an UNROLLED codegen expression:
-    one getItem + multiply-add per dimension, whole-stage-compiled — no
-    Python worker, no interpreted HOF fold. For bounded dims (≤ a few
-    hundred) this keeps the scan's codegen span intact and beats the
-    Arrow round-trip: the UDF path serializes every vector batch to a
-    Python worker to do 64 flops on it. Dot terms sum left-to-right
-    within a balanced tree; the ROUND(_, 6) consumers absorb the
-    last-ulp summation-order differences exactly as they do for numpy's
-    pairwise order."""
-    qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
-    elems = [vec_col.getItem(j).cast("double") for j in range(len(query))]
-    dot = _balanced_sum([e * F.lit(float(qj)) for e, qj in zip(elems, query)])
-    nrm = F.sqrt(_balanced_sum([e * e for e in elems]))
-    return dot / (F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm) * F.lit(qn))
 
 
 def _stack(series: pd.Series) -> np.ndarray:
@@ -104,13 +52,7 @@ def cosine_vs_query_udf(query: list[float]):
 
 
 def cosine_topk(df: DataFrame, vec_col: str, id_col: str, query: list[float], k: int = 10) -> DataFrame:
-    """Exact brute-force cosine top-k (ties broken by id for determinism).
-
-    The Arrow/numpy UDF is the measured winner (sf30 / 600k vectors,
-    warmed min-of-3: UDF 1.8 s vs unrolled expression 5.4 s — the
-    128-term expression tree exceeds codegen's method limits and falls
-    back to interpreted evaluation, while numpy's matrix-vector product
-    amortizes the Arrow round-trip)."""
+    """Exact brute-force cosine top-k (ties broken by id for determinism)."""
     sim = cosine_vs_query_udf(query)(F.col(vec_col))
     return (
         df.select(F.col(id_col), F.round(sim, 6).alias("cosine_sim"))
@@ -307,19 +249,18 @@ def cosine_near_dup_pairs(
         ],
         dtype=np.float64,
     )
-    from fineventstream_spark.operators.dedup import persist_tracked
+    from fineventstream_spark.operators.dedup import bucket_pairs, persist_tracked
 
     chain = _band_bucket_chain_udf(planes, n_bands, extra, split_levels, split_bits)
     # §8 split (r14, guide §2.3/§8 — shuffle keys and metadata, not
     # payloads): every bucketing/cap decision below depends only on
     # (id, chain) — ~45 bytes/row — never on the vector, so the vec
     # column (512 B at dim=64, arbitrarily wide in general) stays OUT of
-    # the level windows and the pair self-join entirely; it is attached
+    # the level windows and the bucket lists entirely; it is attached
     # exactly once, to the candidate pairs, at the end.
     # persisted: the chain kernel (126 plane dot products per vector)
     # feeds split_levels+1 union branches — unpersisted, AQE re-executes
-    # it per branch (r12 review; same lesson as the r5 minhash history
-    # note above)
+    # it per branch
     keyed = persist_tracked(
         df.select(
             F.col(id_col).alias("id"),
@@ -330,8 +271,8 @@ def cosine_near_dup_pairs(
     # Window-count cap, not groupBy + join-back: the multi-occupancy bucket
     # list grows with the corpus (a forced broadcast is a driver OOM at
     # 100 TB, an AQE-decided join an extra stage barrier); the window needs
-    # only the one bucket exchange the pair join below reuses. The band id
-    # is baked into the bucket key, so caps bind per (band, bucket).
+    # only a bucket exchange. The band id is baked into the bucket key, so
+    # caps bind per (band, bucket).
     from pyspark.sql import Window
 
     base_len = len(str(n_bands - 1)) + 1 + n_planes // n_bands
@@ -356,23 +297,17 @@ def cosine_near_dup_pairs(
     capped = finals[0]
     for f_ in finals[1:]:
         capped = capped.unionByName(f_)
-    # persisted: capped feeds both sides of the pair join below; without
-    # it the whole level hierarchy (windows included) executes twice
-    capped = persist_tracked(capped)
-    a = capped.select("bucket", F.col("id").alias("id_a"))
-    b = capped.select("bucket", F.col("id").alias("id_b"))
     # candidate pairs deduped across buckets BEFORE the vectors attach:
     # cosine is a pure function of the pair, so deduping first computes
-    # it once per pair (the pre-r14 shape deduped after) — and the
-    # bounded pair list is what the corpus-scale vec column joins against
+    # it once per pair — and the bounded pair list is what the
+    # corpus-scale vec column joins against
     cand = persist_tracked(
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+        bucket_pairs(capped, ["bucket"]).select(
+            F.col("a").alias("id_a"), F.col("b").alias("id_b")
+        )
     )
     # two more column-pruned (id, vec) scans in place of carrying vec
-    # through every level window and both join sides: the pair list is
+    # through every level window and the bucket lists: the pair list is
     # bucket-cap-bounded, so AQE broadcasts it (and then the pairs+vec_a
     # intermediate) and the corpus streams map-side both times — the
     # vectors never shuffle at all

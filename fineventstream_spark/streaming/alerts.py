@@ -1,4 +1,4 @@
-"""Throttled price alerts via transformWithStateInPandas (Spark 4.x).
+"""Throttled price alerts via applyInPandasWithState.
 
 The alerting semantics every quote consumer eventually wants: emit when
 the price has moved more than ``threshold_pct`` from the LAST ALERTED
@@ -8,12 +8,12 @@ level shift). The comparison point is therefore mutable per-key state
 that survives micro-batches and restarts: exactly the contract of
 Spark's arbitrary-state API.
 
-This uses ``transformWithStateInPandas`` — the successor to
-``applyInPandasWithState`` (which streaming/state.py uses for high-water
-dedup) — with a typed per-symbol ValueState holding the last alerted
-price. State lives in the state store (checkpointed, restored on
-restart); rows are processed in (seq) order within each batch so alert
-decisions are deterministic for a deterministic feed.
+The per-symbol group state holds the last alerted price. State lives in
+the state store (checkpointed, restored on restart); rows are processed
+in (seq) order within each batch so alert decisions are deterministic
+for a deterministic feed. ``transformWithStateInPandas`` is not used:
+its Python wire protocol needs ``google.protobuf``, which this runtime
+lacks.
 
 Scale: state is one double per symbol; the operator shuffles on symbol
 once (the groupBy), and every micro-batch touches only the symbols
@@ -26,10 +26,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 ALERT_SCHEMA = "symbol string, seq long, price double, ref_price double, move_pct double"
 
@@ -40,12 +36,10 @@ def _evaluate_alerts(
     ref: float | None,
     threshold_pct: float,
 ) -> tuple[pd.DataFrame | None, float | None]:
-    """The one alert kernel both state APIs call: concat the batch,
-    process ticks in seq order, emit a row whenever price moves
-    >= threshold_pct from the last alerted price (first tick always
-    alerts), return (alerts-or-None, new reference price). Keeping this
-    shared is what guarantees the transformWithState and
-    applyInPandasWithState forms cannot drift apart."""
+    """The alert kernel: concat the batch, process ticks in seq order,
+    emit a row whenever price moves >= threshold_pct from the last
+    alerted price (first tick always alerts), return (alerts-or-None,
+    new reference price)."""
     batch = pd.concat(list(batches), ignore_index=True)
     batch = batch.sort_values("seq", kind="mergesort")
     out = []
@@ -67,60 +61,6 @@ def _evaluate_alerts(
     return frame, ref
 
 
-class PriceAlertProcessor(StatefulProcessor):
-    """Emit (symbol, seq, price, ref_price, move_pct) whenever price moves
-    >= threshold_pct from the last alerted price; the first tick of a
-    symbol always alerts (establishes the reference)."""
-
-    def __init__(self, threshold_pct: float = 1.0):
-        self.threshold_pct = threshold_pct
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.last = handle.getValueState("last_alert_price", "price double")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        ref = self.last.get()[0] if self.last.exists() else None
-        frame, ref = _evaluate_alerts(key[0], rows, ref, self.threshold_pct)
-        self.last.update((ref,))
-        if frame is not None:
-            yield frame
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithState's Python wire protocol needs google.protobuf,
-    which is not guaranteed in every runtime (absent in this container,
-    and the sandbox has no package-install route — checked round 5); the
-    applyInPandasWithState twin carries the tested semantics. Callers
-    pick the API accordingly."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def price_alert_stream_tws(quotes: DataFrame, threshold_pct: float = 1.0) -> DataFrame:
-    """Wire the processor onto a streaming quotes frame (symbol, seq,
-    price) via transformWithStateInPandas — requires
-    :func:`tws_available`."""
-    return (
-        quotes.groupBy("symbol")
-        .transformWithStateInPandas(
-            statefulProcessor=PriceAlertProcessor(threshold_pct),
-            outputStructType=ALERT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def _alert_group_fn(threshold_pct: float):
     from pyspark.sql.streaming.state import GroupState
 
@@ -135,10 +75,8 @@ def _alert_group_fn(threshold_pct: float):
 
 
 def price_alert_stream(quotes: DataFrame, threshold_pct: float = 1.0) -> DataFrame:
-    """Same alert semantics on ``applyInPandasWithState`` — the form that
-    runs everywhere (no protobuf dependency). The TWS twin above is the
-    forward path; both share the reference semantics pinned by
-    tests/test_streaming_extra.py."""
+    """Alerts for a streaming quotes frame (symbol, seq, price); the
+    reference semantics are pinned by tests/test_streaming_extra.py."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return quotes.groupBy("symbol").applyInPandasWithState(

@@ -377,6 +377,37 @@ def test_ngram_jaccard_verify_planted(spark):
     assert got == {(1, 2): 0.5, (1, 3): 0.0}
 
 
+def test_bucket_pairs_kernel_contract(spark):
+    """The in-bucket pair kernel under ANSI: a one-entry bucket yields no
+    pair and raises nothing (its upper triangle would index past the
+    list), a pair sharing two buckets comes out once as (a < b), and
+    struct entries order by their first field, not by the payload."""
+    from fineventstream_spark.operators.dedup import bucket_pairs
+
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        entries = spark.createDataFrame(
+            [(1, 5, "a"), (1, 3, "z"), (2, 3, "z"), (2, 5, "a"), (3, 7, "m"),
+             (4, 9, "a"), (4, 2, "b"), (4, 6, "c")],
+            "bucket int, id long, payload string",
+        )
+        ids = sorted(tuple(r) for r in bucket_pairs(entries, ["bucket"]).collect())
+        structs = sorted(
+            (r.a.id, r.a.payload, r.b.id, r.b.payload)
+            for r in bucket_pairs(
+                entries, ["bucket"], F.struct("id", "payload")
+            ).collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert ids == [(2, 6), (2, 9), (3, 5), (6, 9)]
+    assert structs == [
+        (2, "b", 6, "c"), (2, "b", 9, "a"), (3, "z", 5, "a"), (6, "c", 9, "a"),
+    ]
+
+
 def test_embedding_near_dup_planted(spark, sf_dir):
     """Vector + tiny noise must surface as an embedding near-dup pair (the
     fixture corpus has no ≥0.9-cosine pairs, so only planting validates

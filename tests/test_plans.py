@@ -1006,52 +1006,82 @@ def test_substring_dedup_single_pass_no_join(spark, sf_dir):
 
 
 def test_lsh_bucket_cap_is_partial_agg_and_never_forces_broadcast(spark, sf_dir):
-    """The r5 LSH candidate-stage contract (see operators/dedup.py history
-    note): the bucket cap is a map-side partial-aggregated groupBy count —
-    never a window that buffers full hot-bucket partitions — semi-joined
-    back with NO broadcast hint, and pair formation is a bounded
-    collect_list + JVM explode, NOT an a×b self-join (which exchanged the
-    band entries twice; AQE measurably does not reuse those exchanges
-    across cached-subtree branches). Pinned plan properties:
+    """The LSH candidate-stage contract of ``dedup._capped`` and
+    ``dedup.bucket_pairs``, for both the MinHash and the SimHash input:
+    the bucket cap is a map-side partial-aggregated groupBy count — never
+    a window that buffers full hot-bucket partitions — semi-joined back
+    with NO broadcast hint, and pair formation is a bounded collect_list
+    + JVM explode, NOT an a×b self-join (which exchanged the band entries
+    twice). Pinned plan properties:
 
     1. the cap side partial-aggregates (a HashAggregate pair over the
        bucket key, so hot buckets cost one long per task);
     2. with broadcasts disabled the plan contains no BroadcastExchange at
        all — nothing in the operator FORCES a corpus-scale broadcast; any
        broadcast seen under defaults is AQE's size-based choice;
-    3. exactly THREE joins (the cap semi-join plus the two sig re-attach
-       joins against the persisted sig table — r15, guide §2.3/§8) and no
-       Window — band entries cross the wire once, in the pair-formation
-       groupBy, carrying ids ONLY: the signature array must never ride
-       the band exchange (pre-r15 it crossed 16× per doc inside
-       collect_list(struct(id, sig))).
+    3. no Window, and an exact join count per input:
+       - MinHash, THREE: the cap semi-join plus the two sig re-attach
+         joins against the persisted sig table. The bucket lists carry
+         ids ONLY: the signature array must never ride the band exchange
+         (it would cross 16× per doc inside collect_list(struct(id, sig)));
+       - SimHash, FOUR: the fingerprint-collapse join, the
+         representative semi-join (planned once for the cap count and
+         once for the bucket entries) and the cap semi-join; the 8-byte
+         fingerprint rides the list as struct(id, simhash).
     """
     import re
 
-    from fineventstream_spark.operators.dedup import minhash_lsh_candidates
+    from fineventstream_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        simhash_candidates,
+    )
 
-    # earlier tests persist the signature subtree; the CacheManager would
-    # substitute InMemoryRelation into this plan and change its shape —
-    # assert against the uncached plan
-    spark.catalog.clearCache()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    cases = [("minhash", minhash_lsh_candidates, 3), ("simhash", simhash_candidates, 4)]
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = minhash_lsh_candidates(docs, "text", "doc_id")
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+    for name, candidates, n_joins in cases:
+        # earlier tests persist the signature subtree; the CacheManager would
+        # substitute InMemoryRelation into this plan and change its shape —
+        # assert against the uncached plan
+        spark.catalog.clearCache()
+        try:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            df = candidates(docs, "text", "doc_id")
+            plan = spark._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert "BroadcastExchange" not in plan, f"{name}: operator forces a broadcast"
+        assert "Window" not in plan, f"{name}: cap must not buffer full bucket partitions"
+        aggs = re.findall(r"^\(\d+\) \w*HashAggregate", plan, re.M)
+        assert len(aggs) >= 2, f"{name}: cap count must be a partial-aggregated groupBy"
+        joins = re.findall(r"^\(\d+\) \w*Join", plan, re.M)
+        assert len(joins) == n_joins, f"{name}: expected {n_joins} joins, got {joins}"
+        lists = re.findall(r"collect_list\((.*?)\)", plan)
+        assert lists, f"{name}: pairs must form through collect_list"
+        assert not any("sig" in x for x in lists), (
+            f"{name}: signature arrays must not ride the bucket collect_list exchange"
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "BroadcastExchange" not in plan, "operator must not force a broadcast"
-    assert "Window" not in plan, "cap must not buffer full bucket partitions"
-    aggs = re.findall(r"^\(\d+\) \w*HashAggregate", plan, re.M)
-    assert len(aggs) >= 2, "cap count must be a partial-aggregated groupBy"
-    joins = re.findall(r"^\(\d+\) \w*Join", plan, re.M)
-    assert len(joins) == 3, f"expected cap semi-join + 2 sig re-attach joins, got {joins}"
-    assert "collect_list(struct(id" not in plan, (
-        "signature arrays must not ride the band collect_list exchange (r15)"
+
+
+def test_embedding_lsh_pairs_form_without_bucket_join(spark, sf_dir):
+    """``similarity.cosine_near_dup_pairs`` forms its candidate pairs
+    through ``dedup.bucket_pairs``: one collect_list per capped bucket,
+    and no join keyed on the bucket (the a×b self-join it replaced read
+    a persisted copy of the capped level union from both sides)."""
+    import re
+
+    from fineventstream_spark.operators.similarity import cosine_near_dup_pairs
+
+    spark.catalog.clearCache()
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = cosine_near_dup_pairs(emb, "embedding", "vec_id", dim=64)
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    spark.catalog.clearCache()
+    assert "collect_list(id" in plan, "pairs must form through collect_list"
+    assert not re.search(r"(?:Left|Right) keys \[\d+\]: \[bucket#", plan), (
+        "no join may be keyed on the bucket"
     )
 
 

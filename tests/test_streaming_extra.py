@@ -376,11 +376,8 @@ def _expected_alerts(symbols, n_ticks, threshold_pct):
 def test_transform_with_state_price_alerts(spark, tmpdir):
     """Throttled alerts via per-symbol mutable state: the last alerted
     price survives micro-batches, so the streamed result must equal the
-    sequential reference computation. Runs on applyInPandasWithState
-    (available everywhere); the transformWithStateInPandas twin
-    (streaming/alerts.py::price_alert_stream_tws) carries the same
-    semantics but its wire protocol needs google.protobuf, absent in
-    this container — tws_available() gates it."""
+    sequential reference computation. The state runs on
+    applyInPandasWithState (streaming/alerts.py::price_alert_stream)."""
     from fineventstream_spark.sources.datasource import QuoteDataSource
     from fineventstream_spark.streaming.alerts import price_alert_stream
 
